@@ -7,23 +7,27 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass PPDB release-line splitter — the engine's reference custom
-  * Catalyst `Expression` (SURVEY.md §4 named it the only candidate native
-  * expression, to be adopted "only if bench demands it").
+/** One-pass PPDB release-line splitter: the field split of the projection
+  * parser ([[graft.ppdb.Ppdb.parse]]).
   *
-  * Measured against the built-in regex `split` on 240k lines: first-run
-  * 0.61 s vs 1.15 s, warm 0.39 s vs 0.27 s — the warm JVM regex on a
-  * literal pattern is already efficient, so the hot path keeps the
-  * built-in and this class stays as the documented extension surface
-  * ("measure, don't guess").
+  * One forward byte scan for ` ||| ` over the line's UTF-8 bytes; each field
+  * is a [[UTF8String.fromAddress]] view into the line, so nothing is
+  * decoded to `java.lang.String` or copied. The delimiter is ASCII and
+  * UTF-8 lead/continuation bytes are ≥ 0x80, so a match can never start or
+  * end inside a multibyte code point. Fields equal the regex
+  * `split(value, " \\|\\|\\| ")` (limit -1: leading, trailing and empty
+  * fields kept; matches taken left to right without overlap) on every
+  * input; the one difference is that invalid UTF-8 bytes pass through
+  * as-is, where the regex split's `String` round-trip turns them into
+  * U+FFFD.
   *
-  * Demonstrates the full native-expression contract: analysis-time type
-  * check, null-safe interpreted eval, AND `doGenCode` so the expression
-  * stays inside whole-stage codegen (a Scala UDF here would break the
-  * codegen stage and hide the projection from the optimizer).
+  * Replacing the regex split and the `str_to_map` score lookup with this
+  * kernel and [[PpdbScoreToken]] took the `ppdb_ingest` benchmark's median
+  * `cpu_s` from 5.21 s to 3.36 s (−36%, 0.64×), faster in 10 of 10
+  * interleaved A/B pairs on a 4-core host (CHANGES.md has the pair table).
   *
-  * Registered as SQL function `ppdb_split` via [[GraftExtensions]]
-  * (`spark.sql.extensions`) or imperatively via [[GraftExtensions.register]].
+  * Registered as SQL function `ppdb_split` via [[GraftExtensions]]; the
+  * parser builds it as a Column directly, so it needs no registration.
   */
 case class PpdbSplitLine(child: Expression) extends UnaryExpression {
 
@@ -49,22 +53,103 @@ case class PpdbSplitLine(child: Expression) extends UnaryExpression {
 
 object PpdbSplitLine {
 
-  private val Delim = UTF8String.fromString(" ||| ")
-
-  /** Single forward scan over the line; shared by interpreted eval and the
-    * generated code (static call keeps the codegen'd method tiny).
+  /** Fields of `line` split on ` ||| `, as views into its bytes. Shared by
+    * interpreted eval and the generated code (a static call keeps the
+    * codegen'd method tiny).
     */
   def split(line: UTF8String): ArrayData = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
-    val n = line.numChars()
+    val base = line.getBaseObject
+    val off = line.getBaseOffset
+    val n = line.numBytes()
+    var parts = new Array[Any](8)
+    var k = 0
     var start = 0
-    var idx = line.indexOf(Delim, 0)
-    while (idx >= 0) {
-      parts += line.substring(start, idx)
-      start = idx + 5
-      idx = line.indexOf(Delim, start)
+    var i = 0
+    while (i <= n - 5) {
+      if (line.getByte(i) == ' ' && line.getByte(i + 1) == '|' &&
+          line.getByte(i + 2) == '|' && line.getByte(i + 3) == '|' &&
+          line.getByte(i + 4) == ' ') {
+        if (k == parts.length) {
+          val grown = new Array[Any](k * 2)
+          System.arraycopy(parts, 0, grown, 0, k)
+          parts = grown
+        }
+        parts(k) = UTF8String.fromAddress(base, off + start, i - start)
+        k += 1
+        i += 5
+        start = i
+      } else i += 1
     }
-    parts += line.substring(start, n)
-    new GenericArrayData(parts.toArray[Any])
+    val out = new Array[Any](k + 1)
+    System.arraycopy(parts, 0, out, 0, k)
+    out(k) = UTF8String.fromAddress(base, off + start, n - start)
+    new GenericArrayData(out)
+  }
+}
+
+/** `ppdb_score_token(features)`: the value text of the PPDB 2.0 ranking
+  * score in a raw features field, read straight off the bytes.
+  *
+  * Returns the value of the LAST `PPDB2.0Score=` token that starts the
+  * field or follows a space, up to the next space or the end; NULL when
+  * there is none or the input is NULL. A token `PPDB2.0Score=` with nothing
+  * after it yields the empty string. The caller casts the text to double,
+  * so number parsing stays Catalyst's (ANSI or legacy).
+  *
+  * This is `element_at(str_to_map(features, " ", "="), "PPDB2.0Score")` on
+  * every features field without a repeated key, without building the map
+  * (a regex split and a `String` round-trip per token). Where the map
+  * throws `DUPLICATED_MAP_KEY`, the last score token wins, the rule the
+  * `format("ppdb")` reader applies (`PpdbDataSource.scoreToken`).
+  */
+case class PpdbScoreToken(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects a string column, got ${child.dataType.catalogString}")
+
+  override def dataType: DataType = StringType
+  override def prettyName: String = "ppdb_score_token"
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(input: Any): Any =
+    PpdbScoreToken.token(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.plans.PpdbScoreToken.token($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): PpdbScoreToken =
+    copy(child = newChild)
+}
+
+object PpdbScoreToken {
+
+  private val Key = "PPDB2.0Score=".getBytes("UTF-8")
+
+  /** Backward scan: the first boundary-aligned key met from the end is the
+    * last one in the field. The value is a view into `feat`'s bytes.
+    */
+  def token(feat: UTF8String): UTF8String = {
+    val n = feat.numBytes()
+    var i = n - Key.length
+    while (i >= 0) {
+      if ((i == 0 || feat.getByte(i - 1) == ' ') && keyAt(feat, i)) {
+        val s = i + Key.length
+        var e = s
+        while (e < n && feat.getByte(e) != ' ') e += 1
+        return UTF8String.fromAddress(feat.getBaseObject, feat.getBaseOffset + s, e - s)
+      }
+      i -= 1
+    }
+    null
+  }
+
+  private def keyAt(feat: UTF8String, i: Int): Boolean = {
+    var j = 0
+    while (j < Key.length && feat.getByte(i + j) == Key(j)) j += 1
+    j == Key.length
   }
 }

@@ -66,9 +66,12 @@ object TextExprs {
     * separator skipping for null elements (concat_ws drops nulls without
     * doubling the separator), same seed-42 xxhash64 over the joined UTF-8
     * bytes; a NULL signature array yields xxhash64("") per band exactly as
-    * `concat_ws` over a null array argument does.
+    * `concat_ws` over a null array argument does. Positions at or beyond the
+    * signature's length are absent, as `slice` leaves them out, so a short
+    * signature hashes its missing bands as xxhash64("").
     */
   def bandHashes(sig: ArrayData, bands: Int, r: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
     val out = new Array[Long](bands)
     val sb = new java.lang.StringBuilder(64)
     var j = 0
@@ -78,7 +81,7 @@ object TextExprs {
       var i = 0
       while (i < r) {
         val idx = j * r + i
-        if (sig != null && !sig.isNullAt(idx)) {
+        if (idx < n && !sig.isNullAt(idx)) {
           if (!first) sb.append(',')
           sb.append(sig.getLong(idx))
           first = false

@@ -1,7 +1,9 @@
 package graft.ppdb
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.plans.{PpdbScoreToken, PpdbSplitLine}
 
 /** Spark-native parser for the public PPDB release format — the reference's
   * (mauryquijada/ppdb-parser) core capability, re-expressed as a declarative
@@ -36,30 +38,46 @@ object Ppdb {
   /** Raw 6-field parse plus the PPDB2.0Score ranking key (ACL 2015) widened
     * to a double column — the one feature the reference ranks lookups by.
     *
-    * The split stays on the built-in regex `split`: SURVEY.md §4 flagged a
-    * custom one-pass splitter as the only candidate native expression "if
-    * bench demands it" — it was built ([[graft.plans.PpdbSplitLine]],
-    * `ppdb_split` via GraftExtensions), measured on 240k lines, and the
-    * warm JVM regex on a literal pattern was ~equal-or-faster, so the
-    * built-in wins on simplicity. The custom expression remains as the
-    * engine's documented Catalyst extension surface.
+    * Two byte-level codegen kernels do the per-line work:
+    * [[graft.plans.PpdbSplitLine]] splits the line on ` ||| ` in one forward
+    * scan, and [[graft.plans.PpdbScoreToken]] reads the score token's text
+    * out of the features field without building the feature map. The
+    * built-in regex `split` plus `element_at(str_to_map(...))` they replace
+    * ran a regex split and a `String` round-trip for the line and again for
+    * every `k=v` token. On the `ppdb_ingest` benchmark the kernels took
+    * the median `cpu_s` from 5.21 s to 3.36 s (0.64×, 10 of 10 interleaved
+    * A/B pairs on a 4-core host; CHANGES.md).
+    * The score text is cast with Catalyst's `cast("double")`, so ANSI and
+    * legacy number parsing are unchanged.
+    *
+    * A features field that repeats the score key takes its LAST score
+    * token, as `format("ppdb")` does. [[rules]] and [[withFeatureColumns]]
+    * build the full map and fail with `DUPLICATED_MAP_KEY` on a repeated
+    * key.
     */
-  def parse(spark: SparkSession, path: String = FixturePath): DataFrame = {
-    val f = split(col("value"), " \\|\\|\\| ")
-    spark.read
-      .text(path)
-      .select(
-        f.getItem(0).as("lhs"),
-        f.getItem(1).as("phrase"),
-        f.getItem(2).as("paraphrase"),
-        f.getItem(3).as("features_raw"),
-        f.getItem(4).as("alignment"),
-        f.getItem(5).as("entailment"))
-      .withColumn(
-        "ppdb2score",
-        element_at(str_to_map(col("features_raw"), lit(" "), lit("=")), "PPDB2.0Score")
-          .cast("double"))
+  def parse(spark: SparkSession, path: String = FixturePath): DataFrame =
+    spark.read.text(path).select(ruleColumns(Fields: _*): _*)
+
+  /** The six ` ||| `-delimited fields of a PPDB rule, in line order. */
+  private val Fields =
+    Seq("lhs", "phrase", "paraphrase", "features_raw", "alignment", "entailment")
+
+  /** The named fields of the text column `value`, then `ppdb2score`. */
+  private def ruleColumns(names: String*): Seq[Column] = {
+    val f = splitLine(col("value"))
+    names.map(n => f.getItem(Fields.indexOf(n)).as(n)) :+
+      scoreToken(f.getItem(Fields.indexOf("features_raw"))).cast("double").as("ppdb2score")
   }
+
+  /** [[graft.plans.PpdbSplitLine]] as a Column: the ` ||| ` fields of a line. */
+  def splitLine(line: Column): Column =
+    GraftSqlShim.column(PpdbSplitLine(GraftSqlShim.expression(line)))
+
+  /** [[graft.plans.PpdbScoreToken]] as a Column: the text of the last
+    * `PPDB2.0Score=` token of a features field, or null.
+    */
+  def scoreToken(features: Column): Column =
+    GraftSqlShim.column(PpdbScoreToken(GraftSqlShim.expression(features)))
 
   /** Fully-typed surface: features as Map[String,Double], alignment as
     * (src,tgt) int pairs. `Dataset[PpdbRule]` for callers that want
@@ -135,23 +153,13 @@ object Ppdb {
     * engine's per-file lineage surface, same mechanism as `scan_metadata`).
     * One glob scan; every pack parses in the same job, one task per .gz.
     */
-  def parseWithPack(spark: SparkSession, dir: String = ReleaseDir): DataFrame = {
-    val f = split(col("value"), " \\|\\|\\| ")
+  def parseWithPack(spark: SparkSession, dir: String = ReleaseDir): DataFrame =
     spark.read
       .text(s"$dir/*.txt.gz")
       .select(
         regexp_extract(col("_metadata.file_name"), "ppdb-2\\.0-([a-z]+)\\.txt\\.gz", 1)
-          .as("pack"),
-        f.getItem(0).as("lhs"),
-        f.getItem(1).as("phrase"),
-        f.getItem(2).as("paraphrase"),
-        f.getItem(3).as("features_raw"),
-        f.getItem(5).as("entailment"))
-      .withColumn(
-        "ppdb2score",
-        element_at(str_to_map(col("features_raw"), lit(" "), lit("=")), "PPDB2.0Score")
-          .cast("double"))
-  }
+          .as("pack") +:
+          ruleColumns("lhs", "phrase", "paraphrase", "features_raw", "entailment"): _*)
 
   /** DuckDB twin of [[parseWithPack]]: `filename=true` is read_csv's
     * per-file lineage column, mirroring Spark's `_metadata.file_name`.

@@ -118,20 +118,20 @@ object PpdbDataSource {
     out.toArray
   }
 
-  /** Parse JUST the ranking score out of the raw features field: the LAST
-    * boundary-aligned `PPDB2.0Score=` token, parsed to the next space. One
-    * scan + one parseDouble — the full feature tokenization (split +
-    * per-token Double.valueOf + UTF8String) never runs for lines a pushed
-    * threshold rejects or an aggregate-only scan counts.
+  /** The value text of the LAST boundary-aligned `PPDB2.0Score=` token in
+    * the raw features field, up to the next space; null if there is none.
+    * One scan, no tokenization. [[graft.plans.PpdbScoreToken]] applies the
+    * same rule to `UTF8String` bytes in the projection parser; this reader
+    * holds `String`s, and encoding each field to run the byte kernel took
+    * twice as long (~50 vs ~25 ms per 200k benchmark lines, 4-core host). The
+    * two are checked against each other on one table in
+    * `PpdbSplitLineSpec`.
     *
-    * LAST occurrence, not first (round 13, ADVICE r12): the full tokenizer
-    * is last-wins on duplicate keys, and a pushed predicate or aggregate
-    * must agree with the column the same line would materialize. NaN ⇔ the
-    * token is absent or unparseable — the tokenizer's null (the one
-    * residual divergence is a literal `PPDB2.0Score=NaN`, which the
-    * tokenizer keeps as a non-null NaN; no release writes NaN scores).
+    * LAST occurrence, not first (round 13, ADVICE r12): a duplicate key is
+    * last-wins, and a pushed predicate or aggregate must agree with the
+    * column the same line would materialize.
     */
-  private[ppdb] def scanScore(feat: String): Double = {
+  private[ppdb] def scoreToken(feat: String): String = {
     val key = "PPDB2.0Score="
     var best = -1
     var i = feat.indexOf(key)
@@ -139,12 +139,32 @@ object PpdbDataSource {
       if (i == 0 || feat.charAt(i - 1) == ' ') best = i
       i = feat.indexOf(key, i + 1)
     }
-    if (best < 0) return Double.NaN
+    if (best < 0) return null
     val start = best + key.length
     var end = feat.indexOf(' ', start)
     if (end < 0) end = feat.length
-    try feat.substring(start, end).toDouble
-    catch { case _: NumberFormatException => Double.NaN }
+    feat.substring(start, end)
+  }
+
+  /** The score column's value: `Double.valueOf` of [[scoreToken]], as the
+    * features map parses its values; null when the token is absent or
+    * unparseable (a literal `NaN` stays NaN).
+    */
+  private[ppdb] def scoreValue(feat: String): java.lang.Double = {
+    val t = scoreToken(feat)
+    if (t == null) null
+    else try java.lang.Double.valueOf(t)
+    catch { case _: NumberFormatException => null }
+  }
+
+  /** [[scoreValue]] unboxed, for pushed filters and aggregates: NaN ⇔ the
+    * token is absent or unparseable, i.e. the column's null (the one
+    * residual divergence is a literal `PPDB2.0Score=NaN`, which the column
+    * keeps as a non-null NaN; no release writes NaN scores).
+    */
+  private[ppdb] def scanScore(feat: String): Double = {
+    val v = scoreValue(feat)
+    if (v == null) Double.NaN else v.doubleValue
   }
 }
 
@@ -393,8 +413,8 @@ class PpdbPartitionReader(
 
   // resolve required ordinals + pushed-filter ordinals once per partition
   private val fieldNames = required.fields.map(_.name)
-  private val needsFeatures =
-    fieldNames.contains("features") || fieldNames.contains("ppdb2score")
+  private val needsFeatures = fieldNames.contains("features")
+  private val needsScore = fieldNames.contains("ppdb2score")
   private val lineFilters: Array[(Int, String)] = pushed.collect {
     case EqualTo(a, v: String) => PpdbScanBuilder.Pushable(a) -> v
   }
@@ -444,10 +464,12 @@ class PpdbPartitionReader(
     val f = fields
     def field(i: Int): String = if (i < f.length) f(i) else null
 
-    // features tokenize once, shared by the map column and the score
+    // the score comes from the single-token scan; the full tokenization
+    // runs only when the features map itself is required
+    val score: Any =
+      if (needsScore && field(3) != null) PpdbDataSource.scoreValue(field(3)) else null
     var featKeys: Array[UTF8String] = null
     var featVals: Array[Any] = null
-    var score: Any = null
     if (needsFeatures && field(3) != null) {
       val toks = field(3).split(' ')
       val ks = new ArrayBuffer[UTF8String](toks.length)
@@ -462,7 +484,6 @@ class PpdbPartitionReader(
             catch { case _: NumberFormatException => null }
           ks += UTF8String.fromString(k)
           vs += v
-          if (k == "PPDB2.0Score") score = v
         }
         i += 1
       }

@@ -7,7 +7,9 @@ import org.scalacheck.Gen
   * against the slice/cast/concat_ws/xxhash64 composition it replaces in
   * MinHashLsh's banding stage: same Long.toString digits, same concat_ws
   * null-skipping (no doubled separator), same seed-42 xxhash64 over the
-  * joined bytes, NULL signature → xxhash64("") per band.
+  * joined bytes, NULL signature → xxhash64("") per band, positions past a
+  * short signature's end absent as `slice` leaves them. Every case runs
+  * compiled and interpreted.
   */
 class BandHashParitySpec extends SparkSpec {
 
@@ -25,14 +27,17 @@ class BandHashParitySpec extends SparkSpec {
       sigs.zipWithIndex.map { case (s, i) => (i.toLong, s.map(Option(_).map(_.longValue))) })
       .toDF("id", "sig")
       .select(col("id"), col("sig").cast("array<bigint>").as("sig"))
-    val rows = df
-      .select(col("id"),
-        kernel(col("sig")).as("k"),
-        graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
-      .collect()
-    rows.foreach { row =>
-      assert(row.getSeq[Long](1) == row.getSeq[Long](2),
-        s"kernel=${row.getSeq[Long](1)} expr=${row.getSeq[Long](2)} sig=${sigs(row.getLong(0).toInt)}")
+    forEachCodegenMode { mode =>
+      val rows = df
+        .select(col("id"),
+          kernel(col("sig")).as("k"),
+          graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
+        .collect()
+      rows.foreach { row =>
+        assert(row.getSeq[Long](1) == row.getSeq[Long](2),
+          s"$mode: kernel=${row.getSeq[Long](1)} expr=${row.getSeq[Long](2)} " +
+            s"sig=${sigs(row.getLong(0).toInt)}")
+      }
     }
   }
 
@@ -52,6 +57,30 @@ class BandHashParitySpec extends SparkSpec {
       (0 until 27).map(i => if (i % 3 == 0) null else L(i.toLong)),
       Seq.fill(27)(null: java.lang.Long),
       (0 until 27).map(i => if (i < 3) null else L(i.toLong))))
+  }
+
+  test("short signatures hash their missing positions as absent, like slice") {
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    assertParity(Seq(
+      Seq.empty,
+      Seq(L(5L)),
+      (1L to 8L).map(L), // ends inside band 3
+      (1L to 26L).map(L), // one short of the last band
+      (0 until 10).map(i => if (i % 4 == 0) null else L(i.toLong)),
+      Seq(null, null, L(7L), null)))
+  }
+
+  test("a NULL signature hashes every band as the empty string") {
+    import spark.implicits._
+    val df = Seq[Option[Seq[Long]]](None, Some(Seq(1L, 2L, 3L))).toDF("sig")
+    forEachCodegenMode { mode =>
+      val rows = df
+        .select(kernel(col("sig")).as("k"),
+          graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
+        .collect()
+      rows.foreach(row => assert(row.getSeq[Long](0) == row.getSeq[Long](1), mode))
+      assert(rows(0).getSeq[Long](0).distinct.size == 1, mode)
+    }
   }
 
   test("generated signatures") {

@@ -218,6 +218,39 @@ class PpdbV2Spec extends SparkSpec {
     assert(agg === 5.0)
   }
 
+  test("the score column matches the features map, with or without the map") {
+    // the score comes from the single token scan whether or not `features`
+    // is read; it must parse as the map's tokenizer does: last token wins,
+    // a literal NaN stays NaN, an unparseable value is null
+    val dir = java.nio.file.Files.createTempDirectory("ppdbv2score").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/score.txt"),
+      ("[X] ||| a ||| b ||| PPDB2.0Score=9.0 p=1 PPDB2.0Score=1.5 ||| 0-0 ||| Equivalence\n" +
+        "[X] ||| c ||| d ||| PPDB2.0Score=NaN ||| 0-0 ||| Equivalence\n" +
+        "[X] ||| e ||| f ||| PPDB2.0Score=abc p=2 ||| 0-0 ||| Equivalence\n" +
+        "[X] ||| g ||| h ||| p=3 ||| 0-0 ||| Equivalence\n" +
+        "[X] ||| i ||| j ||| p=4 PPDB2.0Score=-2e-1 ||| 0-0 ||| Equivalence\n")
+        .getBytes("UTF-8"))
+    def scores(cols: String*): Map[String, Option[Double]] =
+      spark.read.format("ppdb").load(s"$dir/score.txt").select(cols.map(col): _*).collect()
+        .map(r => r.getString(0) -> Option(r.get(cols.length - 1)).map(_.asInstanceOf[Double]))
+        .toMap
+    val pruned = scores("phrase", "ppdb2score")
+    val full = scores("phrase", "features", "ppdb2score")
+    assert(pruned("a") === Some(1.5) && pruned("e").isEmpty && pruned("g").isEmpty)
+    assert(pruned("c").exists(_.isNaN) && full("c").exists(_.isNaN))
+    assert(pruned.removed("c") === full.removed("c"))
+    // and on the multi-file fixture, row for row
+    val df = spark.read.format("ppdb").load(s"${Ppdb.MultiFixtureDir}/*.txt.gz")
+    val a = df.select("phrase", "paraphrase", "ppdb2score").collect().toSeq
+    val withMap = df.select("phrase", "paraphrase", "features", "ppdb2score").collect().toSeq
+    val b = withMap.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(3)))
+    assert(a.nonEmpty && a === b)
+    withMap.foreach { r =>
+      assert(Option(r.getMap[String, Any](2)).flatMap(_.get("PPDB2.0Score")) ===
+        Option(r.get(3)), r)
+    }
+  }
+
   test("malformed lines null-fill missing fields instead of erroring") {
     val dir = java.nio.file.Files.createTempDirectory("ppdbv2").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.txt"),
