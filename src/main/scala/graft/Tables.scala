@@ -69,15 +69,15 @@ object Tables {
 
   /** `size(split(c, " "))` without materializing the token array — the
     * round-19 kernel for every site that splits only to COUNT (the split
-    * always yields #spaces + 1 elements, for any input). INT like `size()`;
-    * SpaceTokenCountSpec pins the identity.
+    * always yields #spaces + 1 elements, for any input). INT and NULL rule
+    * like `size()`; SpaceTokenCountSpec pins the identity.
     */
   def spaceTokenCount(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftSqlShim.column(
-      graft.plans.SpaceTokenCount(org.apache.spark.sql.GraftSqlShim.expression(c)))
+      new graft.plans.SpaceTokenCount(org.apache.spark.sql.GraftSqlShim.expression(c)))
 
   /** The builtin composition [[normText]] replaced — kept as the parity
-    * oracle for NormTextSpec and the AbBench `_builtin_norm` twins.
+    * oracle for NormTextSpec.
     */
   def normTextBuiltin(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(trim(lower(c)), "\\s+", " ")

@@ -75,9 +75,9 @@ object AnnDedup {
     *
     * The bucketed index feeds THREE consumers (the skew-guard count and
     * both self-join sides), so each re-runs the plane kernel — deliberate:
-    * the checkpointed alternative (`reuseIndex = true`, kept for AbBench)
-    * measured SLOWER at both test scales (1.37× at sf0.1, 1.50× at the
-    * 10× proxy, interleaved ×5 — BASELINE round 9): materializing the
+    * a checkpointed index measured SLOWER at both test scales (1.37× at
+    * sf0.1, 1.50× at the 10× proxy, interleaved ×5 — BASELINE round 9):
+    * materializing the
     * nTables-replicated index serializes the fat vec column nTables times,
     * which costs more than three passes of the codegen'd kernel. Same
     * recompute-beats-checkpoint economics the repo measured for the
@@ -89,17 +89,15 @@ object AnnDedup {
       threshold: Double,
       dim: Int,
       nTables: Int,
-      maxBucketSize: Long,
-      reuseIndex: Boolean = false): DataFrame = {
+      maxBucketSize: Long): DataFrame = {
     val s = emb.sparkSession
     val npl = adaptivePlanes(emb.count())
     // fan out before the CPU-bound bucket kernel — a one-file scan arrives
     // as a single partition
-    val raw = emb
+    val bucketed = emb
       .repartition(s.sparkContext.defaultParallelism, col("id"))
       .select(col("id"), col("vec"),
         explode(AnnLsh.tableBuckets(col("vec"), npl, dim, nTables)).as("bucket"))
-    val bucketed = if (reuseIndex) raw.localCheckpoint() else raw
     // skew guard: drop over-occupied buckets (count frame is ≤ nTables·2^npl
     // rows — far smaller than the data; no broadcast hint so the planner
     // stays free at any bucket count)

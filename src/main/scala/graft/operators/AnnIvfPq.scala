@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * cell-independent, which is what lets this operator reuse [[AnnPq]]'s
   * fit/encode/LUT machinery verbatim (and lets a deployment re-fit the
   * coarse level without re-encoding the corpus). The recall cost is
-  * covered by the family's √n re-rank list, gate-pinned like the parents.
+  * covered by the family's √n re-rank list, gate-pinned like the parents;
+  * a residual-coded form measured at equal code budget is recorded in
+  * BASELINE.md (retired A/B twins).
   *
   * Everything bounded/deterministic by inheritance: both fits are seeded
   * executor-side passes over hash-ordered samples; assignment + encode is
@@ -69,12 +71,6 @@ object AnnIvfPq {
     }
   }
 
-  /** Clamp-injectable form so the two-level DISPATCH (the l1 × k2 split
-    * wiring above, not just topK2Level's internals) executes in an
-    * always-on sf0.01 test without a multi-million-vector fixture
-    * (ADVICE r17): a forced tiny maxLists sends the small corpus down the
-    * exact branch the 16M rung takes in production.
-    */
   /** Sub-level probe fraction for the two-level IVF-PQ dispatch (round 18,
     * VERDICT r17 item 6). The 16M rung read recall@5 0.940 at √½-per-level
     * while both parents read 0.980; the equal-budget A/B isolated the cause
@@ -91,6 +87,12 @@ object AnnIvfPq {
     */
   private[graft] val SubProbeFrac2L = 0.85
 
+  /** Clamp-injectable form so the two-level DISPATCH (the l1 × k2 split
+    * wiring above, not just topK2Level's internals) executes in an
+    * always-on sf0.01 test without a multi-million-vector fixture
+    * (ADVICE r17): a forced tiny maxLists sends the small corpus down the
+    * exact branch the 16M rung takes in production.
+    */
   private[graft] def topKAdaptive(
       emb: DataFrame, queries: DataFrame, k: Int, maxLists: Int): DataFrame = {
     val p = paramsFor(emb.count(), maxLists)
@@ -99,8 +101,7 @@ object AnnIvfPq {
         m = p.m, kSub = p.kSub, rerank = p.rerank)
     else
       topK2Level(emb, queries, k, l1 = p.l1, k2 = p.k2,
-        m = p.m, kSub = p.kSub, rerank = p.rerank,
-        subProbeFrac = SubProbeFrac2L)
+        m = p.m, kSub = p.kSub, rerank = p.rerank)
   }
 
   /** Top-k approximate neighbors through the pruned compressed scan.
@@ -175,124 +176,16 @@ object AnnIvfPq {
     AnnPq.exactRerank(cands, emb, queries, k)
   }
 
-  /** The `by_residual=true` A/B twin of [[topK]] (VERDICT r16 item 3): PQ
-    * codebooks fit on the CELL RESIDUALS u − c(u) instead of the unit
-    * vectors themselves — the FAISS IndexIVFPQ default, which spends the
-    * same code budget on the (smaller-magnitude) within-cell displacement.
-    * ADC decomposes exactly: score = q·u ≈ q·c + q·decode(codes), so the
-    * scan adds one per-(query, probed-cell) scalar — computed driver-side
-    * and carried on the broadcast probe list — to the same native
-    * [[graft.plans.AdcScore]] kernel over residual LUTs. NOT on the
-    * declared surface: it exists to turn the scaladoc argument for the
-    * direct flavor (cell-independent codebooks, re-fittable coarse level)
-    * into a measured recall/latency pair at equal code budget
-    * (Round17Spec + BASELINE.md record the outcome).
-    */
-  private[graft] def topKResidual(
-      emb0: DataFrame,
-      queries0: DataFrame,
-      k: Int = 5,
-      nLists: Int = 16,
-      nProbe: Int = 8,
-      m: Int = 8,
-      kSub: Int = 32,
-      rerank: Int = 128): DataFrame = {
-
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnIvfPq: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
-    val spark = emb.sparkSession
-
-    val capC = AnnIvf.sampleCapFor(nLists)
-    val capB = math.max(4096, 16 * kSub)
-    val unitSample = unitSampleOf(emb, math.max(capC, capB))
-
-    val centers = AnnIvf.fitCentroids(unitSample, nLists, iters = 5, sampleCap = capC)
-    if (centers.isEmpty) {
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
-    val centersB = spark.sparkContext.broadcast(centers)
-
-    // residual sample: same hash-prefix rows, displaced by their cell
-    // centroid — the codebooks see what they will encode
-    val residUdf = udf((v: Seq[Double]) => {
-      val u = v.toArray // unitSample rows are already normalized
-      residualOf(u, centersB.value)
-    })
-    val residSample = unitSample.select(col("vec_id"), residUdf(col("vec")).as("vec"))
-    val books = AnnPq.fitCodebooks(residSample, m, kSub, iters = 5,
-      sampleCap = capB, normalizeInput = false)
-    if (books.isEmpty) {
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
-    val booksB = spark.sparkContext.broadcast(books)
-
-    // one map pass: cell assignment + residual encode
-    val assignEncodeUdf = udf((v: Seq[Double]) => {
-      val u = AnnPq.normalize(v.toArray)
-      val c1 = AnnIvf.nearestIdx(centersB.value, u)
-      val resid = new Array[Double](u.length)
-      val cv = centersB.value(c1)
-      var i = 0
-      while (i < u.length) { resid(i) = u(i) - cv(i); i += 1 }
-      (c1, AnnPq.encodePoint(booksB.value, resid))
-    })
-    val coded = emb
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), assignEncodeUdf(col("vec")).as("ae"))
-      .select(col("vec_id"), col("ae._1").as("list_id"), col("ae._2").as("codes"))
-
-    // probe carries the per-(query, cell) q·c term the ADC decomposition
-    // needs — q × nProbe doubles, driver-side, on the broadcast side
-    val nProbe0 = math.min(nProbe, centers.length)
-    val probeUdf = udf((qv: Seq[Double]) => {
-      val uq = AnnPq.normalize(qv.toArray)
-      AnnIvf.rankedIdx(centersB.value, uq).take(nProbe0).map { c =>
-        val cv = centersB.value(c)
-        var s = 0.0; var i = 0
-        while (i < uq.length) { s += uq(i) * cv(i); i += 1 }
-        (c, s)
-      }
-    })
-    val probed = queries
-      .withColumn("p", explode(probeUdf(col("qvec"))))
-      .select(col("qid"), col("p._1").as("probe"), col("p._2").as("qdotc"))
-
-    val scored = coded
-      .join(broadcast(probed),
-        col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (AnnPq.adcScorer(queries, books)(col("codes"), col("qid")) + col("qdotc")).as("score"))
-    val cands = AnnPq.topRerank(scored, rerank)
-    AnnPq.exactRerank(cands, emb, queries, k)
-  }
-
-  /** u − nearest-center(u): the point the residual codebooks are fit on
-    * and encode.
-    */
-  private def residualOf(u: Array[Double], centers: Array[Array[Double]]): Array[Double] = {
-    val cv = centers(AnnIvf.nearestIdx(centers, u))
-    val out = new Array[Double](u.length)
-    var i = 0
-    while (i < u.length) { out(i) = u(i) - cv(i); i += 1 }
-    out
-  }
-
   /** IVF-PQ with the TWO-LEVEL coarse quantizer (the [[AnnIvf.topK2Level]]
     * hierarchy composed with the PQ compressed-domain scan): an l1-cell
     * coarse level, a k2-cell sub-quantizer inside each cell — l1 × k2
     * total lists with every fit bounded — and the probed cells' rows read
     * as m code bytes via the native ADC kernel. Probing mirrors the
-    * hierarchy at √½ per level so the probed fraction stays ≈ ½ while the
+    * hierarchy — √½ of the l1 cells, [[SubProbeFrac2L]] of each probed
+    * cell's sub-cells — so the probed fraction stays ≈ 0.6 while the
     * CELL COUNT keeps tracking √n past the one-task clamp: at n = 4.2e9
     * (the 100 TB embedding table) the flat clamp probes ~½ the corpus per
-    * query, this path probes ~½ of 65536-way-partitioned space with the
+    * query, this path probes ~0.6 of 65536-way-partitioned space with the
     * same recall bar. Same spherical discipline as [[topK]]: both coarse
     * levels and the codebooks fit on unit-normalized vectors, assignment +
     * encode is ONE map pass, the exact √n re-rank reports.
@@ -305,12 +198,7 @@ object AnnIvfPq {
       k2: Int = 32,
       m: Int = 8,
       kSub: Int = 32,
-      rerank: Int = 128,
-      // per-level probe fractions (default √½ each ⇒ probed fraction ≈ ½,
-      // the family constant). Parameterized for the round-18 16M recall
-      // A/B: wider sub-probing vs a wider exact re-rank at equal budget.
-      l1ProbeFrac: Double = math.sqrt(0.5),
-      subProbeFrac: Double = math.sqrt(0.5)): DataFrame = {
+      rerank: Int = 128): DataFrame = {
 
     def requireVec(vec: Column, side: String): Column =
       when(vec.isNotNull, vec).otherwise(raise_error(lit(
@@ -359,14 +247,14 @@ object AnnIvfPq {
           .as("ae"))
       .select(col("vec_id"), col("ae.list_id").as("list_id"), col("ae.codes").as("codes"))
 
-    // hierarchical probe at √½ per level (probed fraction ≈ ½, the family
-    // constant), on the unit query
-    val l1Probe = math.max(1, math.ceil(centers.length * l1ProbeFrac).toInt)
+    // hierarchical probe, on the unit query: √½ of the l1 cells, then
+    // SubProbeFrac2L of each probed cell's sub-cells
+    val l1Probe = math.max(1, math.ceil(centers.length * math.sqrt(0.5)).toInt)
     val probeUdf = udf((qv: Seq[Double]) => {
       val u = AnnPq.normalize(qv.toArray)
       AnnIvf.rankedIdx(centersB.value, u).take(l1Probe).flatMap { c1 =>
         val cell = subsB.value(c1)
-        val subProbe = math.max(1, math.ceil(cell.length * subProbeFrac).toInt)
+        val subProbe = math.max(1, math.ceil(cell.length * SubProbeFrac2L).toInt)
         AnnIvf.rankedIdx(cell, u).take(subProbe).map(s2 => c1.toLong * k2 + s2)
       }
     })

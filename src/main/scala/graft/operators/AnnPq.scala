@@ -134,15 +134,7 @@ object AnnPq {
     * literals into one codegen tree that janino chokes on.
     */
   private[graft] def encoder(books: Array[Array[Array[Double]]]) =
-    udf((v: Seq[Double]) => encodePoint(books, normalize(v.toArray)))
-
-  /** Nearest-subspace-centroid codes of an ALREADY-prepared point (unit
-    * vector for the direct flavor, cell residual for `by_residual`) —
-    * the shared inner encode of [[encoder]] and [[AnnIvfPq]]'s fused
-    * assign+encode pass.
-    */
-  private[graft] def encodePoint(books: Array[Array[Array[Double]]], u: Array[Double]): Array[Int] =
-    graft.plans.VecExprs.pqEncode(books, u) // canonical copy (round 18)
+    udf((v: Seq[Double]) => graft.plans.VecExprs.pqEncode(books, normalize(v.toArray)))
 
   /** ADC scoring column: per-query lookup tables of subspace dot products,
     * built driver-side from the (tiny) query frame — only q·m·kSub doubles
@@ -152,8 +144,8 @@ object AnnPq {
     * playbook): the per-row kernel of the whole PQ family — m lookups +
     * adds over EVERY corpus row — so the closure-UDF form it replaces
     * blocked whole-stage codegen exactly where the engine spends its time
-    * at q·n scale. Scores are bit-identical to the UDF twin below (same
-    * doubles, same ascending-mi fold — AnnPqParitySpec pins it).
+    * at q·n scale. Scores are bit-identical to that UDF form (same
+    * doubles, same ascending-mi fold — Round17Spec pins it).
     */
   private[graft] def adcScorer(
       queries: DataFrame, books: Array[Array[Array[Double]]]): (Column, Column) => Column = {
@@ -166,29 +158,12 @@ object AnnPq {
         luts, kSub))
   }
 
-  /** The retired closure-UDF scorer, kept ONLY as the parity twin the spec
-    * compares the native kernel against (and the A/B baseline) — not on any
-    * query path.
-    */
-  private[graft] def adcScorerUdf(
-      queries: DataFrame, books: Array[Array[Array[Double]]]) = {
-    val kSub = books(0).length
-    val luts: Map[Long, Array[Double]] = lutSeq(queries, books)
-      .map { case (qid, flat) => qid -> flat.toArray }.toMap
-    udf((codes: Seq[Int], qid: Long) => {
-      val flat = luts(qid)
-      var s = 0.0; var mi = 0
-      while (mi < codes.length) { s += flat(mi * kSub + codes(mi)); mi += 1 }
-      s
-    })
-  }
-
   /** Flattened per-query LUTs: (qid, lut) where lut(mi·kSub + c) is the dot
     * product of the query's mi-th unit-normalized subvector with codebook
     * centroid c of subspace mi. One layout shared by the native kernel and
-    * the UDF twin so parity is structural.
+    * the closure-UDF parity reference in the specs, so parity is structural.
     */
-  private def lutSeq(
+  private[graft] def lutSeq(
       queries: DataFrame, books: Array[Array[Array[Double]]]): Seq[(Long, Seq[Double])] = {
     val kSub = books(0).length
     queries.select(col("qid"), col("qvec")).collect().toSeq.map { r =>
@@ -265,8 +240,7 @@ object AnnPq {
     * silent ragged slice would mis-encode every vector.
     */
   private[graft] def fitCodebooks(
-      emb: DataFrame, m: Int, kSub: Int, iters: Int, sampleCap: Int,
-      normalizeInput: Boolean = true): Array[Array[Array[Double]]] = {
+      emb: DataFrame, m: Int, kSub: Int, iters: Int, sampleCap: Int): Array[Array[Array[Double]]] = {
     import org.apache.spark.sql.{Encoder, Row}
     implicit val enc: Encoder[Seq[Seq[Seq[Double]]]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Seq[Seq[Double]]]]()
@@ -278,13 +252,7 @@ object AnnPq {
       .coalesce(1)
       .mapPartitions { (it: Iterator[Row]) =>
         val rows = it.toArray.sortBy(r => (r.getLong(2), r.getLong(0)))
-        // normalizeInput=false is the by_residual fit: rows are already
-        // cell residuals, and re-normalizing them would distort exactly the
-        // magnitudes the residual codebook exists to capture
-        val pts = rows.map { r =>
-          val v = r.getSeq[Double](1).toArray
-          if (normalizeInput) normalize(v) else v
-        }
+        val pts = rows.map(r => normalize(r.getSeq[Double](1).toArray))
         if (pts.isEmpty) Iterator.empty
         else {
           val dim = pts(0).length

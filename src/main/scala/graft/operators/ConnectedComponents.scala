@@ -34,32 +34,9 @@ object ConnectedComponents {
     *                   direction. Edges with an endpoint NOT in `vertices`
     *                   are ignored (semi-join filtered) — components are
     *                   defined by reachability within the vertex set only
-    * @param iterateAll iterate over ALL vertices instead of just the
-    *                   edge-induced subgraph — only sensible when nearly
-    *                   every vertex has an edge (the restriction then buys
-    *                   nothing and costs a distinct). Kept as the A/B
-    *                   reference form for tools.AbBench.
     * @return (id, component) where component = min id reachable
     */
-  /** @param doubleStep propagate TWICE per convergence action — measured
-    *                    NEGATIVE (round 19): near-dup graphs are dense
-    *                    clique-ish clusters with diameter ~1–2, so
-    *                    single-step already converges in 2–3 actions and
-    *                    the second hop (its joins + intermediate
-    *                    checkpoint) is pure waste — interleaved A/B 3.24 vs
-    *                    2.75 s at sf10, 2.80 vs 2.43 at sf0.1, double-step
-    *                    slower at BOTH. Kept as the AbBench twin
-    *                    `dedup_components_doublestep` — the lever exists
-    *                    for a future high-diameter caller (chains, not
-    *                    cliques), where ceil(D/2)+1 actions beats D+1.
-    */
-  def labels(
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIter: Int = 20,
-      iterateAll: Boolean = false,
-      eagerCkpt: Boolean = false,
-      doubleStep: Boolean = false): DataFrame = {
+  def labels(vertices: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // symmetrize once; checkpoint so every round reuses the materialized
     // edge list instead of re-deriving it (it never changes).
     // Edges referencing ids absent from `vertices` are dropped up front:
@@ -79,7 +56,7 @@ object ConnectedComponents {
       // materializes inside the first convergence-sum job below instead of
       // paying its own eager scheduling round-trip; every later round reads
       // the stored blocks all the same
-      .localCheckpoint(eager = eagerCkpt)
+      .localCheckpoint(eager = false)
 
     // iterate over edge-TOUCHED vertices only: an isolated vertex can never
     // change its label, so it has no business inside the per-round join +
@@ -88,11 +65,9 @@ object ConnectedComponents {
     // near-duplicate — typically a small fraction); singletons rejoin once
     // at the end with comp = id. sym carries both directions, so its src
     // column alone covers every endpoint.
-    var labels = (
-      if (iterateAll) vertices.select(col("id"))
-      else sym.select(col("src").as("id")).distinct())
+    var labels = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(eager = eagerCkpt)
+      .localCheckpoint(eager = false)
     // labels only ever DECREASE (least of self and neighbors), so Σcomp is
     // a fixpoint witness: unchanged sum ⇔ no label moved. One scalar
     // aggregate per round replaces a join + filter + count.
@@ -106,30 +81,25 @@ object ConnectedComponents {
     // convergence job instead of paying their own scheduling round-trip.
     var prevSum = 0L
     var havePrev = false
-    // one min-label propagation hop; the caller checkpoints the result
-    def step(l: DataFrame): DataFrame = {
-      val nbrMin = sym
-        .join(l.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
-        .groupBy(col("src").as("nid"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      l.join(nbrMin, col("id") === col("nid"), "left")
-        .select(
-          col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-    }
     var converged = false
     var round = 0
     while (!converged && round < maxIter) {
-      // LAZY checkpoints: the convergence sum right below is the round's
-      // one action — it materializes the round's checkpoint blocks (both
-      // hops when doubleStep; the intermediate one keeps the second hop's
-      // two consumers from recomputing it) in the SAME job, so each driver
-      // round-trip buys the full propagation work (round 18 precedent:
-      // graph_pagerank's eager → lazy rewrite)
-      val updated =
-        (if (doubleStep) step(step(labels).localCheckpoint(eager = eagerCkpt))
-         else step(labels))
-          .localCheckpoint(eager = eagerCkpt)
+      // one min-label propagation hop per round. LAZY checkpoint: the
+      // convergence sum right below is the round's one action — it
+      // materializes the round's checkpoint blocks in the SAME job, so each
+      // action buys the full propagation work (round 18 precedent:
+      // graph_pagerank's eager → lazy rewrite). Two hops per
+      // action measured slower on near-dup graphs (BASELINE.md, retired
+      // A/B twins): they converge in 2–3 single-hop actions.
+      val nbrMin = sym
+        .join(labels.withColumnRenamed("id", "dst2"), col("dst") === col("dst2"))
+        .groupBy(col("src").as("nid"))
+        .agg(min(col("comp")).as("nbr_comp"))
+      val updated = labels.join(nbrMin, col("id") === col("nid"), "left")
+        .select(
+          col("id"),
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
+        .localCheckpoint(eager = false)
       val newSum = updated.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
       labels = updated
       converged = havePrev && newSum == prevSum

@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * (exact on integer/half-integer operands — both engines agree, which is
   * the anomaly_mad fixed-point contract).
   *
-  * Row-identity vs the buffered form is pinned by Round18Spec and the
-  * sf0.01 oracle gate; the buffered original stays measurable as AbBench
-  * `anomaly_mad_bufmedian`.
+  * Row-identity vs the buffered form is pinned by Round18Spec (which keeps
+  * that form as its reference) and the sf0.01 oracle gate.
   */
 object HistogramMedian {
 

@@ -101,16 +101,6 @@ object MinHashLsh {
       1)
   }
 
-  /** The original pure-expression band-hash form — parity reference for the
-    * native `plans.BandHashes` kernel (BandHashParitySpec pins the pair).
-    */
-  def bandHashesExpr(sig: Column, bands: Int, r: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      j =>
-        xxhash64(concat_ws(",",
-          transform(slice(sig, j * r + lit(1), lit(r)), x => x.cast("string")))))
-
   /** Near-duplicate pairs (aId < bId) with exact shingle-Jaccard ≥ threshold,
     * discovered via banded LSH. Output: (a_id, b_id, jaccard).
     *
@@ -138,8 +128,7 @@ object MinHashLsh {
       bands: Int = 9,
       threshold: Double = 0.8,
       maxBucketSize: Int = 1000,
-      persistShingles: Boolean = true,
-      bandKernel: Boolean = true): DataFrame = {
+      persistShingles: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
 
@@ -159,14 +148,12 @@ object MinHashLsh {
     // banded rows stay SLIM - (doc, band_idx, band_hash) only; shingle
     // arrays never enter the candidate shuffle or the pair dedup.
     // Band hashes come from ONE native kernel call (round 19,
-    // plans.BandHashes — bit-parity with [[bandHashesExpr]], the previous
-    // interpreted slice/cast/concat_ws/xxhash64 lambda chain).
-    val bandCol =
-      if (bandKernel)
-        org.apache.spark.sql.GraftSqlShim.column(
-          graft.plans.BandHashes(
-            org.apache.spark.sql.GraftSqlShim.expression(col("sig")), bands, r))
-      else bandHashesExpr(col("sig"), bands, r)
+    // plans.BandHashes — bit-parity with the interpreted
+    // slice/cast/concat_ws/xxhash64 lambda chain it replaced, pinned by
+    // BandHashParitySpec).
+    val bandCol = org.apache.spark.sql.GraftSqlShim.column(
+      graft.plans.BandHashes(
+        org.apache.spark.sql.GraftSqlShim.expression(col("sig")), bands, r))
     val banded = sh
       .withColumn("sig", signature(col("sh"), numHashes))
       .select(col("doc"), posexplode(bandCol))

@@ -21,10 +21,10 @@ import graft.operators.MinHashLsh
 object CorpusClean {
 
   /** Shingle width of the Jaccard-1.0 duplicate fingerprint. ONE constant
-    * drives all four coupled uses (the fused kernel's n, its n_tok >= n
-    * non-null domain filter, the composed twin's shingleSize, and the
-    * shingleless keep branch) — they must stay in lock-step or the
-    * always-kept/fingerprinted partition silently splits (advisor r15 #3).
+    * drives all three coupled uses (the fused kernel's n, its n_tok >= n
+    * non-null domain filter, and the shingleless keep branch) — they must
+    * stay in lock-step or the always-kept/fingerprinted partition silently
+    * splits (advisor r15 #3).
     */
   private val ShingleSize = 3
 
@@ -37,24 +37,12 @@ object CorpusClean {
     *                       run must be EXHAUSTIVE — a duplicate cluster
     *                       larger than the guard would otherwise have its
     *                       buckets dropped and survive dedup entirely
-    * @param forceLsh       run the banded-LSH path even at threshold 1.0
-    *                       (the set-fingerprint fast path is the default
-    *                       there); kept as the A/B reference — tools.AbBench
-    *                       compares the two forms in one session
-    * @param fusedFp        compute the Jaccard-1.0 set fingerprint with the
-    *                       fused one-pass `plans.ShingleSetHash` kernel
-    *                       (default) instead of the composed
-    *                       split → ngrams → 2×set_hash_sum cascade it is
-    *                       bit-identical to; the composed form is the A/B
-    *                       twin (tools.AbBench `pipeline_corpus_clean_ngramfp`)
     */
   case class Config(
       minTokens: Int = 5,
       maxPunctRatio: Double = 0.3,
       nearDupJaccard: Double = 0.8,
-      maxBucketSize: Int = 1000,
-      forceLsh: Boolean = false,
-      fusedFp: Boolean = true)
+      maxBucketSize: Int = 1000)
 
   /** docs: (doc_id, text, ...) → surviving rows plus `norm` and `n_tok`.
     * Drop order: quality gate, then exact duplicates (keep min doc_id),
@@ -113,7 +101,7 @@ object CorpusClean {
       .join(keeperIds, Seq("doc_id"), "left_semi")
       .drop("h")
 
-    val survivors = if (cfg.nearDupJaccard == 1.0 && !cfg.forceLsh) {
+    val survivors = if (cfg.nearDupJaccard == 1.0) {
       // FAST PATH — Jaccard 1.0 is shingle-SET IDENTITY, so "near"-dup
       // degenerates to exact dedup on a canonical set fingerprint: the
       // whole signature → banding → bucket self-join → candidate-verify
@@ -129,34 +117,22 @@ object CorpusClean {
       // drop-everything-paired-with-a-smaller-id. Shingle-less docs (< 3
       // tokens — empty shingle set) never pair and are always kept; the
       // n_tok column already in the checkpoint decides that branch for free.
-      // Round 15: the default form is the FUSED one-pass kernel
+      // Round 15: the fingerprint is the FUSED one-pass kernel
       // (plans.ShingleSetHash — every 3-shingle of a space-normalized string
       // is a contiguous byte slice, hashed in place, zero allocation of the
-      // shingle array); the composed split → ngrams → 2×set_hash_sum cascade
-      // it is bit-identical to stays behind fusedFp=false as the A/B twin.
-      val fp =
-        if (cfg.fusedFp) {
-          val fused = org.apache.spark.sql.GraftSqlShim.column(
-            graft.plans.ShingleSetHash(
-              org.apache.spark.sql.GraftSqlShim.expression(col("norm")),
-              n = ShingleSize, seed1 = 42L, seed2 = 7L))
-          keepers
-            // fused fp is non-null exactly here
-            .filter(col("n_tok") >= ShingleSize)
-            .select(col("doc_id"), fused.as("fp"))
-            .select(col("doc_id"),
-              col("fp").getField("fp1").as("fp1"),
-              col("fp").getField("fp2").as("fp2"))
-        } else {
-          val sh = keepers.select(
-            col("doc_id"),
-            MinHashLsh.shingles(graft.Tables.spaceSplit(col("norm")), shingleSize = ShingleSize).as("sh"))
-          def fpc(seed: Long) = org.apache.spark.sql.GraftSqlShim.column(
-            graft.plans.SetHashSum(
-              org.apache.spark.sql.GraftSqlShim.expression(col("sh")), seed))
-          sh.filter(size(col("sh")) > 0)
-            .select(col("doc_id"), fpc(42L).as("fp1"), fpc(7L).as("fp2"))
-        }
+      // shingle array), bit-identical to the composed split → ngrams →
+      // 2×set_hash_sum cascade (ShingleSetHashSpec pins the pair).
+      val fused = org.apache.spark.sql.GraftSqlShim.column(
+        graft.plans.ShingleSetHash(
+          org.apache.spark.sql.GraftSqlShim.expression(col("norm")),
+          n = ShingleSize, seed1 = 42L, seed2 = 7L))
+      val fp = keepers
+        // fused fp is non-null exactly here
+        .filter(col("n_tok") >= ShingleSize)
+        .select(col("doc_id"), fused.as("fp"))
+        .select(col("doc_id"),
+          col("fp").getField("fp1").as("fp1"),
+          col("fp").getField("fp2").as("fp2"))
       // slim shuffle, same discipline as the exact-dedup stage above:
       // only (two 8-byte fingerprints, id) triples enter the exchange
       val keepIds = fp.groupBy("fp1", "fp2").agg(min(col("doc_id")).as("doc_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Native text-sketch expressions (SURVEY.md §4 tier (b)), sibling of
@@ -912,9 +913,15 @@ case class BandHashes(child: Expression, bands: Int, r: Int)
 
 /** `space_token_count(s)` — `size(split(s, " "))` as one zero-allocation
   * byte pass (see [[TextExprs.spaceTokenCount]] for the identity). INT like
-  * `size()`; NULL in → NULL out, like `size(split(NULL, " "))`.
+  * `size()`, with `Size`'s NULL rule: NULL in → −1 when
+  * `legacySizeOfNull` (`spark.sql.legacy.sizeOfNull` with ANSI off), else
+  * NULL. Like `Size`, the flag is captured from the active SQLConf when the
+  * expression is built.
   */
-case class SpaceTokenCount(child: Expression) extends UnaryExpression {
+case class SpaceTokenCount(child: Expression, legacySizeOfNull: Boolean)
+  extends UnaryExpression {
+
+  def this(child: Expression) = this(child, SQLConf.get.legacySizeOfNull)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -924,12 +931,26 @@ case class SpaceTokenCount(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "space_token_count"
+  override def nullable: Boolean = if (legacySizeOfNull) false else super.nullable
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextExprs.spaceTokenCount(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) { if (legacySizeOfNull) -1 else null }
+    else TextExprs.spaceTokenCount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.spaceTokenCount($c)")
+    if (legacySizeOfNull) {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+      val c = child.genCode(ctx)
+      ev.copy(
+        code = code"""
+          ${c.code}
+          int ${ev.value} = ${c.isNull} ? -1 : graft.plans.TextExprs.spaceTokenCount(${c.value});
+        """,
+        isNull = FalseLiteral)
+    } else defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.spaceTokenCount($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SpaceTokenCount =
     copy(child = newChild)

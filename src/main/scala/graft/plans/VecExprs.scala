@@ -93,7 +93,7 @@ object VecExprs {
   }
 
   /** Nearest-subspace-centroid PQ codes of an already-prepared point
-    * (canonical copy — AnnPq.encodePoint delegates here, round 18). */
+    * (canonical copy — AnnPq.encoder calls it, round 18). */
   def pqEncode(books: Array[Array[Array[Double]]], u: Array[Double]): Array[Int] = {
     val subDim = u.length / books.length
     val codes = new Array[Int](books.length)

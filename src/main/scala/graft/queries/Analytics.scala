@@ -29,9 +29,7 @@ object Analytics {
     * weight comes from the single per-group window below
     * PrefixScan.CrossoverRows (cheaper: no second scan, no offset join) and
     * from the MEDIAN-BLOCK refinement over 32 value-range blocks above it.
-    * `force` pins a branch for the A/B twins and row-identity specs;
-    * `scan2` pins the retired round-9 full two-pass PrefixScan blocked form
-    * (AbBench's agg_weighted_median_scan2 twin).
+    * `force` pins a branch for the row-identity specs.
     *
     * Median-block refinement (round 15): the full two-pass scan computed an
     * exact running weight for EVERY row, i.e. a whole-data shuffle-sort —
@@ -45,23 +43,13 @@ object Analytics {
     * crossing block's rows (~1/32 of the data per group) are sorted.
     */
   private[graft] def weightedMedian(
-      s: SparkSession, d: String, force: Option[Boolean],
-      scan2: Boolean = false, mmBlocks: Boolean = false): DataFrame = {
+      s: SparkSession, d: String, force: Option[Boolean]): DataFrame = {
     val base = t(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice").as("v"),
         col("l_quantity").as("q"))
     val useBlocked = force.getOrElse(
       graft.operators.PrefixScan.estimatedRows(base) >=
         graft.operators.PrefixScan.CrossoverRows)
-    def mmBlock(df: DataFrame): DataFrame = {
-      val mm = base.agg(min(col("v")).as("__mn"), max(col("v")).as("__mx"))
-      val bkt = when(col("v").isNull, 0)
-        .when(col("__mx") > col("__mn"),
-          least(floor((col("v") - col("__mn")) * 32 / (col("__mx") - col("__mn")))
-            .cast("int"), lit(31)))
-        .otherwise(0)
-      df.crossJoin(broadcast(mm)).withColumn("__bk", bkt).drop("__mn", "__mx")
-    }
     // Round 19: the blocked refinement only needs block ids MONOTONE in v
     // with equal values sharing a block — nothing requires the equal-width
     // min/max buckets. A log-scale id computed straight from each row
@@ -70,20 +58,22 @@ object Analytics {
     // min/max pre-pass, i.e. one of the three full scans, and the per-row
     // broadcast-join against the (mn, mx) row. Guards: NULLs get their own
     // lowest block (they sort first under orderBy(v)); non-positives share
-    // one block below every positive's; the greatest/least clamp keeps
-    // ±inf/NaN inside long range (NaN > inf in Spark's ordering, so NaN
-    // lands in the top block it sorts into). The min/max form stays as the
-    // AbBench twin `agg_weighted_median_mmblock` (row-identical).
+    // one block below every positive's; the greatest/least clamp keeps ±inf
+    // inside long range. NaN sorts after +inf in Spark's ordering, so it
+    // gets its own block above the clamp's top (32800): floor() of a NaN
+    // double is 0, which would put NaN weight below every value ≥ 1 and
+    // move the median crossing.
     def logBlock(df: DataFrame): DataFrame = {
       val bkt = when(col("v").isNull, lit(-2147483648L))
         .when(col("v") <= 0.0, lit(-1073741824L))
+        .when(isnan(col("v")), lit(32801L))
         .otherwise(
           least(greatest(floor(log(2.0, col("v")) * 32), lit(-34400L).cast("double")),
             lit(32800L).cast("double")).cast("long"))
       df.withColumn("__bk", bkt)
     }
-    if (useBlocked && !scan2) {
-      val keyed = if (mmBlocks) mmBlock(base) else logBlock(base)
+    if (useBlocked) {
+      val keyed = logBlock(base)
       // one hash aggregate locates everything: per-(group, block) weight
       // and min value — 32·|groups| rows, every later stage but the
       // median-block window runs on this frame
@@ -110,7 +100,7 @@ object Analytics {
         .filter(col("__bk") > col("__mb"))
         .groupBy("l_returnflag").agg(min(col("__bmn")).as("__tmn"))
       // only the crossing block's rows get the exact within-block scan —
-      // same exclusive-prefix + merge association as the retired full scan,
+      // same exclusive-prefix + merge association as the window branch,
       // so results are bit-identical where they overlap
       val wIn = Window.partitionBy("l_returnflag").orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -126,27 +116,14 @@ object Analytics {
         .select(col("l_returnflag"), least(col("__mv"), col("__tmn")).as("wmedian"))
         .orderBy("l_returnflag")
     } else {
-      val scanned =
-        if (!useBlocked)
-          graft.operators.PrefixScan.single(
-            base,
-            partitionCols = Seq("l_returnflag"),
-            order = Seq(col("v")),
-            value = col("q"),
-            agg = c => sum(c),
-            merge = (l, o) => coalesce(l, lit(0.0)) + coalesce(o, lit(0.0)),
-            out = "cw0")
-        else
-          graft.operators.PrefixScan.exclusive(
-            mmBlock(base),
-            partitionCols = Seq("l_returnflag"),
-            block = col("__bk"),
-            order = Seq(col("v")),
-            value = col("q"),
-            agg = c => sum(c),
-            merge = (l, o) => coalesce(l, lit(0.0)) + coalesce(o, lit(0.0)),
-            out = "cw0")
-            .drop("__bk")
+      val scanned = graft.operators.PrefixScan.single(
+        base,
+        partitionCols = Seq("l_returnflag"),
+        order = Seq(col("v")),
+        value = col("q"),
+        agg = c => sum(c),
+        merge = (l, o) => coalesce(l, lit(0.0)) + coalesce(o, lit(0.0)),
+        out = "cw0")
       val tot = base.groupBy("l_returnflag").agg(sum(col("q")).as("tw"))
       scanned
         .withColumn("cw", col("cw0") + col("q"))

@@ -29,7 +29,6 @@ import graft.Tables.{rd, rdSql, t}
   *   document length (sort_array over ≤ len/5 surviving segments).
   *   Semantics stay defined on the string (oracles unchanged); the
   *   collision bound at 1e12 distinct grams is ~1.5e-15 expected pairs.
-  *   The raw-string forms live on as AbBench twins (`*_str`).
   * - `sample_domain_quota` is the two-phase per-group top-k: a local
   *   row_number per (source, input-partition) prefilters to ≤ Q rows per
   *   partition BEFORE the per-source window, so no single task ever sorts
@@ -85,7 +84,7 @@ object Corpus {
   private val Shards = 16
 
   /** Coreset size (sample_coreset). */
-  private val CoreK = 8
+  private[graft] val CoreK = 8
 
   /** Document budget for the temperature-scaled mixture (sample_temperature). */
   private val TempBudget = 10000L
@@ -98,7 +97,7 @@ object Corpus {
     * integer micros and SHIFTED non-negative (+10⁶) — distances are
     * shift-invariant, and on non-negative operands Spark's truncating
     * `div` equals DuckDB's floor `//` (the pagerank trick). */
-  private def kmEmb(s: SparkSession, d: String): DataFrame =
+  private[graft] def kmEmb(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 1000000L)")
         .as("e"))
@@ -112,16 +111,11 @@ object Corpus {
     // per (vector, centroid) pair — ArrayAggregate is CodegenFallback —
     // which was the clustering family's inner loop. plans.SqDistLong keeps
     // the fold's exact long arithmetic and lenient null semantics
-    // (SqDistParitySpec + the oracle sweep pin it); the fold form stays
-    // measurable as AbBench `kmeans_assign_fold`
+    // (SqDistParitySpec + the oracle sweep pin it)
     org.apache.spark.sql.GraftSqlShim.column(
       graft.plans.SqDistLong(
         org.apache.spark.sql.GraftSqlShim.expression(col(a)),
         org.apache.spark.sql.GraftSqlShim.expression(col(b))))
-
-  /** The fold composition [[sqDist]] replaced — AbBench/parity reference. */
-  private[graft] def sqDistFold(a: String, b: String): Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
 
   /** DuckDB form of [[sqDist]] over 1-based list columns. */
   private def sqDistSql(a: String, b: String): String =
@@ -190,79 +184,51 @@ object Corpus {
     * so far), so each round compares only against the NEWEST center — one
     * 1-row broadcast cross join + `least` per round, no per-round
     * k-row fan-out and no groupBy at all (md2 is already per-vector) —
-    * O(K·n·dim) total distance work vs the recompute twin's O(K²·n·dim).
-    * Output-identical to the twin (exact integers, same (−md2, vec_id)
-    * argmax tie-break; Round10Spec pins it, AbBench measures it as
-    * `sample_coreset_recompute`). Both state and pick frames are lazily
-    * localCheckpoint-ed per round so the K-deep pyramid never re-derives
-    * earlier rounds.
+    * O(K·n·dim) total distance work vs re-deriving min-distance against the
+    * whole selected set (O(K²·n·dim), the spec's recompute reference).
+    * Same exact integers and (−md2, vec_id) argmax tie-break, so it is
+    * output-identical to [[coresetFpsBatched]] (Round10Spec pins both).
+    * Both state and pick frames are lazily localCheckpoint-ed per round so
+    * the K-deep pyramid never re-derives earlier rounds. This is the
+    * null-vector fallback of [[coresetFpsBatched]]: its SQL null semantics
+    * survive a null-riddled corpus by construction.
     */
-  private[graft] def coresetFps(
-      s: SparkSession, d: String, recompute: Boolean = false,
-      centerFromEmb: Boolean = false, incremental: Boolean = false): DataFrame = {
+  private[graft] def coresetFpsIncremental(s: SparkSession, d: String): DataFrame = {
     val emb = kmEmb(s, d)
-    if (!recompute && !incremental && !centerFromEmb) return coresetFpsBatched(s, d)
-    if (recompute) {
-      var sel = emb.sort(col("vec_id")).limit(1)
-        .select(col("vec_id"), lit(1L).as("sel_order"), lit(0L).as("d2"), col("e"))
-        .localCheckpoint(eager = false)
-      var i = 2
-      while (i <= CoreK) {
-        val pick = emb
-          .crossJoin(broadcast(sel.select(col("e").as("se"))))
-          .select(col("vec_id"), sqDist("e", "se").as("pd2"))
-          .groupBy(col("vec_id"))
-          .agg(min(col("pd2")).as("md2"))
-          .join(sel.select(col("vec_id")), Seq("vec_id"), "left_anti")
-          .agg(min(struct((lit(0L) - col("md2")).as("neg"), col("vec_id"))).as("m"))
-          .select(col("m.vec_id").as("vec_id"), lit(i.toLong).as("sel_order"),
-            (lit(0L) - col("m.neg")).as("d2"))
-        sel = sel.unionByName(pick.join(emb, "vec_id")
-            .select(col("vec_id"), col("sel_order"), col("d2"), col("e")))
+    val first = emb.sort(col("vec_id")).limit(1)
+      .localCheckpoint(eager = false)
+    var picks = first
+      .select(col("vec_id"), lit(1L).as("sel_order"), lit(0L).as("d2"))
+      .localCheckpoint(eager = false)
+    var state = emb
+      .crossJoin(broadcast(first.select(col("e").as("se"))))
+      .select(col("vec_id"), col("e"), sqDist("e", "se").as("md2"))
+      .localCheckpoint(eager = false)
+    var i = 2
+    while (i <= CoreK) {
+      // the empty-corpus agg yields one all-NULL row — filter it so a
+      // zero-row corpus yields a zero-row coreset, not K−1 null picks
+      val pick = state
+        .join(picks.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .agg(min(struct((lit(0L) - col("md2")).as("neg"), col("vec_id"))).as("m"))
+        .select(col("m.vec_id").as("vec_id"), lit(i.toLong).as("sel_order"),
+          (lit(0L) - col("m.neg")).as("d2"))
+        .filter(col("vec_id").isNotNull)
+        .localCheckpoint(eager = false) // feeds both the output and the center
+      picks = picks.unionByName(pick).localCheckpoint(eager = false)
+      if (i < CoreK) {
+        // round 15: the picked center's vector comes from the CURRENT
+        // state checkpoint (which already carries `e` per row), not from a
+        // re-scan of the embeddings source
+        state = state
+          .crossJoin(broadcast(pick.join(state, "vec_id").select(col("e").as("se"))))
+          .select(col("vec_id"), col("e"),
+            least(col("md2"), sqDist("e", "se")).as("md2"))
           .localCheckpoint(eager = false)
-        i += 1
       }
-      sel.select(col("sel_order"), col("vec_id"), col("d2")).orderBy("sel_order")
-    } else {
-      val first = emb.sort(col("vec_id")).limit(1)
-        .localCheckpoint(eager = false)
-      var picks = first
-        .select(col("vec_id"), lit(1L).as("sel_order"), lit(0L).as("d2"))
-        .localCheckpoint(eager = false)
-      var state = emb
-        .crossJoin(broadcast(first.select(col("e").as("se"))))
-        .select(col("vec_id"), col("e"), sqDist("e", "se").as("md2"))
-        .localCheckpoint(eager = false)
-      var i = 2
-      while (i <= CoreK) {
-        // the empty-corpus agg yields one all-NULL row — filter it so a
-        // zero-row corpus yields a zero-row coreset, not K−1 null picks
-        val pick = state
-          .join(picks.select(col("vec_id")), Seq("vec_id"), "left_anti")
-          .agg(min(struct((lit(0L) - col("md2")).as("neg"), col("vec_id"))).as("m"))
-          .select(col("m.vec_id").as("vec_id"), lit(i.toLong).as("sel_order"),
-            (lit(0L) - col("m.neg")).as("d2"))
-          .filter(col("vec_id").isNotNull)
-          .localCheckpoint(eager = false) // feeds both the output and the center
-        picks = picks.unionByName(pick).localCheckpoint(eager = false)
-        if (i < CoreK) {
-          // round 15: the picked center's vector comes from the CURRENT
-          // state checkpoint (which already carries `e` per row) — the old
-          // `pick.join(emb, ...)` re-scanned the embeddings source and
-          // re-ran the fixed-point transform once per round, K−2 redundant
-          // source passes in total (kept as AbBench's
-          // sample_coreset_embfetch twin)
-          val centerSrc = if (centerFromEmb) emb else state
-          state = state
-            .crossJoin(broadcast(pick.join(centerSrc, "vec_id").select(col("e").as("se"))))
-            .select(col("vec_id"), col("e"),
-              least(col("md2"), sqDist("e", "se")).as("md2"))
-            .localCheckpoint(eager = false)
-        }
-        i += 1
-      }
-      picks.select(col("sel_order"), col("vec_id"), col("d2")).orderBy("sel_order")
+      i += 1
     }
+    picks.select(col("sel_order"), col("vec_id"), col("d2")).orderBy("sel_order")
   }
 
   /** Candidate budget for [[coresetFpsBatched]]. 4096 ≫ K=8 means the
@@ -294,9 +260,8 @@ object Corpus {
     * <0.2% of points — the pathological case, paid with one extra pass.
     * Scale: the fetch is TakeOrderedAndProject (per-partition heaps, no
     * global sort); candidate payload is M·dim longs (~2 MB at dim 64).
-    * Output-identical to both twins (Round10Spec + the sf0.01 oracle pin
-    * it); the incremental form stays measurable as AbBench's
-    * `sample_coreset_incremental`.
+    * Output-identical to [[coresetFpsIncremental]] and the spec's
+    * recompute reference (Round10Spec + the sf0.01 oracle pin it).
     */
   private[graft] def coresetFpsBatched(
       s: SparkSession, d: String, cand: Int = CoreCand): DataFrame = {
@@ -318,7 +283,7 @@ object Corpus {
     // null. Fall back to the incremental cluster form, whose SQL null
     // semantics survive a null-riddled corpus by construction
     // (NullCorpusSpec pins the no-crash contract on every declared key).
-    if (firstRows(0).isNullAt(1)) return coresetFps(s, d, incremental = true)
+    if (firstRows(0).isNullAt(1)) return coresetFpsIncremental(s, d)
     val firstId = firstRows(0).getLong(0)
     val firstVec = firstRows(0).getSeq[Long](1).toArray
 
@@ -360,7 +325,7 @@ object Corpus {
     }
     var (cands, threshold) = (Array.empty[Cand], 0L)
     try { val ft = fetch(); cands = ft._1; threshold = ft._2 }
-    catch { case NullVec() => return coresetFps(s, d, incremental = true) }
+    catch { case NullVec() => return coresetFpsIncremental(s, d) }
 
     var i = 2
     while (i <= CoreK && (cands.nonEmpty || threshold > Long.MinValue)) {
@@ -636,10 +601,9 @@ object Corpus {
     // anti-joined out so degenerate duplicate vectors can't be re-picked).
     // Reported d2 is the coverage radius at selection time — monotone
     // non-increasing, the k-center certificate. EXACT cross-engine via
-    // the shared fixed-point domain. Round 10 made the scan INCREMENTAL —
-    // see [[coresetFps]] for the shape and the A/B against the recompute
-    // twin it replaced.
-    "sample_coreset" -> ((s, d) => coresetFps(s, d)),
+    // the shared fixed-point domain. Round 16 finishes the picks in the
+    // calling JVM behind a certificate — see [[coresetFpsBatched]].
+    "sample_coreset" -> ((s, d) => coresetFpsBatched(s, d)),
 
     // Size-balanced CONTIGUOUS output sharding — the "write the corpus as
     // S balanced shards" step before a training job: shard(doc) =
@@ -684,10 +648,10 @@ object Corpus {
         .orderBy("lang")
     }))
 
-  /** dedup_semantic's body. `quadratic = true` is the AbBench twin: the
+  /** dedup_semantic's body. `quadratic = true` is CorpusSpec's reference: the
     * SAME candidate set (|rank gap| ≤ DedupW inside a cluster) generated
     * the quadratic way — full within-cluster self-join, THEN the rank
-    * filter — so the row-identical A/B isolates the cost of candidate
+    * filter — so the two differ only in the cost of candidate
     * GENERATION: the declared form's exploded equi-join on (cid, rank+j)
     * materializes only the 2W candidates per vector, the twin's cid join
     * materializes N²/k matches per cluster before filtering. */

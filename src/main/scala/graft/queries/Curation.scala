@@ -91,7 +91,7 @@ object Curation {
     // (argmax = min over struct(-n_tok, doc_id), the coresetFps tie-break
     // discipline — no per-component window).
     "dedup_cluster_rep" -> ((s, d) => {
-      val labels = ScaleOps.dedupComponents(s, d, iterateAll = false)
+      val labels = ScaleOps.dedupComponents(s, d)
         .select(col("doc_id"), col("component"))
       val docs = t(s, d, "documents")
         .filter(col("doc_id") < 500)

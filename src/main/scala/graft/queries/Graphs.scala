@@ -33,7 +33,7 @@ object Graphs {
   type Q = (SparkSession, String) => DataFrame
 
   /** Minimum co-purchase support for an edge. */
-  private val MinSupport = 2
+  private[graft] val MinSupport = 2
 
   /** Per-order item cap: each basket keeps only its MaxBasket smallest part
     * keys before the C(k, 2) pair fan-out, bounding per-row work at
@@ -89,29 +89,6 @@ object Graphs {
       .select(col("a_id"), col("b_id"))
   }
 
-  /** A/B twin of [[copurchaseEdges]] for AbBench: fans out the FULL basket
-    * first and only then filters pairs to the capped set (pks is sorted and
-    * a < b, so "both endpoints among the MaxBasket smallest" ⟺
-    * b ≤ pks[MaxBasket]). Row-identical to the declared slice-first form —
-    * the difference is purely the C(k, 2) vs C(MaxBasket, 2) fan-out work,
-    * which is what the mega-basket AbBench row quantifies.
-    */
-  private[graft] def copurchaseEdgesPostFilter(s: SparkSession, d: String): DataFrame = {
-    val baskets = t(s, d, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(array_sort(collect_set(col("l_partkey"))).as("pks"))
-    baskets
-      .select(col("pks"), explode(flatten(transform(col("pks"), (x, i) =>
-        transform(slice(col("pks"), i + lit(2), size(col("pks"))), y =>
-          struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(size(col("pks")) <= MaxBasket ||
-        col("p.b") <= element_at(col("pks"), MaxBasket))
-      .groupBy(col("p.a").as("a_id"), col("p.b").as("b_id"))
-      .agg(count(lit(1)).as("support"))
-      .filter(col("support") >= MinSupport)
-      .select(col("a_id"), col("b_id"))
-  }
-
   val queries: Map[String, Q] = Map(
     // Triangle census + global clustering coefficient. e1(a,b) ⋈ e2(b,c)
     // builds oriented wedges a<b<c; closing edge e3(a,c) confirms the
@@ -157,8 +134,8 @@ object Graphs {
       // every one of the 5 rounds' sort-merge joins reads sym exchange-free
       // and sort-free instead of re-shuffling + re-sorting the edges per
       // round (one upfront shuffle buys 5 per-round ones; the deg aggregate
-      // reuses the same clustering for free). A/B twin without the
-      // pre-partition: AbBench graph_pagerank_unpart.
+      // reuses the same clustering for free). Measured against the form
+      // without the pre-partition (BASELINE.md, retired A/B twins).
       val sym = e.union(e.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
         .select(col("a_id").as("src"), col("b_id").as("dst"))
         .repartition(col("src"))
@@ -208,7 +185,7 @@ object Graphs {
       // Round 19, the PageRank discipline: pre-partition + pre-sort on the
       // per-round join key — LPA's rounds join on sym's DST side — so both
       // propagation rounds read the checkpointed edges exchange-free and
-      // sort-free. Twin: AbBench graph_community_lpa_unpart.
+      // sort-free (BASELINE.md, retired A/B twins).
       val sym = e.union(e.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
         .select(col("a_id").as("src"), col("b_id").as("dst"))
         .repartition(col("dst"))

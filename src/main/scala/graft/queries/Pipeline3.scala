@@ -53,7 +53,7 @@ object Pipeline3 {
     *    sort. Per-token math is bit-identical (same Math.log of the same
     *    IEEE division), summed per doc in token order as before.
     *  - larger vocab: the round-13 broadcast-join form, unchanged
-    *    (AbBench's `text_unigram_lm_join` keeps it measurable).
+    *    (`forceJoin` pins it for the specs).
     *
     * The round-13 rejected A/Bs (repartition(doc_id) 16.7→18.4 s at sf10;
     * (doc_id, token, c) pre-aggregate ~1.2×; localCheckpoint ratio 0.99)
@@ -75,8 +75,8 @@ object Pipeline3 {
       // element_at on a map literal LINEAR-SCANS the vocabulary per token
       // (O(|w|·|vocab|) string compares/doc). plans.SumMapVals probes a
       // HashMap in the identical left-to-right IEEE add order —
-      // bit-identical sums; the old composition stays measurable as
-      // AbBench `text_unigram_lm_litmap_fold`
+      // bit-identical sums (Round18Spec keeps the old composition as its
+      // reference)
       t(s, d, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"), toks(col("text")).as("w"))
@@ -237,7 +237,6 @@ object Pipeline3 {
       // slower) there is NO 27M-row join-back probe — the join is
       // |docs|-sized. novelty = n_novel/n_shingles is the same IEEE
       // division avg() performed (sum of 0/1 doubles is exact).
-      // Window twin kept as AbBench text_novelty_window.
       def sh(c: Column) =
         graft.operators.MinHashLsh.shingles(toks(c), 3)
       val docs = t(s, d, "documents")
@@ -282,7 +281,7 @@ object Pipeline3 {
       // round 16 (VERDICT r15 item 8): the three-stage union re-derives
       // the lineage per stage (6 event scans), but CHECKPOINTING the
       // per-user stage frames measured 1.17× SLOWER at sf10 (interleaved
-      // ×5, AbBench funnel_conversion_ckpt) — the type-filtered scans are
+      // ×5) — the type-filtered scans are
       // pushdown-cheap and the per-user frame materialization costs more
       // than the recompute it saves (the ANN-dedup-ckpt economics).
       // Recompute stays the declared plan; isolated sf10 = 3.38 s

@@ -80,10 +80,6 @@ object Quality {
       .select(col("doc_id"), col("token"), col("tfidf"))
   }
 
-  /** AbBench-only visibility into the shared score frame. */
-  private[graft] def tfidfScoresForBench(docs0: DataFrame): DataFrame =
-    tfidfScores(docs0)
-
   val queries: Map[String, Q] = Map(
     // TF-IDF: tf = cnt/len, idf = ln(N/df); global top-20 weighted terms —
     // no sort until the final top-k (TakeOrderedAndProject).

@@ -80,7 +80,7 @@ object ScaleOps {
     // duplicate cluster. The oracle computes the same fixpoint with a
     // recursive CTE — two entirely different evaluation strategies must
     // meet at the same labels.
-    "dedup_components" -> ((s, d) => dedupComponents(s, d, iterateAll = false)),
+    "dedup_components" -> ((s, d) => dedupComponents(s, d)),
 
     // Recursive CTE (Spark 4 WITH RECURSIVE): a month spine over the full
     // order-date domain, LEFT-joined to per-month order stats so empty
@@ -208,12 +208,8 @@ object ScaleOps {
 
   private val norm = normTextSql("text")
 
-  /** Shared body of `dedup_components` — `iterateAll = true` is the
-    * all-vertices iteration kept as the tools.AbBench reference form.
-    */
-  private[graft] def dedupComponents(
-      s: SparkSession, d: String, iterateAll: Boolean,
-      eagerCkpt: Boolean = false, doubleStep: Boolean = false): DataFrame = {
+  /** Shared body of `dedup_components` and `dedup_cluster_rep`. */
+  private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents")
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), col("lang"),
@@ -230,8 +226,7 @@ object ScaleOps {
       .filter(col("jac") >= 0.7)
       .select(col("src"), col("dst"))
     graft.operators.ConnectedComponents
-      .labels(base.select(col("doc_id").as("id")), edges, iterateAll = iterateAll,
-        eagerCkpt = eagerCkpt, doubleStep = doubleStep)
+      .labels(base.select(col("doc_id").as("id")), edges)
       .select(col("id").as("doc_id"), col("comp").as("component"))
       .orderBy("doc_id")
   }

@@ -131,14 +131,12 @@ object Selection {
       // (1.17×). The checkpoint holds ≤ |matching tokens| strings per doc
       // (3 query terms), so the materialized frame is ~24 B/doc. The
       // membership filter is the native KeepInSet kernel (the interpreted
-      // higher-order filter was a CodegenFallback); the recompute form
-      // stays measurable as AbBench `rank_bm25_recompute`, row-identity
-      // pinned by Round18Spec.
+      // higher-order filter was a CodegenFallback); row-identity with the
+      // recompute form is pinned by Round18Spec.
       // Round 19: dl and the matching tokens come from ONE fused byte pass
       // over the normalized text (plans.MatchTokens — the split/size/
       // KeepInSet chain materialized the full token array per doc just to
-      // count it and keep ≤3 matches; MatchTokensParitySpec pins the pair,
-      // the split form stays as AbBench rank_bm25_splitks)
+      // count it and keep ≤3 matches; MatchTokensParitySpec pins the pair)
       val mt = org.apache.spark.sql.GraftSqlShim.column(graft.plans.MatchTokens(
         org.apache.spark.sql.GraftSqlShim.expression(normText(col("text"))),
         Bm25Terms))

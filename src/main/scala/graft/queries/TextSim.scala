@@ -95,8 +95,7 @@ object TextSim {
       // Round 19: both multiset hash sums in ONE fused zero-copy pass over
       // the normalized text (plans.TokenHashSums) — the spaceSplit →
       // 2×SetHashSum chain materialized the token array and walked it
-      // twice. TokenHashSumsParitySpec pins the pair; the split form stays
-      // as AbBench dedup_token_sort_splitsum.
+      // twice. TokenHashSumsParitySpec pins the pair.
       val fused = org.apache.spark.sql.GraftSqlShim.column(
         graft.plans.TokenHashSums(
           org.apache.spark.sql.GraftSqlShim.expression(normText(col("text"))), 42L, 7L))

@@ -19,8 +19,9 @@ import graft.Tables.{normText, normTextSql, t}
   *   keep every stage partition-parallel. The bin id is a prefix-sum
   *   bucket, the deterministic distributed packing (true greedy bin packing
   *   is inherently sequential; the prefix form wastes at most one doc's
-  *   tokens per boundary). [[packWindow]] keeps the single-window form as
-  *   the AbBench reference / A/B twin.
+  *   tokens per boundary). Below PrefixScan.CrossoverRows the key runs the
+  *   single per-language window instead (cheaper than the two-pass
+  *   constant at that size); both forms are row-identical.
   * - `sample_split` is the md5-coin split: stable under reruns, insertions
   *   and repartitioning, no global state — the only split discipline that
   *   survives distributed regeneration.
@@ -49,19 +50,21 @@ object TrainPrep {
   private val PackBlock = 256L
 
   /** Per-(lang, doc_id) token counts — the shared packing input. */
-  private def packTokens(s: SparkSession, d: String): DataFrame =
+  private[graft] def packTokens(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), col("lang"),
         graft.Tables.spaceTokenCount(normText(col("text"))).cast("long").as("n_tok"))
 
-  private def packReport(withCum: DataFrame): DataFrame =
+  private[graft] def packReport(withCum: DataFrame): DataFrame =
     withCum
       .withColumn("bin", expr(s"cum0 div $PackCapacity"))
       .groupBy(col("lang"), col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       .orderBy("lang", "bin")
 
-  private def packCum(toks: DataFrame, blocked: Boolean): DataFrame =
+  /** Exclusive running token sum per language: the two-pass PrefixScan
+    * when `blocked`, the single per-language window otherwise. */
+  private[graft] def packCum(toks: DataFrame, blocked: Boolean): DataFrame =
     if (blocked)
       graft.operators.PrefixScan.exclusive(
         toks,
@@ -81,19 +84,6 @@ object TrainPrep {
         agg = c => sum(c),
         merge = (l, o) => coalesce(l, lit(0L)) + coalesce(o, lit(0L)),
         out = "cum0")
-
-  /** The single-window packing form — one window per language serializes
-    * each language onto one task; below PrefixScan.CrossoverRows that costs
-    * less than the two-pass constant. AbBench A/B twin of [[packBlocked]].
-    */
-  private[graft] def packWindow(s: SparkSession, d: String): DataFrame =
-    packReport(packCum(packTokens(s, d), blocked = false))
-
-  /** The forced two-pass form — AbBench twin / Round8Spec row-identity
-    * target, and the branch the declared query takes above the crossover.
-    */
-  private[graft] def packBlocked(s: SparkSession, d: String): DataFrame =
-    packReport(packCum(packTokens(s, d), blocked = true))
 
   val queries: Map[String, Q] = Map(
     // Sequence packing: docs in doc_id order per language, bin = exclusive

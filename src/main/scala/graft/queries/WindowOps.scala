@@ -24,8 +24,9 @@ import graft.Tables.{events, rd, rdSql, t}
   *   query runs the DISTRIBUTED two-pass form ([[skylineTwoPass]]): price
   *   blocks from one broadcast min/max row, local prefix maxima per block
   *   (parallel), broadcast-merged per-block offsets (operators.PrefixScan).
-  *   The single-global-window form survives as [[skylineWindow]] — the
-  *   AbBench reference and the A/B twin the Round8Spec pins row-identical.
+  *   Below PrefixScan.CrossoverRows the key runs the single-global-window
+  *   form ([[skylineWindow]]) instead; Round8Spec pins the two
+  *   row-identical.
   */
 object WindowOps {
 
@@ -151,8 +152,7 @@ object WindowOps {
       // second pass of ev through the join; the distinct's
       // (user, cw, week_n) grouping is already clustered by hash(user_id),
       // so it adds no exchange either. Interleaved sf10 A/B 3.40 vs 4.78 s
-      // (1.41×), rows identical (per-user min is form-invariant). Twin:
-      // AbBench cohort_retention_aggjoin.
+      // (1.41×), rows identical (per-user min is form-invariant).
       val wU = Window.partitionBy("user_id")
       val act = ev
         .withColumn("first_ts", min(col("ts_us")).over(wU))
@@ -219,8 +219,8 @@ object WindowOps {
       // OOM cliff at 100 TB) and the med→MAD cascade re-scanned events.
       // c is integer cents, so the multiset collapses to a value-count
       // histogram: one scan, one histogram shuffle, exact-same IEEE
-      // interpolation (operators.HistogramMedian; buffered twin kept as
-      // AbBench anomaly_mad_bufmedian, row-identity pinned by Round18Spec).
+      // interpolation (operators.HistogramMedian; row-identity with the
+      // buffered form pinned by Round18Spec).
       val e = events(s, d)
         .select(col("event_id"), col("event_type"), col("value"),
           floor(col("value") * 100 + 0.5).as("c"))
@@ -337,8 +337,9 @@ object WindowOps {
   }
 
   /** The single-global-window skyline — O(n log n) algebra but ONE task
-    * sorts and scans everything. Kept as the AbBench reference / A/B twin
-    * of [[skylineTwoPass]]; not the declared query.
+    * sorts and scans everything: the declared query's branch below
+    * PrefixScan.CrossoverRows, and the reference [[skylineTwoPass]] must
+    * match.
     */
   private[graft] def skylineWindow(parts: DataFrame): DataFrame = {
     val w1 = Window.orderBy(col("p_retailprice").asc, col("p_size").desc)

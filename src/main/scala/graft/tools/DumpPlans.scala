@@ -2,41 +2,40 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump the formatted physical plan of every declared query to one file
-  * per key — the round-18 plan-audit corpus (plans/r18/<key>_<suffix>.txt).
-  * Session config mirrors graft.Bench (local[cpus], shuffle.partitions =
-  * cpus) so the dumped plans are the plans the bench actually runs.
-  * Verification infrastructure — NOT part of the engine.
+  * per key (`<outDir>/<key>_<suffix>.txt`). The session comes from
+  * [[graft.GraftSession.local]], the factory the benchmark harness uses,
+  * so the dumped plans are the plans the benchmark runs. A plan diff for
+  * a change is two dumps, one per checkout, compared after stripping the
+  * `#<n>` expression ids. Verification infrastructure — NOT part of the
+  * engine.
   *
-  * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> [keys]
-  *   keys: optional comma-separated subset (default: all declared queries)
+  * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> [suffix] [keys]
+  *   keys: optional comma-separated subset (default: all declared queries);
+  *         one key gives a single-query plan probe
+  *   SPARK_GRAFT_CPUS: local cores (default: all available)
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
+    val queries = graft.SparkEntry.queries
     val only = if (args.length > 3)
-      Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-dump-plans")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet else queries.keySet
+    val unknown = only -- queries.keySet
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(graft.GraftSession.local())(n => graft.GraftSession.local(n.toInt))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
     var nOk = 0
     var nErr = 0
-    // AbBench twins resolve too (round 19): plan-diff evidence for an A/B
-    // pair needs the reference form's plan, not just the declared key's
-    (graft.SparkEntry.queries ++ AbBench.variants).toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.fold(graft.SparkEntry.queries.keySet)(identity).contains(n) }
+    queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.contains(n) }
       .foreach { case (name, fn) =>
         try {
           val df  = fn(spark, sfDir)

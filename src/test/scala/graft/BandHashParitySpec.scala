@@ -31,7 +31,7 @@ class BandHashParitySpec extends SparkSpec {
       val rows = df
         .select(col("id"),
           kernel(col("sig")).as("k"),
-          graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
+          ReferenceForms.bandHashesExpr(col("sig"), bands, r).as("b"))
         .collect()
       rows.foreach { row =>
         assert(row.getSeq[Long](1) == row.getSeq[Long](2),
@@ -76,7 +76,7 @@ class BandHashParitySpec extends SparkSpec {
     forEachCodegenMode { mode =>
       val rows = df
         .select(kernel(col("sig")).as("k"),
-          graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
+          ReferenceForms.bandHashesExpr(col("sig"), bands, r).as("b"))
         .collect()
       rows.foreach(row => assert(row.getSeq[Long](0) == row.getSeq[Long](1), mode))
       assert(rows(0).getSeq[Long](0).distinct.size == 1, mode)
@@ -104,7 +104,7 @@ class BandHashParitySpec extends SparkSpec {
     val diff = docs
       .select(col("doc_id"),
         kernel(col("sig")).as("k"),
-        graft.operators.MinHashLsh.bandHashesExpr(col("sig"), bands, r).as("b"))
+        ReferenceForms.bandHashesExpr(col("sig"), bands, r).as("b"))
       .filter(not(col("k") <=> col("b")))
       .count()
     assert(diff == 0L)

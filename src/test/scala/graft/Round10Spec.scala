@@ -31,23 +31,26 @@ class Round10Spec extends SparkSpec {
   test("post-filter A/B twin is row-identical to the capped edge build") {
     val a = graft.queries.Graphs.copurchaseEdges(spark, megaBasketDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = graft.queries.Graphs.copurchaseEdgesPostFilter(spark, megaBasketDir)
+    val b = ReferenceForms.copurchaseEdgesPostFilter(spark, megaBasketDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a === b)
   }
 
   test("incremental coreset FPS is row-identical to the recompute twin") {
     val d = TestTables.dir(spark)
-    val a = graft.queries.Corpus.coresetFps(spark, d)
+    val a = graft.queries.Corpus.coresetFpsIncremental(spark, d)
       .collect().map(_.toSeq).toSeq
-    val b = graft.queries.Corpus.coresetFps(spark, d, recompute = true)
+    val b = ReferenceForms.coresetFpsRecompute(spark, d)
       .collect().map(_.toSeq).toSeq
     assert(a === b)
     assert(a.nonEmpty)
+    // the declared certificate-batched form elects the same rows
+    assert(graft.queries.Corpus.coresetFpsBatched(spark, d).collect().map(_.toSeq).toSeq === b)
   }
 
   test("incremental coreset FPS yields zero rows on a zero-row corpus") {
-    assert(graft.queries.Corpus.coresetFps(spark, TestTables.dirEmpty(spark)).count() === 0)
+    assert(graft.queries.Corpus.coresetFpsIncremental(spark, TestTables.dirEmpty(spark)).count() === 0)
+    assert(graft.queries.Corpus.coresetFpsBatched(spark, TestTables.dirEmpty(spark)).count() === 0)
   }
 
   test("certificate-batched coreset survives forced resyncs (cand < K)") {
@@ -58,21 +61,17 @@ class Round10Spec extends SparkSpec {
     val d = TestTables.dir(spark)
     val a = graft.queries.Corpus.coresetFpsBatched(spark, d, cand = 2)
       .collect().map(_.toSeq).toSeq
-    val b = graft.queries.Corpus.coresetFps(spark, d, recompute = true)
+    val b = ReferenceForms.coresetFpsRecompute(spark, d)
       .collect().map(_.toSeq).toSeq
     assert(a === b)
     assert(a.nonEmpty)
-    // and the incremental form stays pinned to the same rows too
-    val c = graft.queries.Corpus.coresetFps(spark, d, incremental = true)
-      .collect().map(_.toSeq).toSeq
-    assert(c === b)
   }
 
   test("cap is inert on TPC-H-shaped baskets (fixture max basket ≤ 7)") {
     val d = TestTables.dir(spark)
     val a = graft.queries.Graphs.copurchaseEdges(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = graft.queries.Graphs.copurchaseEdgesPostFilter(spark, d)
+    val b = ReferenceForms.copurchaseEdgesPostFilter(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a === b)
   }

@@ -45,7 +45,7 @@ class Round17Spec extends SparkSpec {
       AnnPq.adcScorer(q, books)(col("codes"), col("qid")).as("s")).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val viaUdf = coded.select(col("qid"), col("vec_id"),
-      AnnPq.adcScorerUdf(q, books)(col("codes"), col("qid")).as("s")).collect()
+      ReferenceForms.adcScorerUdf(q, books)(col("codes"), col("qid")).as("s")).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(native.nonEmpty && native.size === viaUdf.size)
     for ((k, s) <- native)
@@ -68,7 +68,7 @@ class Round17Spec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     val nat = pipeline(AnnPq.adcScorer(q, books))
-    val old = pipeline((c, qid) => AnnPq.adcScorerUdf(q, books)(c, qid))
+    val old = pipeline((c, qid) => ReferenceForms.adcScorerUdf(q, books)(c, qid))
     assert(nat.nonEmpty && nat === old)
   }
 
@@ -163,7 +163,7 @@ class Round17Spec extends SparkSpec {
     assert(AnnIvf.listsFor(4200000L) > AnnIvf.MaxLists)
   }
 
-  // ---- item 3: the by_residual A/B twin (equal code budget) ----
+  // ---- item 3: the direct-coded flat IVF-PQ at the family recall bar ----
 
   private def recallOfDf(df: org.apache.spark.sql.DataFrame,
                          exact: Map[Long, Set[Long]]): Double =
@@ -171,39 +171,16 @@ class Round17Spec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).map { case (qid, a) => (qid, a.map(_._2).toSet) })
 
-  test("by_residual twin: recall pair at sf0.01, equal code budget vs the shipped direct coding") {
+  test("IVF-PQ direct coding: recall@5 >= 0.8 at sf0.01 through the flat topK") {
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory)
     val sf = "/root/testdata/sf0.01"
     val (emb, q) = embQ(sf)
     val n = emb.count()
     val lists = math.min(AnnIvf.listsFor(n), AnnIvf.MaxLists)
     val rerank = math.max(128L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
-    val exact = top5("sim_knn_cosine", sf)
     val direct = recallOfDf(AnnIvfPq.topK(emb, q, 5, lists,
-      math.max(1, lists / 2), 8, 32, rerank), exact)
-    val residual = recallOfDf(AnnIvfPq.topKResidual(emb, q, 5, lists,
-      math.max(1, lists / 2), 8, 32, rerank), exact)
-    info(f"IVF-PQ recall@5 at sf0.01, equal 8x32 budget: direct=$direct%.3f residual=$residual%.3f")
+      math.max(1, lists / 2), 8, 32, rerank), top5("sim_knn_cosine", sf))
     assert(direct >= 0.8, f"direct flavor under the family bar: $direct%.3f")
-    // the twin records a measurement, not a bar — but a residual collapse
-    // below 0.5 would mean the decomposition itself is wrong, not a trade
-    assert(residual >= 0.5, f"residual flavor broken, not merely weaker: $residual%.3f")
-  }
-
-  test("by_residual twin: recall pair at the 4.2M rung, equal code budget") {
-    assume(new java.io.File("/tmp/emb4m/embeddings.parquet").exists)
-    val (emb, q) = embQ("/tmp/emb4m")
-    val n = emb.count()
-    val lists = math.min(AnnIvf.listsFor(n), AnnIvf.MaxLists) // both twins at the FLAT quantizer
-    val rerank = math.max(128L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
-    val exact = Emb4mExact.top5(spark)
-    val direct = recallOfDf(AnnIvfPq.topK(emb, q, 5, lists,
-      math.max(1, lists / 2), 16, 256, rerank), exact)
-    val residual = recallOfDf(AnnIvfPq.topKResidual(emb, q, 5, lists,
-      math.max(1, lists / 2), 16, 256, rerank), exact)
-    info(f"IVF-PQ recall@5 at 4.2M, equal 16x256 budget: direct=$direct%.3f residual=$residual%.3f")
-    assert(direct >= 0.8)
-    assert(residual >= 0.5)
   }
 
   // ---- item 7: the 16M-vector rung (next break point past 4.2M) ----

@@ -167,7 +167,7 @@ class Round18Spec extends SparkSpec {
     for (d <- Seq(TestTables.dir(spark), "/root/testdata/sf0.01")
          if new java.io.File(d).isDirectory) {
       val a = SparkEntry.queries("anomaly_mad")(spark, d).collect().map(_.toString)
-      val b = tools.AbBench.variants("anomaly_mad_bufmedian")(spark, d).collect().map(_.toString)
+      val b = ReferenceForms.anomalyMadBufferedMedian(spark, d).collect().map(_.toString)
       assert(a.toSeq === b.toSeq, s"anomaly_mad twin diverges at $d")
     }
   }
@@ -198,8 +198,8 @@ class Round18Spec extends SparkSpec {
     for (d <- Seq(TestTables.dir(spark), "/root/testdata/sf0.01")
          if new java.io.File(d).isDirectory) {
       val a = SparkEntry.queries("rank_bm25")(spark, d).collect().map(_.toString)
-      val b = tools.AbBench.variants("rank_bm25_recompute")(spark, d).collect().map(_.toString)
-      val c = tools.AbBench.variants("rank_bm25_slimckpt")(spark, d).collect().map(_.toString)
+      val b = ReferenceForms.rankBm25Recompute(spark, d).collect().map(_.toString)
+      val c = ReferenceForms.rankBm25SlimCheckpoint(spark, d).collect().map(_.toString)
       assert(a.toSeq === b.toSeq, s"bm25 recompute twin diverges at $d")
       assert(a.toSeq === c.toSeq, s"bm25 slimckpt twin diverges at $d")
     }
@@ -209,7 +209,7 @@ class Round18Spec extends SparkSpec {
     for (d <- Seq(TestTables.dir(spark), "/root/testdata/sf0.01")
          if new java.io.File(d).isDirectory) {
       val a = SparkEntry.queries("text_unigram_lm")(spark, d).collect().map(_.toString)
-      val b = tools.AbBench.variants("text_unigram_lm_litmap_fold")(spark, d).collect().map(_.toString)
+      val b = ReferenceForms.textUnigramLmLitmapFold(spark, d).collect().map(_.toString)
       assert(a.nonEmpty && a.toSeq === b.toSeq, s"unigram_lm kernel diverges at $d")
     }
   }

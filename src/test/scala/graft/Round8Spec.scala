@@ -71,8 +71,8 @@ class Round8Spec extends SparkSpec {
       .write.parquet(s"$d/documents.parquet")
     // force the two-pass branch — the null-safe offset join is what's under
     // test, and the auto-crossover would route 40 rows to the window form
-    val got = graft.tools.AbBench.variants("doc_pack_sequences_blocked")(spark, d).collect()
-    val want = graft.tools.AbBench.variants("doc_pack_sequences_window")(spark, d).collect()
+    val got = ReferenceForms.docPackSequences(spark, d, blocked = true).collect()
+    val want = ReferenceForms.docPackSequences(spark, d, blocked = false).collect()
     assert(got.map(_.toSeq).toSeq === want.map(_.toSeq).toSeq)
     assert(got.map(_.getLong(2)).sum === 40L) // every doc accounted for
   }
@@ -80,7 +80,9 @@ class Round8Spec extends SparkSpec {
   test("declared skyline_pareto equals the window form on the test part table") {
     val d = TestTables.dir(spark)
     val got = rows(SparkEntry.queries("skyline_pareto")(spark, d))
-    val want = rows(graft.tools.AbBench.variants("skyline_pareto_window")(spark, d))
+    val want = rows(graft.queries.WindowOps.skylineWindow(
+      Tables.t(spark, d, "part").select("p_partkey", "p_retailprice", "p_size"))
+      .orderBy("p_partkey"))
     assert(got.nonEmpty && got === want)
   }
 
@@ -100,23 +102,32 @@ class Round8Spec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("pack8").toString
     docs.toDF("doc_id", "lang", "text", "n_chars")
       .write.parquet(s"$d/documents.parquet")
-    val got = rows(graft.tools.AbBench.variants("doc_pack_sequences_blocked")(spark, d))
-    val want = rows(graft.tools.AbBench.variants("doc_pack_sequences_window")(spark, d))
+    val got = rows(ReferenceForms.docPackSequences(spark, d, blocked = true))
+    val want = rows(ReferenceForms.docPackSequences(spark, d, blocked = false))
     assert(got.size > 10 && got === want)
     // and the declared auto form agrees with whichever branch it picked
     assert(rows(SparkEntry.queries("doc_pack_sequences")(spark, d)) === want)
   }
 
   test("weighted-median forced branches are row-identical; auto agrees") {
-    val d = TestTables.dir(spark)
-    val win = rows(graft.tools.AbBench.variants("agg_weighted_median_window")(spark, d))
-    val blk = rows(graft.tools.AbBench.variants("agg_weighted_median_blocked")(spark, d))
-    val scan2 = rows(graft.tools.AbBench.variants("agg_weighted_median_scan2")(spark, d))
+    import spark.implicits._
+    // the test lineitem plus one NaN price in group R. NaN sorts after every
+    // value, so R's weight crosses half its total at 800 (3 + 8 ≥ 16/2); a
+    // blocked form that files NaN's weight before the finite values would
+    // cross at 200 instead
+    val d = java.nio.file.Files.createTempDirectory("wmednan8").toString
+    Tables.t(spark, TestTables.dir(spark), "lineitem")
+      .unionByName(Seq((13L, 1L, 1L, 1, 5.0, Double.NaN, 0.0, 0.0, "R", "O",
+        java.sql.Timestamp.valueOf("1995-08-01 00:00:00")))
+        .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+          "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
+          "l_shipdate"))
+      .write.parquet(s"$d/lineitem.parquet")
+    val win = rows(graft.queries.Analytics.weightedMedian(spark, d, force = Some(false)))
+    val blk = rows(graft.queries.Analytics.weightedMedian(spark, d, force = Some(true)))
     val auto = rows(SparkEntry.queries("agg_weighted_median")(spark, d))
+    assert(win.contains(Seq("R", 800.0)), s"window form: $win")
     assert(win.nonEmpty && win === blk && auto === win)
-    // the retired full two-pass scan twin stays row-identical to the
-    // round-15 median-block refinement that replaced it
-    assert(scan2 === blk)
   }
 
   // ---- shingle document-frequency caps (stop-shingle guards) ----

@@ -40,7 +40,7 @@ class Round9Spec extends SparkSpec {
     val d = TestTables.dir(spark)
     val got = SparkEntry.queries("dedup_embedding_ann")(spark, d)
       .collect().map(_.toSeq).toSeq
-    val want = graft.tools.AbBench.variants("dedup_embedding_ann_bruteforce")(spark, d)
+    val want = ReferenceForms.dedupEmbeddingAnnBruteForce(spark, d)
       .collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got === want)
   }

@@ -133,7 +133,7 @@ class ShingleSetHashSpec extends SparkSpec {
     val d = TestTables.dir(spark)
     val fusedOut = SparkEntry.queries("pipeline_corpus_clean")(spark, d)
       .collect().map(_.toSeq).toSeq
-    val composedOut = graft.tools.AbBench.variants("pipeline_corpus_clean_ngramfp")(spark, d)
+    val composedOut = ReferenceForms.corpusCleanComposedFingerprint(spark, d)
       .collect().map(_.toSeq).toSeq
     assert(fusedOut == composedOut, "fused fast path must keep the identical doc set")
   }

@@ -12,7 +12,7 @@ import graft.Tables.spaceTokenCount
   * pipeline_corpus_clean). The identity is structural: a single-space split
   * yields exactly (#0x20 bytes) + 1 elements for ANY input — "" → [""] → 1,
   * runs/leading/trailing spaces keep their empty tokens — and 0x20 never
-  * occurs inside a UTF-8 multibyte sequence. NULL → NULL, INT like size().
+  * occurs inside a UTF-8 multibyte sequence. INT and NULL rule like size().
   */
 class SpaceTokenCountSpec extends SparkSpec {
 
@@ -55,6 +55,32 @@ class SpaceTokenCountSpec extends SparkSpec {
     val rows = out.collect()
     assert(rows(0).isNullAt(1))
     assert(rows(1).getInt(1) == 2)
+  }
+
+  test("NULL row follows size()'s legacySizeOfNull rule under both settings") {
+    import spark.implicits._
+    // ANSI off lets spark.sql.legacy.sizeOfNull decide: size(NULL) is -1
+    // when it is on, NULL when it is off. Both sides are built inside the
+    // setting, where Size and the kernel capture it.
+    for (legacy <- Seq(true, false)) {
+      val settings = Seq("spark.sql.ansi.enabled" -> "false",
+        "spark.sql.legacy.sizeOfNull" -> legacy.toString)
+      val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try forEachCodegenMode { mode =>
+        val rows = spark.createDataset(Seq((1L, Option.empty[String]), (2L, Some("a b"))))
+          .toDF("id", "text")
+          .select(col("id"), spaceTokenCount(col("text")).as("k"),
+            size(split(col("text"), " ")).as("b"))
+          .orderBy("id").collect()
+        rows.foreach(r => assert(r.get(1) == r.get(2),
+          s"legacySizeOfNull=$legacy $mode: kernel=${r.get(1)} builtin=${r.get(2)}"))
+        assert(rows(0).get(2) == (if (legacy) -1 else null), s"builtin NULL row, $mode")
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("generated strings: parity on arbitrary space/char mixes") {
