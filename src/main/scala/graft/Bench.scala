@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -9,11 +9,7 @@ object Bench {
     // "regressions" of 2–4× vanished with zero code change) — median-of-3
     // in one session keeps numbers reproducible within ~±10%.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm the executor pool, codegen pipeline, AND the vectorized parquet
     // read path once, so the first timed query doesn't absorb session startup
@@ -102,6 +98,13 @@ object Bench {
     val MidEvery = 30
     val midProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     var sinceProbe = 0
+    // classes Janino compiled so far in this JVM (one histogram update per
+    // generated-code cache miss). Reps 2..n of a key re-run plans whose
+    // classes rep 1 compiled, so a non-zero count there means the cache
+    // evicted them (GraftSession.CodegenCacheEntries) or a plan's generated
+    // source differs from one run to the next.
+    def compiledSoFar: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val sweepStart = compiledSoFar
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -111,7 +114,9 @@ object Bench {
         var r = 0
         var ok = 0
         var broken = false
+        var compiledAtRep2 = -1L
         while (r < reps && !broken) {
+          if (r == 1) compiledAtRep2 = compiledSoFar
           val t0 = System.nanoTime()
           try {
             drain(fn(spark, sfDir))
@@ -132,19 +137,27 @@ object Bench {
         // -1.0 marks "no successful rep" (valid JSON, unlike NaN, and never
         // confusable with a real duration); `failed` carries the reason
         val median = if (ok == 0) -1.0 else times.take(ok).sorted.apply((ok - 1) / 2)
-        (name, median, ok)
+        val compiles = if (compiledAtRep2 < 0) 0L else compiledSoFar - compiledAtRep2
+        (name, median, ok, compiles)
       }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    // every class the sweep compiled: with no eviction, the catalog's
+    // working set in the generated-code cache
+    val classesCompiled = compiledSoFar - sweepStart
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-query successful-rep counts: a query that failed after k good reps
     // still shows its k-rep median above, but reps_ok < reps flags it
-    val repsOk = results.map { case (k, _, ok) => s"\"" + k + "\":" + ok }
+    val repsOk = results.map { case (k, _, ok, _) => s"\"" + k + "\":" + ok }
       .mkString("{", ",", "}")
+    // per-query classes compiled during reps 2..n (0 when reps = 1)
+    val compiles = results.map { case (k, _, _, c) => s"\"" + k + "\":" + c }
+      .mkString("{", ",", "}")
+    val compilesTotal = results.map(_._4).sum
     // `total` sums FULLY-successful queries only — a query in `failed` is
     // excluded even when it has a partial-rep median, so totals stay
     // comparable across runs whose failure sets differ mid-query
     val failedSet = failed.toSet
-    val total = results.collect { case (k, v, _) if v >= 0 && !failedSet(k) => v }.sum
+    val total = results.collect { case (k, v, _, _) if v >= 0 && !failedSet(k) => v }.sum
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // The GUARD statistic is the PRE-sweep median only: it runs right after
@@ -200,7 +213,7 @@ object Bench {
     // schema 2: `value` sums FULLY-successful queries only (schema 1 — rounds
     // ≤6 — included partial-rep medians of queries that later failed), so
     // cross-round total comparisons can detect the semantics change
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","schema":2,"queries":$qs,"reps":$reps,"reps_ok":$repsOk,"failed":$failedJson,"ambient":$ambientJson,"sink":"$sink","sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","schema":2,"queries":$qs,"reps":$reps,"reps_ok":$repsOk,"compiles":$compiles,"classes_compiled":$classesCompiled,"failed":$failedJson,"ambient":$ambientJson,"sink":"$sink","sf":"$sfDir"}"""
     println(fullLine)
     // durable copy of the COMPLETE per-query record: the driver keeps only a
     // 2 KB stdout tail, so without this file regression hunts are blind below
@@ -233,11 +246,11 @@ object Bench {
     // the line most likely to be read, and a broken query must be visible
     // in `failed`, not dressed as a normal top-10 timing
     val top = results
-      .filter { case (k, v, _) => v >= 0 && !failedSet(k) }
+      .filter { case (k, v, _, _) => v >= 0 && !failedSet(k) }
       .sortBy(-_._2).take(10)
-      .map { case (k, v, _) => s"\"" + k + "\":" + ms3(v) }
+      .map { case (k, v, _, _) => s"\"" + k + "\":" + ms3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"summary","total_sec":${ms3(total)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"schema":2,"reps":$reps,"ambient":$ambientJson,"sink":"$sink","sf":"$sfDir","top10_slowest":$top}""")
+    println(s"""{"metric":"summary","total_sec":${ms3(total)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"schema":2,"reps":$reps,"compiles_total":$compilesTotal,"classes_compiled":$classesCompiled,"ambient":$ambientJson,"sink":"$sink","sf":"$sfDir","top10_slowest":$top}""")
     spark.stop()
   }
 }

@@ -8,6 +8,14 @@ class ApiSpec extends SparkSpec {
   test("GraftSession.configure pins the engine configuration") {
     val b = GraftSession.configure(
       org.apache.spark.sql.SparkSession.builder().master("local[1]"), parallelism = 3)
+    // a static conf cannot be read back from a session that reuses the shared
+    // context (the builder's static options are dropped there), so read the
+    // builder's own options
+    val options = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.Map[String, String]]
+    assert(options.get("spark.sql.codegen.cache.maxEntries") ===
+      Some(GraftSession.CodegenCacheEntries.toString))
+    assert(options.get("spark.sql.codegen.useIdInClassName") === Some("false"))
     // reuse the shared session's context: getOrCreate returns a session whose
     // *session-level* confs reflect the builder options
     val s = b.getOrCreate()

@@ -43,6 +43,9 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
+      // static: sizes the JVM-wide generated-code cache on the first codegen
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
