@@ -9,6 +9,9 @@ object Bench {
     // "regressions" of 2–4× vanished with zero code change) — median-of-3
     // in one session keeps numbers reproducible within ~±10%.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
+    // optional comma-separated subset for local hot-spot iteration; the
+    // driver never sets it, so the full suite is the default
+    val only = SparkEntry.selectKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm the executor pool, codegen pipeline, AND the vectorized parquet
@@ -65,11 +68,6 @@ object Bench {
     // sorted for run-to-run comparability (Map iteration order is
     // hash-dependent and would reshuffle warm-cache effects across rounds)
     var failed = List.empty[String]
-    // optional comma-separated subset for local hot-spot iteration; the
-    // driver never sets it, so the full suite is the default
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     // ---- sink mode (round 17, VERDICT r16 item 6) ----
     // `count` (default, CANONICAL across every round — do not change it for
     // comparability) lets Catalyst prune columns the count doesn't need,
@@ -106,7 +104,7 @@ object Bench {
     def compiledSoFar: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val sweepStart = compiledSoFar
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => only(n) }
       .map { case (name, fn) =>
         if (sinceProbe >= MidEvery) { midProbes += sentinelProbe(); sinceProbe = 0 }
         sinceProbe += 1

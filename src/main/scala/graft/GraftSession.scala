@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Canonical session factory — the engine's recommended configuration in one
-  * place, so library users get the same semantics the verification gates run
-  * under.
+/** The engine's one session factory (the only `SparkSession.builder` in
+  * main): library users, tests, fixture tools and the benchmark run under
+  * the semantics the verification gates run under.
   *
   * What it pins and why:
   *  - UTC session timezone: event-time parity (all oracle checks assume it);
@@ -25,7 +25,10 @@ import org.apache.spark.sql.SparkSession
   *    source and compiles again (the `corpus_curation` MinHash shingle
   *    projection ran as stage 17 in one pass and 13 in a later one). Plans
   *    and their `*(n)` ids are unchanged; only the generated class's name is.
-  *  - the graft extension functions (ppdb_split) registered.
+  *  - the graft extension ([[graft.plans.GraftExtensions]]), the only way
+  *    a session gets the SQL functions `ppdb_split`, `dot_product` and
+  *    `l2_norm`, the optimizer rule [[graft.plans.VecRewrite]] and the
+  *    planner strategy [[graft.plans.AsOfJoinStrategy]].
   */
 object GraftSession {
 

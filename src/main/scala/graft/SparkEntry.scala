@@ -30,6 +30,18 @@ object SparkEntry {
       Graphs.queries ++ TextSim.queries ++ TrainPrep.queries ++
       Corpus.queries ++ Curation.queries ++ Selection.queries
 
+  /** The keys named in the comma-separated `spec` (`SPARK_GRAFT_ONLY`,
+    * DumpPlans' keys argument), or every key when it names none. Throws
+    * IllegalArgumentException listing every name that is not a key.
+    */
+  def selectKeys(spec: Option[String]): Set[String] = {
+    val all = queries.keySet
+    val named = spec.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = named -- all
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (named.isEmpty) all else named
+  }
+
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted on purpose for the eleven
     * approximate operators (`agg_approx_distinct`, `agg_approx_percentile`,

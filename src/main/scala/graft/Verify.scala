@@ -6,19 +6,21 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // optional comma-separated subset for fast local iteration (the driver
+    // sets no filter and always dumps the full surface)
+    val keys = SparkEntry.selectKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for fast local iteration (the driver
-    // sets no filter and always dumps the full surface)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def keep(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    var nOk = 0
+    var failed = List.empty[String]
+    SparkEntry.queries.filter(kv => keys(kv._1)).foreach { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        nOk += 1
+      } catch { case e: Throwable =>
+        failed ::= name
+        System.err.println(s"[verify] $name failed: ${describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -33,9 +35,17 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => keys(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"[verify] $nOk ok, ${failed.size} failed: ${failed.sorted.mkString(",")}")
+  }
+
+  /** Class and message of `e` and, when it differs, of its root cause. */
+  private[graft] def describe(e: Throwable): String = {
+    val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+    if (root eq e) e.toString
+    else s"$e (root cause ${root.getClass.getName}: ${root.getMessage})"
   }
 }

@@ -1,23 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.functions._
 
-/** Vector math over array<double> columns.
-  *
-  * Two implementations of the dot product:
-  *  - `dot`: higher-order `aggregate(zip_with(...))` — general, but Spark
-  *    evaluates lambda functions interpretively (one closure call per
-  *    element), which dominates all-pairs similarity joins.
+import graft.plans.{DotProduct, L2Norm}
+
+/** Vector math over array<double> columns, in three tiers that give
+  * bit-identical results (the same left-associated IEEE sum; the fold's
+  * `0.0 + x` seed is exact):
+  *  - `dot`/`l2`: higher-order `aggregate(zip_with(...))` — general, but
+  *    Spark evaluates lambda functions interpretively (one closure call per
+  *    element), which dominates all-pairs similarity joins. In a session
+  *    built by [[graft.GraftSession]], the [[graft.plans.VecRewrite]] rule
+  *    turns these folds into the lenient native kernels at optimization.
   *  - `dotUnrolled(dim)`: a fixed `dim`-term codegen'd arithmetic expression
   *    (`a[1]*b[1] + … + a[dim]*b[dim]`) — no lambdas, no intermediate
-  *    array, stays inside whole-stage codegen. Bitwise-identical result:
-  *    both are the same left-associated IEEE sum (the fold's `0.0 + x` seed
-  *    is exact). Measured ~5× faster on the 2M-pair embedding join.
-  *
-  * The unrolled form requires vectors of length ≥ `dim` (`element_at`
-  * throws under ANSI on out-of-bounds; `try_element_at` was measured and
-  * rejected — its TryEval wrapper cost more than the lambda it replaced).
+  *    array, stays inside whole-stage codegen. Measured ~5× faster than the
+  *    lambda form on the 2M-pair embedding join. It requires vectors of
+  *    length ≥ `dim` (`element_at` throws under ANSI on out-of-bounds;
+  *    `try_element_at` was measured and rejected — its TryEval wrapper cost
+  *    more than the lambda it replaced).
+  *  - `dotNative`/`l2Native`: the native codegen'd kernels
+  *    ([[graft.plans.VecExprs]]), the preferred tier.
   */
 object Vec {
 
@@ -32,23 +36,15 @@ object Vec {
       .map(i => expr(s"element_at($a, $i) * element_at($b, $i)"))
       .reduce(_ + _)
 
-  def l2Unrolled(a: String, dim: Int): Column =
-    sqrt(dotUnrolled(a, a, dim))
-
-  /** Native codegen'd kernels (graft.plans.VecExprs) — the preferred tier:
-    * one call inside whole-stage codegen, any dimension, no per-element
-    * closures, no intermediate arrays; bit-identical to the tiers above
-    * (same left-fold IEEE order). Idempotently registers the extension
-    * functions on the session first, so they work under sessions created
-    * without `spark.sql.extensions` (the driver's Verify/Bench).
+  /** [[graft.plans.DotProduct]] as a Column: one call inside whole-stage
+    * codegen, any dimension, no per-element closures, no intermediate
+    * arrays. Built directly, so it needs no function registration in the
+    * session (SQL text reaches the same kernel as `dot_product`).
     */
-  def dotNative(spark: org.apache.spark.sql.SparkSession, a: String, b: String): Column = {
-    graft.plans.GraftExtensions.register(spark)
-    call_function("dot_product", expr(a), expr(b))
-  }
+  def dotNative(a: String, b: String): Column =
+    GraftSqlShim.column(DotProduct(GraftSqlShim.expression(expr(a)), GraftSqlShim.expression(expr(b))))
 
-  def l2Native(spark: org.apache.spark.sql.SparkSession, a: String): Column = {
-    graft.plans.GraftExtensions.register(spark)
-    call_function("l2_norm", expr(a))
-  }
+  /** [[graft.plans.L2Norm]] as a Column (SQL: `l2_norm`). */
+  def l2Native(a: String): Column =
+    GraftSqlShim.column(L2Norm(GraftSqlShim.expression(expr(a))))
 }

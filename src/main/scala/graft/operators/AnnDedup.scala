@@ -107,9 +107,8 @@ object AnnDedup {
     val pruned = bucketed.join(ok, Seq("bucket"), "left_semi")
     val a = pruned.select(col("bucket"), col("id").as("a_id"), col("vec").as("va"))
     val b = pruned.select(col("bucket"), col("id").as("b_id"), col("vec").as("vb"))
-    val dot = graft.functions.Vec.dotNative(s, "va", "vb")
-    val (na, nb) = (graft.functions.Vec.l2Native(s, "va"),
-      graft.functions.Vec.l2Native(s, "vb"))
+    val dot = graft.functions.Vec.dotNative("va", "vb")
+    val (na, nb) = (graft.functions.Vec.l2Native("va"), graft.functions.Vec.l2Native("vb"))
     // The cosine runs in the SAME stage as the bucket join (whole-stage
     // codegen, zero extra shuffle) and the (a_id, b_id) dedup runs after
     // the threshold filter on slim 24-byte rows. The pre-cosine dedup this

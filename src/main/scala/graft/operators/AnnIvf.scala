@@ -270,10 +270,9 @@ object AnnIvf {
     * lambda fold), per-query top-k.
     */
   private def candidateTopK(assigned: DataFrame, probed: DataFrame, k: Int): DataFrame = {
-    val s = assigned.sparkSession
-    val dot = graft.functions.Vec.dotNative(s, "vec", "qvec")
-    val nv = graft.functions.Vec.l2Native(s, "vec")
-    val nq = graft.functions.Vec.l2Native(s, "qvec")
+    val dot = graft.functions.Vec.dotNative("vec", "qvec")
+    val nv = graft.functions.Vec.l2Native("vec")
+    val nq = graft.functions.Vec.l2Native("qvec")
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     assigned
       .join(broadcast(probed), col("list_id") === col("probe") && col("vec_id") =!= col("qid"))

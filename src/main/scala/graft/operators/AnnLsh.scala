@@ -112,9 +112,9 @@ object AnnLsh {
 
     // native codegen'd kernels (graft.plans.VecExprs) — bit-identical to
     // the lambda fold, no per-element closure interpretation on candidates
-    val dot = graft.functions.Vec.dotNative(emb.sparkSession, "vec", "qvec")
-    val nv = graft.functions.Vec.l2Native(emb.sparkSession, "vec")
-    val nq = graft.functions.Vec.l2Native(emb.sparkSession, "qvec")
+    val dot = graft.functions.Vec.dotNative("vec", "qvec")
+    val nv = graft.functions.Vec.l2Native("vec")
+    val nq = graft.functions.Vec.l2Native("qvec")
 
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     bucketed

@@ -210,10 +210,9 @@ object AnnPq {
     */
   private[graft] def exactRerank(
       cands: DataFrame, emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val dot = graft.functions.Vec.dotNative(spark, "vec", "qvec")
-    val nv = graft.functions.Vec.l2Native(spark, "vec")
-    val nq = graft.functions.Vec.l2Native(spark, "qvec")
+    val dot = graft.functions.Vec.dotNative("vec", "qvec")
+    val nv = graft.functions.Vec.l2Native("vec")
+    val nq = graft.functions.Vec.l2Native("qvec")
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     cands
       .join(emb, "vec_id")

@@ -181,7 +181,9 @@ object AsOfJoinNative {
 
   /** Backward inner as-of: for each left row, the right row with the
     * greatest `rightTime` (strictly) before `leftTime` on the same keys.
-    * Column names across the two sides must be disjoint.
+    * Column names across the two sides must be disjoint. The session must
+    * carry the graft extension ([[graft.GraftSession.configure]]), whose
+    * [[AsOfJoinStrategy]] plans the node; without it this throws at once.
     */
   def join(
       left: DataFrame,
@@ -192,7 +194,11 @@ object AsOfJoinNative {
       strict: Boolean = true,
       tiebreak: Seq[String] = Nil): DataFrame = {
     val spark: SparkSession = left.sparkSession
-    GraftExtensions.register(spark) // idempotent: strategy must be in the planner
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      throw new IllegalStateException(
+        "AsOfJoinNative.join needs AsOfJoinStrategy in the session's planner: build the " +
+          "session through graft.GraftSession.configure (spark.sql.extensions=" +
+          s"${classOf[GraftExtensions].getName})")
     val shared = left.columns.toSet.intersect(right.columns.toSet)
     require(shared.isEmpty, s"left/right column names must be disjoint; shared: $shared")
     val lPlan = GraftSqlShim.analyzed(left)

@@ -1,19 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension wiring (SURVEY.md §3.2 / §4): injects the custom
-  * expressions into Catalyst's function registry.
-  *
-  * Two entry points:
-  *  - declarative: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *    (the production path — every session on the cluster gets the
-  *    functions at analyzer time);
-  *  - imperative: `GraftExtensions.register(spark)` for sessions the caller
-  *    doesn't control the conf of (the driver's Verify/Bench sessions).
+/** Engine extension wiring (SURVEY.md §3.2 / §4). Its one entry point is
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * [[graft.GraftSession.configure]] sets; a session built that way gets the
+  * SQL functions `ppdb_split`, `dot_product` and `l2_norm`, the optimizer
+  * rule [[VecRewrite]] and the planner strategy [[AsOfJoinStrategy]]. There
+  * is no imperative registration: a session built otherwise has none.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -50,21 +46,4 @@ object GraftExtensions {
           "l2_norm",
           "l2_norm(a) - codegen'd double-array L2 norm (left-fold IEEE order)"),
         (args: Seq[Expression]) => L2Norm(args.head)))
-
-  /** Idempotent imperative registration into an existing session: the
-    * function registry plus the [[VecRewrite]] auto-vectorization rule
-    * (via `experimental.extraOptimizations`, the imperative counterpart of
-    * `injectOptimizerRule`).
-    */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(VecRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ VecRewrite
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
 }

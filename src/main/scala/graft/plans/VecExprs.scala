@@ -15,6 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `ArrayData`, stays inside whole-stage codegen as ONE call, works for any
   * dimension (unrolled hardcodes it), and allocates nothing (zip_with
   * materializes an intermediate array per row).
+  * DataFrame code builds the kernels directly (`Vec.dotNative`/`l2Native`);
+  * SQL calls `dot_product`/`l2_norm`, and [[VecRewrite]] rewrites lambda
+  * folds — those two come with the graft extension (`GraftSession`).
   *
   * Parity contract: the sums are the same left-associated IEEE fold as both
   * the lambda (`aggregate(..., (acc, v) -> acc + v)`) and the unrolled tree

@@ -171,10 +171,7 @@ object ScaleOps {
     // mitigation — the 100 TB regime) never leak into other queries' plans.
     // Oracle identical to join_bloom: a runtime filter must not change a row.
     "join_bloom_native" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val s = bloomSession(s0)
       val sel = t(s, d, "orders")
         .filter(col("o_totalprice") > 450000)
         .select(col("o_orderkey"))
@@ -207,6 +204,22 @@ object ScaleOps {
   )
 
   private val norm = normTextSql("text")
+
+  private val bloomSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `join_bloom_native`'s session, one per parent and reused: a new
+    * session brings its own class loader, part of Spark's generated-code
+    * cache key, so a session per call would compile its classes again.
+    */
+  private def bloomSession(parent: SparkSession): SparkSession = bloomSessions.synchronized {
+    bloomSessions.computeIfAbsent(parent, p => {
+      val s = p.newSession()
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s
+    })
+  }
 
   /** Shared body of `dedup_components` and `dedup_cluster_rep`. */
   private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{normText, normTextSql, rd, t}
+import graft.functions.Vec
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.11, north star
   * BASELINE.json:6): deduplication, similarity search, multimodal join
@@ -15,16 +16,6 @@ import graft.Tables.{normText, normTextSql, rd, t}
 object TextPipeline {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** dot/l2 over array<double> columns: the native codegen'd kernel
-    * expressions (graft.plans.VecExprs via Vec.dotNative/l2Native) —
-    * bit-identical to the lambda and unrolled tiers, one call inside
-    * whole-stage codegen, dimension-agnostic.
-    */
-  private def dot(s: SparkSession, a: String, b: String) =
-    graft.functions.Vec.dotNative(s, a, b)
-
-  private def l2(s: SparkSession, a: String) = graft.functions.Vec.l2Native(s, a)
 
   val queries: Map[String, Q] = Map(
     // Exact dedup: hash-groupBy on the md5 of normalized text. One shuffle of
@@ -95,12 +86,12 @@ object TextPipeline {
       // float ops, fewer evaluations
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-        .withColumn("nrm", l2(s, "vec"))
+        .withColumn("nrm", Vec.l2Native("vec"))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("vec").as("qvec"), col("nrm").as("qnrm"))
       val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vec_id"))
       emb.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("cos", dot(s, "vec", "qvec") / (col("nrm") * col("qnrm")))
+        .withColumn("cos", Vec.dotNative("vec", "qvec") / (col("nrm") * col("qnrm")))
         .withColumn("cos_sim", rd(col("cos"), 4))
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= 5)
@@ -115,7 +106,7 @@ object TextPipeline {
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"), col("label"))
       docs.join(emb, col("doc_id") === col("vec_id"))
-        .withColumn("l2n", l2(s, "vec"))
+        .withColumn("l2n", Vec.l2Native("vec"))
         .groupBy(col("label"))
         .agg(
           count(lit(1)).as("n"),

@@ -22,11 +22,7 @@ object DumpPlans {
     val sfDir  = args(0)
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
-    val queries = graft.SparkEntry.queries
-    val only = if (args.length > 3)
-      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet else queries.keySet
-    val unknown = only -- queries.keySet
-    require(unknown.isEmpty, s"unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
+    val only = graft.SparkEntry.selectKeys(args.lift(3))
     val spark = sys.env.get("SPARK_GRAFT_CPUS")
       .fold(graft.GraftSession.local())(n => graft.GraftSession.local(n.toInt))
     spark.sparkContext.setLogLevel("WARN")
@@ -34,7 +30,7 @@ object DumpPlans {
     val mode = ExplainMode.fromString("formatted")
     var nOk = 0
     var nErr = 0
-    queries.toSeq.sortBy(_._1)
+    graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.contains(n) }
       .foreach { case (name, fn) =>
         try {

@@ -4,8 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.Binary
 
 /** One-shot generator for the committed audio fixture
@@ -28,11 +26,7 @@ object GenAudioFixture {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else Binary.AudioFixturePath
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
 
     val rates = Seq(8000, 16000, 22050, 44100)

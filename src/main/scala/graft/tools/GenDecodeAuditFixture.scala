@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.Binary
 
 /** One-shot generator for the committed corrupt-decode-audit fixture
@@ -50,11 +48,7 @@ object GenDecodeAuditFixture {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
 
     val good = (0 until 6).map(b => (b.toLong, png(baseImage(b))))

@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.Binary
 
 /** One-shot generator for the committed multimodal fixture
@@ -37,11 +35,7 @@ object GenMediaFixture {
     System.setProperty("java.awt.headless", "true")
     val out = if (args.nonEmpty) args(0) else Binary.MediaFixturePath
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
 
     val rows = (0L until 64L).map { id =>

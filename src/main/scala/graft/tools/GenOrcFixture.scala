@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed ORC fixture (`fixtures/docs_orc/`)
   * and its row-identical parquet twin (`fixtures/docs_orc_twin.parquet`).
   *
@@ -22,11 +20,7 @@ object GenOrcFixture {
   private val Langs = Array("en", "de", "fr", "es", "it")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
 
     val rows = (0L until 100L).map { id =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds an sf-N *scaling proxy* from the driver's sf0.1 tables: N
@@ -23,12 +23,9 @@ object GenScaleProxy {
     val out = if (args.length > 1) args(1) else "/tmp/sf1proxy"
     val copies = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // pinned at 32 whatever the core count (the factory sizes it to the cores)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the SKEWED co-purchase variant of a lineitem table for the
@@ -28,11 +27,9 @@ object GenSkewGraph {
     val hubs = if (args.length > 2) args(2).toInt else 10
     val pct = if (args.length > 3) args(3).toInt else 1 // % of rows remapped
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // pinned at 32 whatever the core count (the factory sizes it to the cores)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("WARN")
 
     spark.read.parquet(s"$src/lineitem.parquet")

@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.Binary
 
 /** One-shot generator for the committed multi-frame fixture
@@ -33,11 +31,7 @@ object GenVideoFixture {
     System.setProperty("java.awt.headless", "true")
     val out = if (args.nonEmpty) args(0) else Binary.VideoFixturePath
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     import spark.implicits._
 
     val rows = (0L until 24L).map { id =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe for the verbatim-SQL dual surface (VERDICT r10 item 7):
   * runs EVERY oracle string through spark.sql over temp views of the sf-dir
   * tables and classifies each key PASS (row-identical to the DataFrame
@@ -11,20 +9,14 @@ import org.apache.spark.sql.SparkSession
 object ProbeSqlPortable {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val keys = graft.SparkEntry.selectKeys(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",
       "part", "documents", "embeddings", "events")
       .foreach(n => graft.Tables.t(spark, sfDir, n).createOrReplaceTempView(n))
-    val skip = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     graft.SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (k, sql) =>
-      if (skip.forall(_.contains(k))) {
+      if (keys(k)) {
         val res = try {
           val sqlRows = spark.sql(sql).collect().toSeq
           val dfq = graft.SparkEntry.queries(k)(spark, sfDir)

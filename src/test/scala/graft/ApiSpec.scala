@@ -1,8 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.ppdb.Ppdb
 
-/** Library API surface: session factory config and feature widening. */
+/** Library API surface: session factory config, its single-builder guard and
+  * feature widening.
+  */
 class ApiSpec extends SparkSpec {
 
   test("GraftSession.configure pins the engine configuration") {
@@ -28,6 +32,26 @@ class ApiSpec extends SparkSpec {
       s.conf.set("spark.sql.shuffle.partitions", "2")
       s.conf.set("spark.sql.session.timeZone", "UTC")
     }
+  }
+
+  test("GraftSession is the only session builder in main, and nothing registers the extension") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root missing")
+    val files = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    def sitesOf(needle: String): Seq[String] = files.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala
+      lines.zipWithIndex.collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
+    }
+    val builders = sitesOf("SparkSession.builder")
+    assert(builders.nonEmpty && builders.forall(_.contains("/graft/GraftSession.scala:")),
+      builders.mkString("\n"))
+    // split so this file does not match its own search
+    val registers = sitesOf("GraftExtensions" + ".register")
+    assert(registers.isEmpty, registers.mkString("\n"))
   }
 
   test("withFeatureColumns widens map keys into typed double columns") {

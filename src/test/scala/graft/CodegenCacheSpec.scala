@@ -16,11 +16,12 @@ class CodegenCacheSpec extends SparkSpec {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
+  private val sf = "/root/testdata/sf0.01"
+
   private def drain(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   test("a second pass over the relational_analytics keys at sf0.01 compiles no class") {
-    val sf = "/root/testdata/sf0.01"
     assume(new java.io.File(sf).isDirectory)
     val keys = Seq("join_salted", "join_asof_skew", "join_range_sessions",
       "agg_weighted_median", "window_streak", "sink_partitioned")
@@ -28,6 +29,16 @@ class CodegenCacheSpec extends SparkSpec {
     val first = compiledBy(pass())
     val second = compiledBy(pass())
     assert(second === 0L, s"first pass compiled $first classes, the second $second")
+  }
+
+  test("join_bloom_native's second call at sf0.01 compiles no class") {
+    // the query runs in a session of its own (isolated thresholds); a new
+    // session per call would bring a new class loader and compile again
+    assume(new java.io.File(sf).isDirectory)
+    def call(): Unit = drain(SparkEntry.queries("join_bloom_native")(spark, sf))
+    val first = compiledBy(call())
+    val second = compiledBy(call())
+    assert(second === 0L, s"first call compiled $first classes, the second $second")
   }
 
   test("a pipeline planned under a new codegen stage id reuses its compiled class") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 import graft.ppdb.Ppdb
 
 /** The projection parser's two byte-level kernels against the builtin
@@ -35,7 +34,6 @@ class PpdbSplitLineSpec extends SparkSpec {
     "😀 ||| 𝄞 ||| ∑ |||  ||| x")
 
   private def checkSplit(mode: String): Unit = {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = lines.toDF("value")
     inCodegenMode(mode) {
@@ -54,7 +52,6 @@ class PpdbSplitLineSpec extends SparkSpec {
   }
 
   test("null input yields null, not a crash") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq[Option[String]](None, Some("a ||| b")).toDF("value")
     forEachCodegenMode { mode =>

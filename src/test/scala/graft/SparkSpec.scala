@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session startup dominates test wall-clock otherwise).
+  * session startup dominates test wall-clock otherwise), built by the
+  * engine's factory so every spec runs under the shipped configuration,
+  * graft extension included, from its first query.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -19,12 +21,14 @@ trait SparkSpec extends AnyFunSuite {
     Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach(mode => inCodegenMode(mode)(body(mode)))
 
   /** Runs `body` in one of the two modes of [[forEachCodegenMode]]. */
-  def inCodegenMode(mode: String)(body: => Unit): Unit = {
-    val settings = Seq(
+  def inCodegenMode(mode: String)(body: => Unit): Unit =
+    withConf(
       "spark.sql.codegen.factoryMode" -> mode,
       "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString,
-      "spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      "spark.sql.optimizer.excludedRules" -> SparkSpec.ConvertToLocalRelation)(body)
+
+  /** Runs `body` with the given session confs set, then restores them. */
+  def withConf(settings: (String, String)*)(body: => Unit): Unit = {
     val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -36,18 +40,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  val ConvertToLocalRelation = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static: sizes the JVM-wide generated-code cache on the first codegen
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(2)
     s.sparkContext.setLogLevel("WARN")
     s
   }

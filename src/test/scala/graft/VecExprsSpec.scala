@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
+import graft.plans.VecRewrite
 
 /** Native vector expressions (graft.plans.VecExprs): bit-equality across
   * all three implementation tiers, type checking, dimension guard, codegen.
@@ -20,19 +21,30 @@ class VecExprsSpec extends SparkSpec {
   }
 
   test("native dot/l2 are bit-identical to lambda and unrolled tiers") {
-    val out = vecs.select(
-      Vec.dotNative(spark, "a", "b").as("dn"),
-      Vec.dot("a", "b").as("dl"),
-      Vec.dotUnrolled("a", "b", 64).as("du"),
-      Vec.l2Native(spark, "a").as("ln"),
-      Vec.l2("a").as("ll")).collect()
-    out.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), "native vs lambda dot")
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(2)), "native vs unrolled dot")
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(3)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(4)), "native vs lambda l2")
+    // The session carries VecRewrite, which would turn the lambda reference
+    // columns into the lenient native kernels and compare a kernel with
+    // itself. Exclude it, and keep the local input from being folded at
+    // planning time, so the lambdas themselves run.
+    withConf("spark.sql.optimizer.excludedRules" ->
+      Seq(SparkSpec.ConvertToLocalRelation, VecRewrite.ruleName).mkString(",")) {
+      val df = vecs.select(
+        Vec.dotNative("a", "b").as("dn"),
+        Vec.dot("a", "b").as("dl"),
+        Vec.dotUnrolled("a", "b", 64).as("du"),
+        Vec.l2Native("a").as("ln"),
+        Vec.l2("a").as("ll"))
+      val opt = df.queryExecution.optimizedPlan.toString
+      assert(opt.contains("zip_with") && opt.contains("transform"),
+        s"lambda reference columns must reach the plan:\n$opt")
+      assert(!opt.contains("_lenient"), s"lambda reference columns were rewritten:\n$opt")
+      df.collect().foreach { r =>
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(1)), "native vs lambda dot")
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(2)), "native vs unrolled dot")
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(3)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(4)), "native vs lambda l2")
+      }
     }
   }
 
@@ -43,7 +55,6 @@ class VecExprsSpec extends SparkSpec {
     "array(CAST(id AS DOUBLE) * 0.5, 3.0, CAST(id AS DOUBLE) - 7.0) AS b")
 
   test("VecRewrite auto-vectorizes lambda dot products and l2 norms") {
-    graft.plans.GraftExtensions.register(spark)
     val df = rangeVecs.selectExpr(
       "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) AS d",
       "sqrt(aggregate(transform(a, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)) AS n")
@@ -51,7 +62,7 @@ class VecExprsSpec extends SparkSpec {
     assert(opt.contains("dot_product"), s"dot lambda should rewrite:\n$opt")
     assert(opt.contains("l2_norm"), s"l2 lambda should rewrite:\n$opt")
     // rewritten results are bit-identical to the native calls
-    val direct = rangeVecs.select(Vec.dotNative(spark, "a", "b"), Vec.l2Native(spark, "a")).collect()
+    val direct = rangeVecs.select(Vec.dotNative("a", "b"), Vec.l2Native("a")).collect()
     df.collect().zip(direct).foreach { case (r, e) =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(e.getDouble(0)))
@@ -61,7 +72,6 @@ class VecExprsSpec extends SparkSpec {
   }
 
   test("VecRewrite is observationally transparent on ragged pairs (NULL, not an error)") {
-    graft.plans.GraftExtensions.register(spark)
     // ragged arrays: the lambda form null-pads to NULL; the rewritten plan
     // must produce the identical NULL, never the strict kernel's exception
     val df = spark.range(4).selectExpr(
@@ -74,7 +84,6 @@ class VecExprsSpec extends SparkSpec {
   }
 
   test("VecRewrite leaves non-matching folds alone") {
-    graft.plans.GraftExtensions.register(spark)
     // max-fold, not a sum — must NOT become a dot product
     val df = rangeVecs.selectExpr(
       "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> greatest(acc, v)) AS m")
@@ -84,7 +93,6 @@ class VecExprsSpec extends SparkSpec {
   }
 
   test("dot_product rejects non-double-array inputs at analysis time") {
-    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((1, "x")).toDF("i", "s")
     val e = intercept[Exception] {
@@ -97,7 +105,7 @@ class VecExprsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
     val e = intercept[Exception] {
-      df.select(Vec.dotNative(spark, "a", "b")).collect()
+      df.select(Vec.dotNative("a", "b")).collect()
     }
     assert(e.getMessage.contains("dimension mismatch") ||
       e.getCause != null && e.getCause.getMessage.contains("dimension mismatch"))
@@ -108,15 +116,15 @@ class VecExprsSpec extends SparkSpec {
     val df = Seq((Some(Array(3.0, 4.0)), Option.empty[Array[Double]]))
       .toDF("a", "b")
     val out = df.select(
-      Vec.l2Native(spark, "a").as("la"),
-      Vec.dotNative(spark, "a", "b").as("d")).collect()(0)
+      Vec.l2Native("a").as("la"),
+      Vec.dotNative("a", "b").as("d")).collect()(0)
     assert(out.getDouble(0) === 5.0)
     assert(out.isNullAt(1))
     // LocalTableScan evaluates literals without codegen — use a range scan
     // to prove the expression joins a WholeStageCodegen stage
     val plan = spark.range(4)
       .select(array(col("id").cast("double"), lit(1.0)).as("a"))
-      .select(Vec.dotNative(spark, "a", "a"))
+      .select(Vec.dotNative("a", "a"))
       .queryExecution.executedPlan.toString
     // "*(1)" marks operators fused into whole-stage-codegen stage 1
     assert(plan.contains("*(1) Project [dot_product"),
