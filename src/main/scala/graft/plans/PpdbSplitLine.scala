@@ -5,10 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass PPDB release-line splitter: the field split of the projection
-  * parser ([[graft.ppdb.Ppdb.parse]]).
+/** One-pass PPDB release-line splitter: the field split of both PPDB
+  * parsers, the projection form ([[graft.ppdb.Ppdb.parse]]) and the
+  * `format("ppdb")` reader.
   *
   * One forward byte scan for ` ||| ` over the line's UTF-8 bytes; each field
   * is a [[UTF8String.fromAddress]] view into the line, so nothing is
@@ -56,6 +58,12 @@ object PpdbSplitLine {
   /** Fields of `line` split on ` ||| `, as views into its bytes. Shared by
     * interpreted eval and the generated code (a static call keeps the
     * codegen'd method tiny).
+    *
+    * A Horspool scan: it tests the last byte of the 5-byte window first and
+    * skips by how far that byte is from the end of the delimiter (5 for a
+    * byte the delimiter does not hold, so most text advances 5 bytes per
+    * test). No match is ever skipped, so the matches are the leftmost
+    * non-overlapping ones.
     */
   def split(line: UTF8String): ArrayData = {
     val base = line.getBaseObject
@@ -64,21 +72,25 @@ object PpdbSplitLine {
     var parts = new Array[Any](8)
     var k = 0
     var start = 0
-    var i = 0
+    def byteAt(i: Int): Byte = Platform.getByte(base, off + i)
+    var i = 0 // start of the window
     while (i <= n - 5) {
-      if (line.getByte(i) == ' ' && line.getByte(i + 1) == '|' &&
-          line.getByte(i + 2) == '|' && line.getByte(i + 3) == '|' &&
-          line.getByte(i + 4) == ' ') {
-        if (k == parts.length) {
-          val grown = new Array[Any](k * 2)
-          System.arraycopy(parts, 0, grown, 0, k)
-          parts = grown
-        }
-        parts(k) = UTF8String.fromAddress(base, off + start, i - start)
-        k += 1
-        i += 5
-        start = i
-      } else i += 1
+      val last = byteAt(i + 4)
+      if (last == ' ') {
+        if (byteAt(i) == ' ' && byteAt(i + 1) == '|' && byteAt(i + 2) == '|' &&
+            byteAt(i + 3) == '|') {
+          if (k == parts.length) {
+            val grown = new Array[Any](k * 2)
+            System.arraycopy(parts, 0, grown, 0, k)
+            parts = grown
+          }
+          parts(k) = UTF8String.fromAddress(base, off + start, i - start)
+          k += 1
+          i += 5
+          start = i
+        } else i += 4 // this space may open the next delimiter
+      } else if (last == '|') i += 1
+      else i += 5
     }
     val out = new Array[Any](k + 1)
     System.arraycopy(parts, 0, out, 0, k)
@@ -99,8 +111,10 @@ object PpdbSplitLine {
   * This is `element_at(str_to_map(features, " ", "="), "PPDB2.0Score")` on
   * every features field without a repeated key, without building the map
   * (a regex split and a `String` round-trip per token). Where the map
-  * throws `DUPLICATED_MAP_KEY`, the last score token wins, the rule the
-  * `format("ppdb")` reader applies (`PpdbDataSource.scoreToken`).
+  * throws `DUPLICATED_MAP_KEY`, the last score token wins. The
+  * `format("ppdb")` reader takes its score, its pushed score thresholds and
+  * its pushed score aggregates from [[PpdbScoreToken.token]] too, so both
+  * parsers apply this one rule.
   */
 case class PpdbScoreToken(child: Expression) extends UnaryExpression {
 
@@ -129,20 +143,35 @@ object PpdbScoreToken {
 
   private val Key = "PPDB2.0Score=".getBytes("UTF-8")
 
+  /** How far the window moves left when its first byte is `b` and no key
+    * starts there: to the next position where `b` could be a key byte (the
+    * key's length for a byte it does not hold).
+    */
+  private val Shift: Array[Int] = {
+    val t = Array.fill(256)(Key.length)
+    for (j <- Key.length - 1 to 1 by -1) t(Key(j) & 0xff) = j
+    t
+  }
+
   /** Backward scan: the first boundary-aligned key met from the end is the
     * last one in the field. The value is a view into `feat`'s bytes.
+    *
+    * A Horspool scan run backward: it tests the first byte of the window
+    * and skips by [[Shift]], so a byte the key does not hold moves the
+    * window by the key's length. No key occurrence is ever skipped.
     */
   def token(feat: UTF8String): UTF8String = {
     val n = feat.numBytes()
-    var i = n - Key.length
+    var i = n - Key.length // start of the window
     while (i >= 0) {
-      if ((i == 0 || feat.getByte(i - 1) == ' ') && keyAt(feat, i)) {
+      val b = feat.getByte(i)
+      if (b == Key(0) && (i == 0 || feat.getByte(i - 1) == ' ') && keyAt(feat, i)) {
         val s = i + Key.length
         var e = s
         while (e < n && feat.getByte(e) != ' ') e += 1
         return UTF8String.fromAddress(feat.getBaseObject, feat.getBaseOffset + s, e - s)
       }
-      i -= 1
+      i -= Shift(b & 0xff)
     }
     null
   }

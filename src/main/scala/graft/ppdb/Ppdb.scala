@@ -51,9 +51,9 @@ object Ppdb {
     * legacy number parsing are unchanged.
     *
     * A features field that repeats the score key takes its LAST score
-    * token, as `format("ppdb")` does. [[rules]] and [[withFeatureColumns]]
-    * build the full map and fail with `DUPLICATED_MAP_KEY` on a repeated
-    * key.
+    * token; `format("ppdb")` reads with the same two kernels. [[rules]]
+    * and [[withFeatureColumns]] build the full map and fail with
+    * `DUPLICATED_MAP_KEY` on a repeated key.
     */
   def parse(spark: SparkSession, path: String = FixturePath): DataFrame =
     spark.read.text(path).select(ruleColumns(Fields: _*): _*)
@@ -117,12 +117,10 @@ object Ppdb {
     }
   }
 
-  /** DuckDB-side twin of [[parse]] as a CTE named `ppdb` (oracle recipe
-    * validated: 1-byte sentinel delimiter that never occurs, so each line
-    * lands whole in `column0`; gzip decompression is automatic).
-    */
-  /** DuckDB twin of `parse` over any path/glob (read_csv accepts globs, so
-    * the multi-file pack oracles through the same CTE).
+  /** DuckDB twin of [[parse]] as a CTE named `ppdb`, over any path or glob
+    * (read_csv accepts globs, so the multi-file pack oracles through the
+    * same CTE). A 1-byte sentinel delimiter that never occurs puts each
+    * line whole in `column0`; gzip decompression is automatic.
     */
   def oracleCte(path: String): String =
     s"""WITH ppdb AS (

@@ -21,10 +21,6 @@ import graft.ppdb.Ppdb
   */
 object PpdbRelease {
 
-  /** Parse a release file/glob straight from gzip (one task per file). */
-  def read(spark: SparkSession, pathOrGlob: String): DataFrame =
-    Ppdb.parse(spark, pathOrGlob)
-
   /** Ingest: gzip → parse → repartition(phrase) → sorted zstd parquet. */
   def ingest(
       spark: SparkSession,

@@ -6,10 +6,12 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -20,13 +22,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.plans.{PpdbScoreToken, PpdbSplitLine}
+
 /** First-class `spark.read.format("ppdb")` — a DataSourceV2 reader for the
   * reference's native release format (NAACL-2013 ` ||| `-delimited gzipped
   * text), registered via META-INF/services so the short name resolves.
   *
-  * Why a custom source when `spark.read.text` + `split` already parses it
-  * (graft.ppdb.Ppdb.parse)? Two engine capabilities only the DSv2 seam can
-  * express:
+  * It parses with the projection parser's byte kernels
+  * ([[graft.plans.PpdbSplitLine]] for the fields,
+  * [[graft.plans.PpdbScoreToken]] for the score), so the delimiter and the
+  * last-wins score rule live in one place and both parsers return the same
+  * bytes for every field. Why a custom source when `spark.read.text` plus
+  * those kernels already parses it (graft.ppdb.Ppdb.parse)? Two engine
+  * capabilities only the DSv2 seam can express:
   *
   *  - **Column pruning INSIDE the parser** (SupportsPushDownRequiredColumns):
   *    `SELECT phrase` over a release never tokenizes features or alignment —
@@ -102,70 +110,24 @@ object PpdbDataSource {
     files
   }
 
-  /** One-pass ` ||| ` splitter (no regex): the custom-parser path the
-    * SURVEY reserved for the native seam.
+  /** The `ppdb2score` of a split line: [[PpdbScoreToken.token]] of field 4
+    * parsed with `Double.valueOf`, as the features map parses its values;
+    * null when the field or the token is absent or the token does not parse
+    * (a literal `NaN` stays NaN). One producer for the column, the pushed
+    * thresholds and the pushed aggregates: a duplicate key is last-wins
+    * (round 13, ADVICE r12), and a pushed predicate or aggregate must agree
+    * with the column the same line would materialize.
     */
-  private[ppdb] def splitFields(line: String): Array[String] = {
-    val out = new ArrayBuffer[String](6)
-    var start = 0
-    var i = line.indexOf(" ||| ")
-    while (i >= 0) {
-      out += line.substring(start, i)
-      start = i + 5
-      i = line.indexOf(" ||| ", start)
+  private[ppdb] def score(fields: ArrayData): java.lang.Double =
+    if (fields.numElements() <= 3) null
+    else {
+      val t = PpdbScoreToken.token(fields.getUTF8String(3))
+      if (t == null) null else parseDouble(t.toString)
     }
-    out += line.substring(start)
-    out.toArray
-  }
 
-  /** The value text of the LAST boundary-aligned `PPDB2.0Score=` token in
-    * the raw features field, up to the next space; null if there is none.
-    * One scan, no tokenization. [[graft.plans.PpdbScoreToken]] applies the
-    * same rule to `UTF8String` bytes in the projection parser; this reader
-    * holds `String`s, and encoding each field to run the byte kernel took
-    * twice as long (~50 vs ~25 ms per 200k benchmark lines, 4-core host). The
-    * two are checked against each other on one table in
-    * `PpdbSplitLineSpec`.
-    *
-    * LAST occurrence, not first (round 13, ADVICE r12): a duplicate key is
-    * last-wins, and a pushed predicate or aggregate must agree with the
-    * column the same line would materialize.
-    */
-  private[ppdb] def scoreToken(feat: String): String = {
-    val key = "PPDB2.0Score="
-    var best = -1
-    var i = feat.indexOf(key)
-    while (i >= 0) {
-      if (i == 0 || feat.charAt(i - 1) == ' ') best = i
-      i = feat.indexOf(key, i + 1)
-    }
-    if (best < 0) return null
-    val start = best + key.length
-    var end = feat.indexOf(' ', start)
-    if (end < 0) end = feat.length
-    feat.substring(start, end)
-  }
-
-  /** The score column's value: `Double.valueOf` of [[scoreToken]], as the
-    * features map parses its values; null when the token is absent or
-    * unparseable (a literal `NaN` stays NaN).
-    */
-  private[ppdb] def scoreValue(feat: String): java.lang.Double = {
-    val t = scoreToken(feat)
-    if (t == null) null
-    else try java.lang.Double.valueOf(t)
+  private[ppdb] def parseDouble(s: String): java.lang.Double =
+    try java.lang.Double.valueOf(s)
     catch { case _: NumberFormatException => null }
-  }
-
-  /** [[scoreValue]] unboxed, for pushed filters and aggregates: NaN ⇔ the
-    * token is absent or unparseable, i.e. the column's null (the one
-    * residual divergence is a literal `PPDB2.0Score=NaN`, which the column
-    * keeps as a non-null NaN; no release writes NaN scores).
-    */
-  private[ppdb] def scanScore(feat: String): Double = {
-    val v = scoreValue(feat)
-    if (v == null) Double.NaN else v.doubleValue
-  }
 }
 
 class PpdbTable(path: String) extends Table with SupportsRead {
@@ -221,14 +183,15 @@ class PpdbScanBuilder(path: String)
     ok
   }
   /** String equality on the four raw text fields evaluates EXACTLY at the
-    * line level (one substring compare, before any column materializes), so
-    * supported filters return no residual — `SELECT … WHERE phrase = 'x'`
-    * over a release never tokenizes features for non-matching rules.
+    * line level (one byte compare of the field against the value's UTF-8,
+    * before any column materializes), so supported filters return no
+    * residual — `SELECT … WHERE phrase = 'x'` over a release never
+    * tokenizes features for non-matching rules.
     *
     * Score-threshold comparisons on `ppdb2score` (round 12) push the same
     * way: the reader scans field 4 for the single `PPDB2.0Score=` token
-    * (one indexOf + one Double.parseDouble) and drops sub-threshold lines
-    * BEFORE tokenizing the full feature map — the defining scan of the
+    * (one [[PpdbScoreToken.token]] + one Double.valueOf) and drops
+    * sub-threshold lines BEFORE tokenizing the full feature map — the defining scan of the
     * S→XXXL release ladder (every smaller pack is a score-pruned prefix)
     * pays one token parse per skipped rule instead of the whole parse.
     * A rule with no score token fails every comparison, exactly matching
@@ -278,7 +241,7 @@ class PpdbScan(
     required: StructType,
     pushed: Array[Filter],
     pushedAgg: Option[
-      org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None)
+      org.apache.spark.sql.connector.expressions.aggregate.Aggregation])
   extends Scan with Batch {
   import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
   // with a pushed aggregation the scan's output IS the aggregate row —
@@ -322,7 +285,7 @@ class PpdbReaderFactory(
     pushed: Array[Filter],
     conf: SerializableConfiguration,
     pushedAgg: Option[
-      org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None)
+      org.apache.spark.sql.connector.expressions.aggregate.Aggregation])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[PpdbInputPartition].file
@@ -362,11 +325,9 @@ class PpdbAggPartitionReader(
       while (inner.next()) {
         n += 1
         if (needScore) {
-          val f = inner.currentFields
-          val s =
-            if (f.length > 3 && f(3) != null) PpdbDataSource.scanScore(f(3))
-            else Double.NaN
-          if (!s.isNaN) {
+          val s = PpdbDataSource.score(inner.currentFields)
+          // a NaN score counts as absent, as a pushed threshold treats it
+          if (s != null && !s.isNaN) {
             nScore += 1
             if (mn.isNaN || s < mn) mn = s
             if (mx.isNaN || s > mx) mx = s
@@ -391,10 +352,17 @@ class PpdbAggPartitionReader(
 
 /** Streams one release file; materializes ONLY the pruned columns — a
   * `SELECT phrase` never tokenizes features or alignment.
+  *
+  * Lines come off Hadoop's `LineReader` as bytes (LF, CR or CRLF ends a
+  * line, as in the `LineRecordReader` behind `spark.read.text`). Each line
+  * is copied once, because the reader reuses its buffer, and split with
+  * [[PpdbSplitLine.split]]; the text columns are views into that copy, so
+  * they hold the file's bytes, invalid UTF-8 included. Only the features
+  * map and the alignment decode their field to `String`.
   */
 class PpdbPartitionReader(
-    file: String, required: StructType, pushed: Array[Filter] = Array.empty,
-    conf: SerializableConfiguration = new SerializableConfiguration(new Configuration()))
+    file: String, required: StructType, pushed: Array[Filter],
+    conf: SerializableConfiguration)
   extends PartitionReader[InternalRow] {
 
   private val in = {
@@ -402,21 +370,21 @@ class PpdbPartitionReader(
     val raw = p.getFileSystem(conf.value).open(p)
     val stream: java.io.InputStream =
       if (file.endsWith(".gz")) new GZIPInputStream(raw) else raw
-    new java.io.BufferedReader(new java.io.InputStreamReader(stream, "UTF-8"))
+    new LineReader(stream, conf.value)
   }
-  private var fields: Array[String] = _
+  private val line = new Text
+  private var fields: ArrayData = _
+  private var score: java.lang.Double = _
 
-  /** The raw split fields of the row `next()` just accepted — the
-    * aggregate reader's per-line hook (it never calls [[get]]).
+  /** The split fields of the row `next()` just accepted — the aggregate
+    * reader's per-line hook (it never calls [[get]]).
     */
-  private[ppdb] def currentFields: Array[String] = fields
+  private[ppdb] def currentFields: ArrayData = fields
 
   // resolve required ordinals + pushed-filter ordinals once per partition
   private val fieldNames = required.fields.map(_.name)
-  private val needsFeatures = fieldNames.contains("features")
-  private val needsScore = fieldNames.contains("ppdb2score")
-  private val lineFilters: Array[(Int, String)] = pushed.collect {
-    case EqualTo(a, v: String) => PpdbScanBuilder.Pushable(a) -> v
+  private val lineFilters: Array[(Int, UTF8String)] = pushed.collect {
+    case EqualTo(a, v: String) => PpdbScanBuilder.Pushable(a) -> UTF8String.fromString(v)
   }
   // pushed IsNotNull on a text field: the line must carry that many fields
   private val notNullFields: Array[Int] = pushed.collect {
@@ -438,72 +406,58 @@ class PpdbPartitionReader(
       val t = PpdbScanBuilder.asDouble(v); (s: Double) => s <= t
     case IsNotNull("ppdb2score") => (_: Double) => true
   }
-
-  private def scanScore(feat: String): Double = PpdbDataSource.scanScore(feat)
+  private val needsScore = scoreFilters.nonEmpty || fieldNames.contains("ppdb2score")
 
   override def next(): Boolean = {
-    var line = in.readLine()
-    while (line != null) {
-      val f = PpdbDataSource.splitFields(line)
+    while (in.readLine(line) > 0) {
+      val f = PpdbSplitLine.split(
+        UTF8String.fromBytes(java.util.Arrays.copyOf(line.getBytes, line.getLength)))
+      val n = f.numElements()
       // pushed equality evaluates here, BEFORE any column materializes —
       // a filtered scan splits each line but tokenizes nothing else
-      var pass = lineFilters.forall { case (i, v) => i < f.length && f(i) == v } &&
-        notNullFields.forall(_ < f.length)
-      if (pass && scoreFilters.nonEmpty) {
-        val s = if (f.length > 3 && f(3) != null) scanScore(f(3)) else Double.NaN
-        // NaN (absent/unparseable score) fails every comparison — SQL null
-        pass = !s.isNaN && scoreFilters.forall(_(s))
-      }
-      if (pass) { fields = f; return true }
-      line = in.readLine()
+      var pass = lineFilters.forall { case (i, v) => i < n && f.getUTF8String(i) == v } &&
+        notNullFields.forall(_ < n)
+      val s = if (pass && needsScore) PpdbDataSource.score(f) else null
+      // an absent or unparseable score (the column's null) fails every
+      // comparison, as in SQL; so does a literal NaN, which the column keeps
+      // as NaN (no release writes one)
+      if (pass && scoreFilters.nonEmpty) pass = s != null && !s.isNaN && scoreFilters.forall(_(s))
+      if (pass) { fields = f; score = s; return true }
     }
     false
   }
 
+  /** The features map's keys and values: `k=v` tokens split on single
+    * spaces, a token without a key skipped, a value that does not parse
+    * null.
+    */
+  private def featureMap(feat: String): ArrayBasedMapData = {
+    val ks = new ArrayBuffer[Any]
+    val vs = new ArrayBuffer[Any]
+    feat.split(' ').foreach { t =>
+      val eq = t.indexOf('=')
+      if (eq > 0) {
+        ks += UTF8String.fromString(t.substring(0, eq))
+        vs += PpdbDataSource.parseDouble(t.substring(eq + 1))
+      }
+    }
+    new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
+  }
+
   override def get(): InternalRow = {
     val f = fields
-    def field(i: Int): String = if (i < f.length) f(i) else null
-
-    // the score comes from the single-token scan; the full tokenization
-    // runs only when the features map itself is required
-    val score: Any =
-      if (needsScore && field(3) != null) PpdbDataSource.scoreValue(field(3)) else null
-    var featKeys: Array[UTF8String] = null
-    var featVals: Array[Any] = null
-    if (needsFeatures && field(3) != null) {
-      val toks = field(3).split(' ')
-      val ks = new ArrayBuffer[UTF8String](toks.length)
-      val vs = new ArrayBuffer[Any](toks.length)
-      var i = 0
-      while (i < toks.length) {
-        val eq = toks(i).indexOf('=')
-        if (eq > 0) {
-          val k = toks(i).substring(0, eq)
-          val v =
-            try java.lang.Double.valueOf(toks(i).substring(eq + 1))
-            catch { case _: NumberFormatException => null }
-          ks += UTF8String.fromString(k)
-          vs += v
-        }
-        i += 1
-      }
-      featKeys = ks.toArray
-      featVals = vs.toArray
-    }
+    def field(i: Int): UTF8String = if (i < f.numElements()) f.getUTF8String(i) else null
 
     val values: Array[Any] = fieldNames.map {
-      case "lhs" => UTF8String.fromString(field(0))
-      case "phrase" => UTF8String.fromString(field(1))
-      case "paraphrase" => UTF8String.fromString(field(2))
+      case "lhs" => field(0)
+      case "phrase" => field(1)
+      case "paraphrase" => field(2)
       case "features" =>
-        if (featKeys == null) null
-        else new ArrayBasedMapData(
-          new GenericArrayData(featKeys.asInstanceOf[Array[Any]]),
-          new GenericArrayData(featVals))
+        if (field(3) == null) null else featureMap(field(3).toString)
       case "alignment" =>
         if (field(4) == null) null
         else {
-          val pairs = field(4).split(' ').flatMap { p =>
+          val pairs = field(4).toString.split(' ').flatMap { p =>
             val dash = p.indexOf('-')
             if (dash <= 0) None
             else
@@ -513,7 +467,7 @@ class PpdbPartitionReader(
           }
           new GenericArrayData(pairs.asInstanceOf[Array[Any]])
         }
-      case "entailment" => UTF8String.fromString(field(5))
+      case "entailment" => field(5)
       case "ppdb2score" => score
       case other => throw new IllegalArgumentException(s"unknown column $other")
     }

@@ -34,7 +34,8 @@ class ApiSpec extends SparkSpec {
     }
   }
 
-  test("GraftSession is the only session builder in main, and nothing registers the extension") {
+  /** `file:line` of every line in `src/main/scala` that contains `needle`. */
+  private def mainSitesOf(needle: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root missing")
     val files = {
@@ -42,16 +43,30 @@ class ApiSpec extends SparkSpec {
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     }
-    def sitesOf(needle: String): Seq[String] = files.flatMap { f =>
+    files.flatMap { f =>
       val lines = java.nio.file.Files.readAllLines(f).asScala
       lines.zipWithIndex.collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
     }
-    val builders = sitesOf("SparkSession.builder")
+  }
+
+  test("GraftSession is the only session builder in main, and nothing registers the extension") {
+    val builders = mainSitesOf("SparkSession.builder")
     assert(builders.nonEmpty && builders.forall(_.contains("/graft/GraftSession.scala:")),
       builders.mkString("\n"))
     // split so this file does not match its own search
-    val registers = sitesOf("GraftExtensions" + ".register")
+    val registers = mainSitesOf("GraftExtensions" + ".register")
     assert(registers.isEmpty, registers.mkString("\n"))
+  }
+
+  test("the PPDB format rule is written down once, in the byte kernels") {
+    // the delimiter and the score key as Scala string literals belong to
+    // plans/PpdbSplitLine.scala alone: a parser that needs them calls the
+    // kernels there (the DuckDB oracle SQL quotes them in SQL)
+    Seq("\" ||| \"", "\"PPDB2.0Score=\"").foreach { needle =>
+      val sites = mainSitesOf(needle)
+      assert(sites.forall(_.contains("/graft/plans/PpdbSplitLine.scala:")),
+        s"$needle:\n${sites.mkString("\n")}")
+    }
   }
 
   test("withFeatureColumns widens map keys into typed double columns") {

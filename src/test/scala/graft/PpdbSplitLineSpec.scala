@@ -2,13 +2,20 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
+import graft.plans.{PpdbScoreToken, PpdbSplitLine}
 import graft.ppdb.Ppdb
 
-/** The projection parser's two byte-level kernels against the builtin
+/** The PPDB parsers' two byte-level kernels against the builtin
   * expressions they replace, under both `CODEGEN_ONLY` and `NO_CODEGEN`:
   * `ppdb_split` against the regex `split(value, " \\|\\|\\| ")`, and the
-  * score token against `element_at(str_to_map(f, " ", "="), "PPDB2.0Score")`.
+  * score token against `element_at(str_to_map(f, " ", "="), "PPDB2.0Score")`;
+  * and their skip scans against the byte-at-a-time forms in
+  * [[ReferenceForms]].
   */
 class PpdbSplitLineSpec extends SparkSpec {
 
@@ -213,6 +220,33 @@ class PpdbSplitLineSpec extends SparkSpec {
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       assert(chain.exists(t => String.valueOf(t.getMessage).contains("DUPLICATED_MAP_KEY")),
         s"$mode: expected DUPLICATED_MAP_KEY, got $e")
+    }
+  }
+
+  /** Strings built from the pieces the skip scans branch on: delimiter and
+    * key fragments, their bytes alone, digits, a multibyte char and an
+    * invalid byte.
+    */
+  private val fragments: Gen[Array[Byte]] = Gen.oneOf(
+    Seq(" ", "|", "||", " ||| ", "P", "PPDB2.0Score=", "PPDB2.0Score", "=",
+      "0", "7", "3.5", "-1e2", "x", "é").map(_.getBytes("UTF-8")) :+ Array(0xff.toByte))
+
+  test("skip-scan kernels equal their byte-at-a-time reference forms on random strings") {
+    // the kernel reads a view into a larger buffer whose padding holds a
+    // delimiter and a key, so a read past either end of the view shows
+    val pad = " ||| PPDB2.0Score=9 ".getBytes("UTF-8")
+    val gen = Gen.choose(0, 40).flatMap(Gen.listOfN(_, fragments))
+    def bytes(u: UTF8String): Seq[Byte] = Option(u).map(_.getBytes.toSeq).orNull
+    (0 until 20000).foreach { n =>
+      val body = gen.pureApply(Gen.Parameters.default, Seed(n.toLong)).toArray.flatten
+      val buf = pad ++ body ++ pad
+      val line = UTF8String.fromBytes(buf, pad.length, body.length)
+      val got = PpdbSplitLine.split(line).toArray[UTF8String](StringType)
+      val want = ReferenceForms.ppdbSplitBytewise(line).toArray[UTF8String](StringType)
+      val hex = body.map(b => f"$b%02x").mkString
+      assert(got.toSeq.map(bytes) === want.toSeq.map(bytes), s"split of $hex")
+      assert(bytes(PpdbScoreToken.token(line)) ===
+        bytes(ReferenceForms.ppdbScoreTokenBytewise(line)), s"score token of $hex")
     }
   }
 

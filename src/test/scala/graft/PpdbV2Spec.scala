@@ -251,6 +251,65 @@ class PpdbV2Spec extends SparkSpec {
     }
   }
 
+  test("format(\"ppdb\") and parse return the same bytes in every text field") {
+    // hex() of a string column is its UTF-8 bytes: an invalid byte must
+    // pass through both parsers as-is, and both must end lines at LF, CR
+    // and CRLF alike
+    val dir = java.nio.file.Files.createTempDirectory("ppdbv2bytes").toString
+    val invalid = s"$dir/invalid.txt"
+    java.nio.file.Files.write(java.nio.file.Paths.get(invalid),
+      "[X] ||| a".getBytes("UTF-8") ++ Array(0xff.toByte) ++
+        (" b ||| c ||| PPDB2.0Score=1.5 ||| 0-0 ||| Equivalence\n" +
+          "[X] ||| d ||| e ||| PPDB2.0Score=2.5 ||| 0-0 ||| Equivalence\n").getBytes("UTF-8"))
+    val endings = s"$dir/endings.txt"
+    java.nio.file.Files.write(java.nio.file.Paths.get(endings),
+      ("[X] ||| c ||| d ||| PPDB2.0Score=2.0 ||| 0-0 ||| Equivalence\r\n" +
+        "[Y] ||| e ||| f ||| p=1 ||| 0-0 ||| Independent\r" +
+        "[Z] ||| g ||| h ||| PPDB2.0Score=3.0 ||| 1-1 ||| ReverseEntailment\n")
+        .getBytes("UTF-8"))
+    val text = Seq("lhs", "phrase", "paraphrase", "entailment")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(text.map(c => hex(col(c))) :+ col("ppdb2score"): _*)
+        .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    Seq(invalid -> 2, endings -> 3).foreach { case (f, n) =>
+      val got = rows(spark.read.format("ppdb").load(f))
+      assert(got.length === n, f)
+      assert(got === rows(Ppdb.parse(spark, f)), f)
+    }
+    assert(spark.read.format("ppdb").load(endings).select("phrase").collect()
+      .map(_.getString(0)).toSeq === Seq("c", "e", "g"))
+    assert(rows(spark.read.format("ppdb").load(invalid)).head.startsWith("5B585D|61FF2062|"))
+  }
+
+  test("reader rows that outlive their row are copies") {
+    // the line reader refills one buffer for every line, so a field kept
+    // without a copy would read a later line's bytes
+    val glob = s"${Ppdb.MultiFixtureDir}/*.txt.gz"
+    def lists(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
+      val r = df.agg(sort_array(collect_list(col("phrase"))),
+        sort_array(collect_list(col("entailment")))).collect().head
+      Seq(r.getSeq[String](0), r.getSeq[String](1))
+    }
+    val expected = lists(Ppdb.parse(spark, glob))
+    assert(expected.head.length === 12)
+    assert(lists(spark.read.format("ppdb").load(glob)) === expected)
+    // Spark copies each row before it asks for the next, so hold the
+    // reader's own rows too, every one kept until the files are read
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val schema = StructType(Seq(StructField("phrase", StringType),
+      StructField("entailment", StringType)))
+    val files = new java.io.File(Ppdb.MultiFixtureDir).listFiles
+      .map(_.getPath).filter(_.endsWith(".txt.gz")).toSeq
+    val held = files.flatMap { f =>
+      val r = new graft.sources.ppdb.PpdbPartitionReader(f, schema, Array.empty, conf)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get()).toList
+      finally r.close()
+    }
+    assert(Seq(0, 1).map(i => held.map(_.getUTF8String(i).toString).sorted) === expected)
+  }
+
   test("malformed lines null-fill missing fields instead of erroring") {
     val dir = java.nio.file.Files.createTempDirectory("ppdbv2").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.txt"),

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables.{events, normText, rd, spaceSplit, t}
 
@@ -267,5 +269,62 @@ object ReferenceForms {
       i += 1
     }
     sel.select(col("sel_order"), col("vec_id"), col("d2")).orderBy("sel_order")
+  }
+
+  /** `PpdbSplitLine.split` testing every byte: the delimiter is matched at
+    * each position left to right, a match consuming its five bytes.
+    */
+  def ppdbSplitBytewise(line: UTF8String): ArrayData = {
+    val base = line.getBaseObject
+    val off = line.getBaseOffset
+    val n = line.numBytes()
+    var parts = new Array[Any](8)
+    var k = 0
+    var start = 0
+    var i = 0
+    while (i <= n - 5) {
+      if (line.getByte(i) == ' ' && line.getByte(i + 1) == '|' &&
+          line.getByte(i + 2) == '|' && line.getByte(i + 3) == '|' &&
+          line.getByte(i + 4) == ' ') {
+        if (k == parts.length) {
+          val grown = new Array[Any](k * 2)
+          System.arraycopy(parts, 0, grown, 0, k)
+          parts = grown
+        }
+        parts(k) = UTF8String.fromAddress(base, off + start, i - start)
+        k += 1
+        i += 5
+        start = i
+      } else i += 1
+    }
+    val out = new Array[Any](k + 1)
+    System.arraycopy(parts, 0, out, 0, k)
+    out(k) = UTF8String.fromAddress(base, off + start, n - start)
+    new GenericArrayData(out)
+  }
+
+  private val ScoreKey = "PPDB2.0Score=".getBytes("UTF-8")
+
+  /** `PpdbScoreToken.token` testing every position from the end: the value
+    * of the last boundary-aligned score key, up to the next space.
+    */
+  def ppdbScoreTokenBytewise(feat: UTF8String): UTF8String = {
+    def keyAt(i: Int): Boolean = {
+      var j = 0
+      while (j < ScoreKey.length && feat.getByte(i + j) == ScoreKey(j)) j += 1
+      j == ScoreKey.length
+    }
+    val n = feat.numBytes()
+    var i = n - ScoreKey.length
+    while (i >= 0) {
+      if ((i == 0 || feat.getByte(i - 1) == ' ') && keyAt(i)) {
+        val s = i + ScoreKey.length
+        var e = s
+        while (e < n && feat.getByte(e) != ' ') e += 1
+        return UTF8String.fromAddress(feat.getBaseObject, feat.getBaseOffset + s, e - s)
+      }
+      i -= 1
+    }
+    null
   }
 }
