@@ -93,10 +93,13 @@ object AnnDedup {
     val s = emb.sparkSession
     val npl = adaptivePlanes(emb.count())
     // fan out before the CPU-bound bucket kernel — a one-file scan arrives
-    // as a single partition
+    // as a single partition. Each vector's L2 norm is computed once, in a
+    // projection below the explode that replicates the row into its nTables
+    // buckets, instead of on both sides of every candidate pair.
     val bucketed = emb
       .repartition(s.sparkContext.defaultParallelism, col("id"))
-      .select(col("id"), col("vec"),
+      .select(col("id"), col("vec"), graft.functions.Vec.l2Native("vec").as("norm"))
+      .select(col("id"), col("vec"), col("norm"),
         explode(AnnLsh.tableBuckets(col("vec"), npl, dim, nTables)).as("bucket"))
     // skew guard: drop over-occupied buckets (count frame is ≤ nTables·2^npl
     // rows — far smaller than the data; no broadcast hint so the planner
@@ -105,10 +108,11 @@ object AnnDedup {
       .filter(col("__bn") <= maxBucketSize)
       .select("bucket")
     val pruned = bucketed.join(ok, Seq("bucket"), "left_semi")
-    val a = pruned.select(col("bucket"), col("id").as("a_id"), col("vec").as("va"))
-    val b = pruned.select(col("bucket"), col("id").as("b_id"), col("vec").as("vb"))
+    val a = pruned.select(col("bucket"), col("id").as("a_id"), col("vec").as("va"),
+      col("norm").as("na"))
+    val b = pruned.select(col("bucket"), col("id").as("b_id"), col("vec").as("vb"),
+      col("norm").as("nb"))
     val dot = graft.functions.Vec.dotNative("va", "vb")
-    val (na, nb) = (graft.functions.Vec.l2Native("va"), graft.functions.Vec.l2Native("vb"))
     // The cosine runs in the SAME stage as the bucket join (whole-stage
     // codegen, zero extra shuffle) and the (a_id, b_id) dedup runs after
     // the threshold filter on slim 24-byte rows. The pre-cosine dedup this
@@ -121,7 +125,7 @@ object AnnDedup {
     // duplicate is deterministic and the declared semantics are unchanged.
     a.join(b, Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cos", dot / (na * nb))
+      .withColumn("cos", dot / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos"))
       .dropDuplicates("a_id", "b_id")

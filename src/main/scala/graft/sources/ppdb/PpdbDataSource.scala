@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -319,18 +320,19 @@ class PpdbAggPartitionReader(
     val inner = new PpdbPartitionReader(file, StructType(Nil), pushed, conf)
     var n = 0L
     var nScore = 0L
-    var mn = Double.NaN
-    var mx = Double.NaN
+    var mn: java.lang.Double = null
+    var mx: java.lang.Double = null
     try {
       while (inner.next()) {
         n += 1
         if (needScore) {
           val s = PpdbDataSource.score(inner.currentFields)
-          // a NaN score counts as absent, as a pushed threshold treats it
-          if (s != null && !s.isNaN) {
+          // a NaN score is a value, ordered above every other double, as
+          // Spark's count/min/max over the column treat it
+          if (s != null) {
             nScore += 1
-            if (mn.isNaN || s < mn) mn = s
-            if (mx.isNaN || s > mx) mx = s
+            if (mn == null || compareDoubles(s, mn) < 0) mn = s
+            if (mx == null || compareDoubles(s, mx) > 0) mx = s
           }
         }
       }
@@ -338,8 +340,8 @@ class PpdbAggPartitionReader(
     new GenericInternalRow(agg.aggregateExpressions.map {
       case _: CountStar => n: Any
       case _: Count => nScore: Any
-      case _: Min => if (mn.isNaN) null else (mn: Any)
-      case _: Max => if (mx.isNaN) null else (mx: Any)
+      case _: Min => mn
+      case _: Max => mx
       case other => throw new IllegalArgumentException(s"unpushable aggregate $other")
     })
   }
@@ -391,19 +393,20 @@ class PpdbPartitionReader(
     case IsNotNull(a) if PpdbScanBuilder.Pushable.contains(a) =>
       PpdbScanBuilder.Pushable(a)
   }
-  // score-threshold predicates compile to (Double => Boolean); a null score
-  // (no PPDB2.0Score token) fails them all, like NULL <op> x in SQL.
-  // IsNotNull(ppdb2score) compiles to the always-true lambda — reaching the
-  // lambda at all already required a parseable (non-NaN) score below
+  // score-threshold predicates compile to (Double => Boolean) and compare
+  // as Spark orders doubles (NaN = NaN, NaN above every other double); a
+  // null score (no PPDB2.0Score token) fails them all, like NULL <op> x in
+  // SQL. IsNotNull(ppdb2score) compiles to the always-true lambda —
+  // reaching the lambda at all already required a parseable score below
   private val scoreFilters: Array[Double => Boolean] = pushed.collect {
     case GreaterThan("ppdb2score", v) =>
-      val t = PpdbScanBuilder.asDouble(v); (s: Double) => s > t
+      val t = PpdbScanBuilder.asDouble(v); (s: Double) => compareDoubles(s, t) > 0
     case GreaterThanOrEqual("ppdb2score", v) =>
-      val t = PpdbScanBuilder.asDouble(v); (s: Double) => s >= t
+      val t = PpdbScanBuilder.asDouble(v); (s: Double) => compareDoubles(s, t) >= 0
     case LessThan("ppdb2score", v) =>
-      val t = PpdbScanBuilder.asDouble(v); (s: Double) => s < t
+      val t = PpdbScanBuilder.asDouble(v); (s: Double) => compareDoubles(s, t) < 0
     case LessThanOrEqual("ppdb2score", v) =>
-      val t = PpdbScanBuilder.asDouble(v); (s: Double) => s <= t
+      val t = PpdbScanBuilder.asDouble(v); (s: Double) => compareDoubles(s, t) <= 0
     case IsNotNull("ppdb2score") => (_: Double) => true
   }
   private val needsScore = scoreFilters.nonEmpty || fieldNames.contains("ppdb2score")
@@ -419,9 +422,8 @@ class PpdbPartitionReader(
         notNullFields.forall(_ < n)
       val s = if (pass && needsScore) PpdbDataSource.score(f) else null
       // an absent or unparseable score (the column's null) fails every
-      // comparison, as in SQL; so does a literal NaN, which the column keeps
-      // as NaN (no release writes one)
-      if (pass && scoreFilters.nonEmpty) pass = s != null && !s.isNaN && scoreFilters.forall(_(s))
+      // comparison, as in SQL
+      if (pass && scoreFilters.nonEmpty) pass = s != null && scoreFilters.forall(_(s))
       if (pass) { fields = f; score = s; return true }
     }
     false

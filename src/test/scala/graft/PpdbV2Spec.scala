@@ -218,6 +218,35 @@ class PpdbV2Spec extends SparkSpec {
     assert(agg === 5.0)
   }
 
+  test("a NaN score passes pushed thresholds and aggregates as Spark orders it") {
+    // Spark orders NaN above every double and counts it as a value, so the
+    // pushed filter and the pushed count/min/max must give what the same
+    // queries give over the unpushed parse
+    val dir = java.nio.file.Files.createTempDirectory("ppdbv2nan").toString
+    val path = s"$dir/nan.txt"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      ("[X] ||| a ||| b ||| PPDB2.0Score=NaN ||| 0-0 ||| Equivalence\n" +
+        "[X] ||| c ||| d ||| PPDB2.0Score=4.5 ||| 0-0 ||| Equivalence\n")
+        .getBytes("UTF-8"))
+    val v2 = spark.read.format("ppdb").load(path)
+    val parsed = Ppdb.parse(spark, path)
+    def phrases(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.filter(c).select("phrase").collect().map(_.getString(0)).sorted.toSeq
+    for (c <- Seq(col("ppdb2score") >= 3.5, col("ppdb2score") > 4.5,
+        col("ppdb2score") < 5.0, col("ppdb2score") <= 4.5))
+      assert(phrases(v2, c) === phrases(parsed, c), c.toString)
+    assert(phrases(v2, col("ppdb2score") >= 3.5) === Seq("a", "c"))
+    def audit(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), count(col("ppdb2score")), min(col("ppdb2score")),
+        max(col("ppdb2score"))).collect().head.toSeq.map(_.toString)
+    val pushedAgg = v2.agg(count(lit(1)), count(col("ppdb2score")), min(col("ppdb2score")),
+      max(col("ppdb2score")))
+    assert(batchScans(pushedAgg).head.scan.asInstanceOf[graft.sources.ppdb.PpdbScan]
+      .pushedAggForTest.isDefined, "the audit must push into the reader")
+    assert(audit(v2) === audit(parsed))
+    assert(audit(v2) === Seq("2", "2", "4.5", "NaN"))
+  }
+
   test("the score column matches the features map, with or without the map") {
     // the score comes from the single token scan whether or not `features`
     // is read; it must parse as the map's tokenizer does: last token wins,

@@ -198,6 +198,33 @@ object ReferenceForms {
       .orderBy("a_id", "b_id")
   }
 
+  /** AnnDedup.pairs with each side's L2 norm computed per candidate pair,
+    * inside the cosine, as the operator did before it computed each
+    * vector's norm once below the bucket explode.
+    */
+  def annDedupPairsPerPairNorm(
+      emb: DataFrame, threshold: Double, dim: Int, nTables: Int,
+      maxBucketSize: Long): DataFrame = {
+    import graft.functions.Vec.{dotNative, l2Native}
+    val npl = graft.operators.AnnDedup.adaptivePlanes(emb.count())
+    val bucketed = emb
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("id"))
+      .select(col("id"), col("vec"),
+        explode(graft.operators.AnnLsh.tableBuckets(col("vec"), npl, dim, nTables)).as("bucket"))
+    val ok = bucketed.groupBy("bucket").agg(count(lit(1)).as("__bn"))
+      .filter(col("__bn") <= maxBucketSize)
+      .select("bucket")
+    val pruned = bucketed.join(ok, Seq("bucket"), "left_semi")
+    val a = pruned.select(col("bucket"), col("id").as("a_id"), col("vec").as("va"))
+    val b = pruned.select(col("bucket"), col("id").as("b_id"), col("vec").as("vb"))
+    a.join(b, Seq("bucket"))
+      .filter(col("a_id") < col("b_id"))
+      .withColumn("cos", dotNative("va", "vb") / (l2Native("va") * l2Native("vb")))
+      .filter(col("cos") >= threshold)
+      .select(col("a_id"), col("b_id"), col("cos"))
+      .dropDuplicates("a_id", "b_id")
+  }
+
   /** The pure-expression band-hash chain the native plans.BandHashes
     * kernel replaced (slice → cast → concat_ws → xxhash64 per band).
     */

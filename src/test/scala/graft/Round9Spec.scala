@@ -119,4 +119,23 @@ class Round9Spec extends SparkSpec {
     assert(rows.length === 1)
     assert(rows.head.getLong(0) === 1L && rows.head.getLong(1) === 2L)
   }
+
+  test("once-per-vector norms give the per-pair form's cosines bit for bit") {
+    import spark.implicits._
+    // 30 clusters of 20 jittered copies: several hundred pairs above the
+    // threshold, most colliding in more than one table
+    val rnd = new scala.util.Random(11)
+    val vecs = (0 until 600).map { i =>
+      val c = new scala.util.Random(i / 20)
+      (i.toLong, Array.fill(32)(c.nextGaussian() + 0.05 * rnd.nextGaussian()))
+    }.toDF("id", "vec")
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val got = bits(AnnDedup.pairs(vecs, threshold = 0.9, dim = 32,
+      nTables = 4, maxBucketSize = 256L))
+    val want = bits(ReferenceForms.annDedupPairsPerPairNorm(vecs, threshold = 0.9, dim = 32,
+      nTables = 4, maxBucketSize = 256L))
+    assert(got.size > 100 && got === want)
+  }
 }

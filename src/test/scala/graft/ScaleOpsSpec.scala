@@ -44,19 +44,30 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("ConnectedComponents matches a local union-find on seeded random graphs") {
     import spark.implicits._
-    for (seed <- 1 to 3) {
+    // vertices 0 until 60. Random edges join ids in 0 until 40 and the
+    // out-of-set ids 60 until 70, with self-loops, duplicates and reversed
+    // copies; a path over 40..52 in shuffled order and direction has
+    // diameter 12; 53..59 are singletons
+    val n = 60
+    for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
-      val n = 40
-      val edges = (1 to 30).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      // local union-find ground truth (min-label per component)
+      def end(): Long = { val x = rnd.nextInt(50); if (x < 40) x else x + 20 }
+      val random = Seq.fill(30)((end(), end()))
+      val loops = Seq.fill(3) { val v = end(); (v, v) }
+      val path = rnd.shuffle((40L to 52L).toList).sliding(2).map {
+        case Seq(a, b) => if (rnd.nextBoolean()) (a, b) else (b, a)
+      }.toSeq
+      val edges = random ++ loops ++ random.take(5) ++ random.takeRight(5).map(_.swap) ++ path
+      // local union-find ground truth (min-label per component) over the
+      // edges whose endpoints are both vertices
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
+      edges.filter { case (a, b) => a < n && b < n }.foreach { case (a, b) =>
         val (ra, rb) = (find(a.toInt), find(b.toInt))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
+      assert(expected(52) === 40L && expected(59) === 59L)
       val got = graft.operators.ConnectedComponents
         .labels((0L until n.toLong).toDF("id"), edges.toDF("src", "dst"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
