@@ -47,9 +47,10 @@ object Tables {
     * Twin of the DuckDB oracle `regexp_replace(trim(lower(text)), '\s+', ' ', 'g')`.
     *
     * Round 13: runs as the one-byte-pass [[graft.plans.NormText]] kernel —
-    * bit-identical to [[normTextBuiltin]] (NormTextSpec pins it on
-    * adversarial Unicode + ScalaCheck strings), so DuckDB parity carries
-    * over unchanged, and the three transient strings per row the builtin
+    * bit-identical to the builtin `regexp_replace(trim(lower(c)), "\\s+", " ")`
+    * (NormTextSpec pins it on adversarial Unicode + ScalaCheck strings), so
+    * DuckDB parity carries over unchanged, and the three transient strings
+    * per row the builtin
     * composition built (lowercase copy, trimmed slice, regex buffer) are
     * gone from every text query's hottest stage.
     */
@@ -75,12 +76,6 @@ object Tables {
   def spaceTokenCount(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftSqlShim.column(
       new graft.plans.SpaceTokenCount(org.apache.spark.sql.GraftSqlShim.expression(c)))
-
-  /** The builtin composition [[normText]] replaced — kept as the parity
-    * oracle for NormTextSpec.
-    */
-  def normTextBuiltin(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(trim(lower(c)), "\\s+", " ")
 
   /** Oracle-side twin of [[normText]]. */
   def normTextSql(c: String): String =

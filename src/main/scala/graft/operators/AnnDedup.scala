@@ -95,10 +95,15 @@ object AnnDedup {
     // fan out before the CPU-bound bucket kernel — a one-file scan arrives
     // as a single partition. Each vector's L2 norm is computed once, in a
     // projection below the explode that replicates the row into its nTables
-    // buckets, instead of on both sides of every candidate pair.
+    // buckets, instead of on both sides of every candidate pair. The norm
+    // is non-nullable, so the optimizer infers no `isnotnull(norm)` from the
+    // cosine filter and pushes no second norm below the repartition; the
+    // 0.0 of a NULL vector never reaches a pair, as tableBuckets refuses
+    // that row loudly.
     val bucketed = emb
       .repartition(s.sparkContext.defaultParallelism, col("id"))
-      .select(col("id"), col("vec"), graft.functions.Vec.l2Native("vec").as("norm"))
+      .select(col("id"), col("vec"),
+        coalesce(graft.functions.Vec.l2Native("vec"), lit(0.0)).as("norm"))
       .select(col("id"), col("vec"), col("norm"),
         explode(AnnLsh.tableBuckets(col("vec"), npl, dim, nTables)).as("bucket"))
     // skew guard: drop over-occupied buckets (count frame is ≤ nTables·2^npl

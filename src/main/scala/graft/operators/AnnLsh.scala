@@ -42,10 +42,9 @@ object AnnLsh {
     * call: element t = (t << nPlanes) + bucket_t, so one long column equi-
     * joins across tables (bucket_t < 2^nPlanes keeps the packing
     * injective). Shared by [[topK]] and AnnDedup. A NULL vector fails
-    * loudly: LshBuckets is a UnaryExpression whose nullSafeEval propagates
-    * NULL, and explode(transform(NULL)) then silently DROPS the row from
-    * the index or probe set — at scale that is invisible recall loss, not
-    * an error.
+    * loudly: LshBuckets maps NULL in to NULL out, and
+    * explode(transform(NULL)) then silently DROPS the row from the index or
+    * probe set — at scale that is invisible recall loss, not an error.
     */
   def tableBuckets(vec: Column, nPlanes: Int, dim: Int, nTables: Int): Column = {
     val mat: Seq[Seq[Double]] = (0 until nTables).flatMap(t => planes(nPlanes, dim, t))

@@ -28,9 +28,9 @@ object MinHashLsh {
     * ANSI mode (wrapping long multiplication would throw
     * ARITHMETIC_OVERFLOW). Fixed seeds make every run reproducible.
     */
-  private val P = 1000000007L
+  private[graft] val P = 1000000007L
 
-  private def hashParams(numHashes: Int): (Seq[Long], Seq[Long]) = {
+  private[graft] def hashParams(numHashes: Int): (Seq[Long], Seq[Long]) = {
     val rnd = new scala.util.Random(42)
     val a = (1 to numHashes).map(_ => 1L + rnd.nextInt((P - 1).toInt))
     val b = (1 to numHashes).map(_ => rnd.nextInt((P - 1).toInt).toLong)
@@ -42,8 +42,8 @@ object MinHashLsh {
     * (`plans.NGrams`) — the previous zip_with-fold form ran `shingleSize`
     * slices + folds as interpreted CodegenFallback lambdas (each an array
     * copy, and each breaking the surrounding whole-stage-codegen span);
-    * bit-identical semantics, spec-asserted ([[shinglesExpr]] is the
-    * retained parity reference). Docs shorter than the shingle size yield
+    * bit-identical semantics, spec-asserted against the zip_with form in
+    * the test-side `ReferenceForms`). Docs shorter than the shingle size yield
     * an empty array.
     */
   def shingles(tokens: Column, shingleSize: Int): Column =
@@ -52,25 +52,10 @@ object MinHashLsh {
         org.apache.spark.sql.GraftSqlShim.expression(tokens),
         shingleSize, distinct = true))
 
-  /** The original pure-expression shingle form — parity reference for the
-    * native kernel: `shingleSize` shifted slices folded with zip_with, then
-    * array_distinct, with a when-guard for docs shorter than the shingle
-    * size.
-    */
-  def shinglesExpr(tokens: Column, shingleSize: Int): Column = {
-    val n = size(tokens)
-    val len = n - (shingleSize - 1)
-    val shifted = (1 to shingleSize).map(j => slice(tokens, lit(j), len))
-    val joined = shifted.reduceLeft((acc, s) =>
-      zip_with(acc, s, (x, y) => concat(x, lit(" "), y)))
-    array_distinct(
-      when(n >= shingleSize, joined).otherwise(typedLit(Array.empty[String])))
-  }
-
   /** MinHash signature (array of `numHashes` longs) of a shingle array —
     * ONE native kernel call (`plans.MinHashSig`): hash each shingle once,
     * update all k minima in a tight loop. The higher-order-function form
-    * ([[signatureExpr]], kept as the parity reference) walks the array k+1
+    * (the test-side `ReferenceForms.minhashSignatureExpr`) walks the array k+1
     * times through interpreted lambda closures with an intermediate copy
     * per walk; the kernel is bit-identical (same xxhash64 seed, same pmod
     * arithmetic, same null/empty semantics — spec-asserted).
@@ -80,25 +65,6 @@ object MinHashLsh {
     org.apache.spark.sql.GraftSqlShim.column(
       graft.plans.MinHashSig(
         org.apache.spark.sql.GraftSqlShim.expression(shingleCol), a, b, P))
-  }
-
-  /** The original pure-expression signature — parity reference for the
-    * native kernel (Catalyst caveat it works around: the shingle hashes
-    * must be materialized once via a named lambda variable because array
-    * elements do not CSE, measured ~2× on the sf0.1 dedup_minhash bench).
-    */
-  def signatureExpr(shingleCol: Column, numHashes: Int): Column = {
-    val (a, b) = hashParams(numHashes)
-    val perHash = (base: Column) => (0 until numHashes).map { i =>
-      array_min(transform(base, h => pmod(h * lit(a(i)) + lit(b(i)), lit(P))))
-    }
-    // transform(array(<base>), b -> array(mins…)) names the base array as a
-    // lambda variable so it is computed exactly once per row
-    element_at(
-      transform(
-        array(transform(shingleCol, s => pmod(xxhash64(s), lit(P)))),
-        base => array(perHash(base): _*)),
-      1)
   }
 
   /** Near-duplicate pairs (aId < bId) with exact shingle-Jaccard ≥ threshold,

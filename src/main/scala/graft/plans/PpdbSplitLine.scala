@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -31,23 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Registered as SQL function `ppdb_split` via [[GraftExtensions]]; the
   * parser builds it as a Column directly, so it needs no registration.
   */
-case class PpdbSplitLine(child: Expression) extends UnaryExpression {
-
-  // ExpectsInputTypes is not implementable outside spark.sql in 4.x
-  // (AbstractDataType is private[sql]) — check manually at analysis time
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ppdb_split expects a string column, got ${child.dataType.catalogString}")
+case class PpdbSplitLine(child: Expression)
+  extends NativeKernel(PpdbSplitLine.getClass, "split", StringType)
+  with UnaryLike[Expression] {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "ppdb_split"
-
-  override protected def nullSafeEval(input: Any): Any =
-    PpdbSplitLine.split(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PpdbSplitLine.split($c)")
 
   override protected def withNewChildInternal(newChild: Expression): PpdbSplitLine =
     copy(child = newChild)
@@ -55,9 +43,9 @@ case class PpdbSplitLine(child: Expression) extends UnaryExpression {
 
 object PpdbSplitLine {
 
-  /** Fields of `line` split on ` ||| `, as views into its bytes. Shared by
-    * interpreted eval and the generated code (a static call keeps the
-    * codegen'd method tiny).
+  /** Fields of `line` split on ` ||| `, as views into its bytes: the
+    * kernel of [[PpdbSplitLine]] in both codegen modes, and the reader's
+    * field split.
     *
     * A Horspool scan: it tests the last byte of the 5-byte window first and
     * skips by how far that byte is from the end of the delimiter (5 for a
@@ -116,24 +104,13 @@ object PpdbSplitLine {
   * its pushed score aggregates from [[PpdbScoreToken.token]] too, so both
   * parsers apply this one rule.
   */
-case class PpdbScoreToken(child: Expression) extends UnaryExpression {
+case class PpdbScoreToken(child: Expression)
+  extends NativeKernel(PpdbScoreToken.getClass, "token", StringType)
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${child.dataType.catalogString}")
-
+  override protected def nullResult: Boolean = true
   override def dataType: DataType = StringType
   override def prettyName: String = "ppdb_score_token"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    PpdbScoreToken.token(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.plans.PpdbScoreToken.token($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): PpdbScoreToken =
     copy(child = newChild)

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Native text-sketch expressions (SURVEY.md §4 tier (b)), sibling of
   * [[VecExprs]].
@@ -27,12 +26,12 @@ object TextExprs {
     * builtin `xxhash64(null)` does (hash expressions skip null inputs and
     * return the running seed), empty input → all-null signature exactly as
     * `array_min(empty) = null`, and a NULL input ARRAY → all-null signature
-    * (handled in [[MinHashSig.eval]]: `transform(NULL)` nulls each slot but
-    * the outer `array(...)` constructor never returns SQL NULL).
+    * too (`transform(NULL)` nulls each slot but the outer `array(...)`
+    * constructor never returns SQL NULL).
     */
   def minhashSig(arr: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
     val k = a.length
-    val n = arr.numElements()
+    val n = if (arr == null) 0 else arr.numElements()
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
     var i = 0
@@ -52,12 +51,6 @@ object TextExprs {
     if (n == 0) new GenericArrayData(new Array[Any](k)) // all-null, as array_min(empty)
     else new GenericArrayData(mins)
   }
-
-  /** Signature for a NULL input array: k nulls — what the expression form
-    * produces (`transform(NULL)` is NULL, so each `array_min` slot is NULL,
-    * but the outer `array(...)` constructor is not).
-    */
-  def allNullSig(k: Int): ArrayData = new GenericArrayData(new Array[Any](k))
 
   /** All `bands` LSH band hashes of a minhash signature in ONE pass —
     * bit-parity with the per-band composition
@@ -248,8 +241,11 @@ object TextExprs {
     * empty tokens — and 0x20 never occurs inside a UTF-8 multibyte
     * sequence, so counting bytes equals counting separators. One byte pass,
     * zero allocation (round 19; SpaceTokenCountSpec pins the identity).
+    * A NULL string counts −1, `size(NULL)` under the legacy `sizeOfNull`
+    * rule; [[SpaceTokenCount]] passes NULL here only under that rule.
     */
   def spaceTokenCount(s: org.apache.spark.unsafe.types.UTF8String): Int = {
+    if (s == null) return -1
     val n = s.numBytes()
     var cnt = 1
     var i = 0
@@ -272,7 +268,8 @@ object TextExprs {
     */
   def sumMapVals(
       arr: ArrayData,
-      m: java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, java.lang.Double]): Any = {
+      m: java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, java.lang.Double])
+    : java.lang.Double = {
     val n = arr.numElements()
     var acc = 0.0
     var i = 0
@@ -449,7 +446,7 @@ object TextExprs {
     *   the identical compiled pattern's `replaceAll(" ")`. No
     *   re-implementation to drift. NormTextSpec pins kernel ≡ builtin on
     *   adversarial Unicode fixtures plus ScalaCheck-generated strings.
-    * NULL propagates as SQL NULL (nullSafeEval / defineCodeGen).
+    * NULL never reaches it: [[NormText]] maps NULL in to NULL out.
     */
   def normText(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     import org.apache.spark.unsafe.types.UTF8String
@@ -549,12 +546,13 @@ object TextExprs {
     * as `explode` + groupBy groups them), then `-Σ (c/len)·ln(c/len)` with
     * terms accumulated in FIRST-OCCURRENCE order (deterministic; the
     * aggregate form it replaces summed in nondeterministic shuffle order,
-    * and both meet the oracle at 4-dp rounding). Caller guards empty/null
-    * arrays (→ SQL NULL, matching the aggregate form where such docs
-    * vanish: explode of empty/NULL emits no rows).
+    * and both meet the oracle at 4-dp rounding). An empty array gives
+    * null (SQL NULL, as for a NULL array: the aggregate form's docs vanish
+    * there, explode of empty/NULL emits no rows).
     */
-  def tokenEntropy(arr: ArrayData): Double = {
+  def tokenEntropy(arr: ArrayData): java.lang.Double = {
     val len = arr.numElements()
+    if (len == 0) return null
     val counts = new java.util.LinkedHashMap[Any, Int]()
     var i = 0
     while (i < len) {
@@ -568,7 +566,7 @@ object TextExprs {
       val p = it.next().toDouble / len
       acc += p * math.log(p)
     }
-    -acc
+    java.lang.Double.valueOf(-acc)
   }
 
   /** Fused shingle-SET fingerprint of a normalized document in ONE zero-copy
@@ -643,6 +641,16 @@ object TextExprs {
       Array[Any](acc1, acc2))
   }
 
+  /** A literal string set as the byte-wise `UTF8String` set the membership
+    * kernels probe.
+    */
+  private[plans] def utf8Set(set: Seq[String])
+    : java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
+    val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](set.size * 2)
+    set.foreach(x => s.add(org.apache.spark.unsafe.types.UTF8String.fromString(x)))
+    s
+  }
+
   /** concat-with-space of toks[i..i+n): null token → null gram (concat). */
   private def joinGram(
       toks: Array[org.apache.spark.unsafe.types.UTF8String],
@@ -665,247 +673,119 @@ object TextExprs {
   }
 }
 
-/** `minhash_sig(shingles)` — the k-hash MinHash signature as one codegen'd
-  * kernel call. Hash params are Seq-typed for structural equality (plan
-  * canonicalization); the kernel sees primitive arrays via reference
-  * objects.
+/** `minhash_sig(shingles)` — the k-hash MinHash signature as one kernel
+  * call. Hash params are Seq-typed for structural equality (plan
+  * canonicalization); the kernel sees primitive arrays. A NULL shingle array
+  * yields k NULLs, as the expression form does, so the result is never
+  * NULL.
   */
 case class MinHashSig(child: Expression, a: Seq[Long], b: Seq[Long], prime: Long)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "minhashSig", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
   require(a.nonEmpty && a.length == b.length, "need matching a/b hash params")
 
-  @transient private lazy val aArr: Array[Long] = a.toArray
-  @transient private lazy val bArr: Array[Long] = b.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(a.toArray, b.toArray, prime)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "minhash_sig"
-
-  // NULL-input parity with the expression form it replaces: a NULL shingle
-  // array yields an array of k NULLs (the outer array(...) constructor never
-  // returns SQL NULL), so the kernel must not NULL-propagate. The result is
-  // therefore never null.
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) TextExprs.allNullSig(aArr.length)
-    else TextExprs.minhashSig(v.asInstanceOf[ArrayData], aArr, bArr, prime)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("mhsig")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out = ${c.isNull}
-          ? graft.plans.TextExprs.allNullSig(${aArr.length})
-          : graft.plans.TextExprs.minhashSig(${c.value}, $aRef, $bRef, ${prime}L);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
 
-/** `ngrams(tokens, n, distinct)` — space-joined n-grams as one codegen'd
-  * kernel call, replacing the interpreted higher-order cascade
-  * (`shingleSize` slices + `zip_with` concat folds + `array_distinct`, each
-  * an interpreted lambda walk with an intermediate array copy — higher-order
-  * functions are CodegenFallback, so they also broke the surrounding
-  * whole-stage-codegen span). Semantics are bit-identical to that form (see
-  * [[TextExprs.ngrams]]); used by `MinHashLsh.shingles` (distinct) and
-  * `text_bigrams` (non-distinct).
+/** `ngrams(tokens, n, distinct)` — space-joined n-grams as one kernel call,
+  * replacing the interpreted higher-order cascade (`shingleSize` slices +
+  * `zip_with` concat folds + `array_distinct`, each an interpreted lambda
+  * walk with an intermediate array copy — higher-order functions are
+  * CodegenFallback, so they also broke the surrounding whole-stage-codegen
+  * span). Semantics are bit-identical to that form (see
+  * [[TextExprs.ngrams]]); a NULL array yields an empty one, so the result is
+  * never NULL. Used by `MinHashLsh.shingles` (distinct) and `text_bigrams`
+  * (non-distinct).
   */
 case class NGrams(child: Expression, n: Int, distinct: Boolean)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "ngrams", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
   require(n >= 1, s"n-gram size must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(n, distinct)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "ngrams"
-
-  // NULL input array → EMPTY array (the when-guard of the expression form
-  // under ANSI), so the result is never null.
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    TextExprs.ngrams(v.asInstanceOf[ArrayData], n, distinct)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("ngrams")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out =
-          graft.plans.TextExprs.ngrams(${c.isNull} ? null : ${c.value}, $n, $distinct);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): NGrams =
     copy(child = newChild)
 }
 
 /** `token_entropy(tokens)` — per-row Shannon entropy of the token
-  * distribution as one codegen'd kernel call, replacing the two-shuffle
-  * aggregate form (explode → (doc, token) count → per-doc Σ): the entire
-  * per-document computation is row-local, so the query that uses it needs
-  * NO corpus-sized shuffle at all. NULL or empty input → SQL NULL (such
-  * docs vanish from the aggregate form's output; the caller filters NULL
-  * to match).
+  * distribution as one kernel call, replacing the two-shuffle aggregate form
+  * (explode → (doc, token) count → per-doc Σ): the entire per-document
+  * computation is row-local, so the query that uses it needs NO
+  * corpus-sized shuffle at all. NULL or empty input → SQL NULL (such docs
+  * vanish from the aggregate form's output; the caller filters NULL to
+  * match).
   */
-case class TokenEntropy(child: Expression) extends UnaryExpression {
+case class TokenEntropy(child: Expression)
+  extends NativeKernel(TextExprs.getClass, "tokenEntropy", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override protected def nullResult: Boolean = true
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "token_entropy"
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val a = v.asInstanceOf[ArrayData]
-      if (a.numElements() == 0) null else TextExprs.tokenEntropy(a)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull} || ${c.value}.numElements() == 0;
-      double ${ev.value} = ${ev.isNull} ? 0.0 : graft.plans.TextExprs.tokenEntropy(${c.value});
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): TokenEntropy =
     copy(child = newChild)
 }
 
-/** `norm_text(s)` — lower → trim → collapse-whitespace in one codegen'd
-  * byte pass (see [[TextExprs.normText]] for the bit-parity contract with
-  * the `regexp_replace(trim(lower(s)), "\\s+", " ")` composition it
-  * replaces). NULL in → NULL out, like the builtin chain.
+/** `norm_text(s)` — lower → trim → collapse-whitespace in one byte pass
+  * (see [[TextExprs.normText]] for the bit-parity contract with the
+  * `regexp_replace(trim(lower(s)), "\\s+", " ")` composition it replaces).
+  * NULL in → NULL out, like the builtin chain.
   */
-case class NormText(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
+case class NormText(child: Expression)
+  extends NativeKernel(TextExprs.getClass, "normText", StringType)
+  with UnaryLike[Expression] {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "norm_text"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextExprs.normText(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.normText($c)")
 
   override protected def withNewChildInternal(newChild: Expression): NormText =
     copy(child = newChild)
 }
 
-/** `space_split(s)` — tokens of a single-space-separated string as one
-  * codegen'd byte pass (see [[TextExprs.spaceSplit]] for the bit-parity
-  * contract with the `split(s, " ")` builtin it replaces). NULL in → NULL
-  * out, like the builtin. Output type matches `StringSplit`
-  * (`array<string>` with containsNull = false).
+/** `space_split(s)` — tokens of a single-space-separated string as one byte
+  * pass (see [[TextExprs.spaceSplit]] for the bit-parity contract with the
+  * `split(s, " ")` builtin it replaces). NULL in → NULL out, like the
+  * builtin. Output type matches `StringSplit` (`array<string>` with
+  * containsNull = false).
   */
-case class SpaceSplit(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
+case class SpaceSplit(child: Expression)
+  extends NativeKernel(TextExprs.getClass, "spaceSplit", StringType)
+  with UnaryLike[Expression] {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "space_split"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextExprs.spaceSplit(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.spaceSplit($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SpaceSplit =
     copy(child = newChild)
 }
 
 /** `band_hashes(sig, bands, r)` — all LSH band hashes of a minhash
-  * signature as one codegen'd kernel call (see [[TextExprs.bandHashes]] for
-  * the bit-parity contract with the slice/cast/concat_ws/xxhash64
-  * composition). Output array is never NULL (the composition's outer
-  * transform runs over a literal sequence).
+  * signature as one kernel call (see [[TextExprs.bandHashes]] for the
+  * bit-parity contract with the slice/cast/concat_ws/xxhash64 composition).
+  * Output array is never NULL (the composition's outer transform runs over a
+  * literal sequence), so a NULL signature reaches the kernel.
   */
 case class BandHashes(child: Expression, bands: Int, r: Int)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "bandHashes", ArrayType(LongType))
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(bands, r)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "band_hashes"
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    TextExprs.bandHashes(v.asInstanceOf[ArrayData], bands, r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("bandHashes")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out =
-          graft.plans.TextExprs.bandHashes(${c.isNull} ? null : ${c.value}, $bands, $r);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): BandHashes =
     copy(child = newChild)
@@ -919,110 +799,53 @@ case class BandHashes(child: Expression, bands: Int, r: Int)
   * expression is built.
   */
 case class SpaceTokenCount(child: Expression, legacySizeOfNull: Boolean)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "spaceTokenCount", StringType)
+  with UnaryLike[Expression] {
 
   def this(child: Expression) = this(child, SQLConf.get.legacySizeOfNull)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
+  override protected def passNull: Boolean = legacySizeOfNull
   override def dataType: DataType = IntegerType
   override def prettyName: String = "space_token_count"
-  override def nullable: Boolean = if (legacySizeOfNull) false else super.nullable
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) { if (legacySizeOfNull) -1 else null }
-    else TextExprs.spaceTokenCount(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (legacySizeOfNull) {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      ev.copy(
-        code = code"""
-          ${c.code}
-          int ${ev.value} = ${c.isNull} ? -1 : graft.plans.TextExprs.spaceTokenCount(${c.value});
-        """,
-        isNull = FalseLiteral)
-    } else defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.spaceTokenCount($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SpaceTokenCount =
     copy(child = newChild)
 }
 
-/** `punct_count(s)` — non-letter/number/whitespace code points in one
-  * codegen'd pass (see [[TextExprs.punctCount]] for the bit-parity contract
-  * with the `length(regexp_replace(s, "[\\p{L}\\p{N}\\s]", ""))`
-  * composition it replaces). NULL in → NULL out, like the composition.
+/** `punct_count(s)` — non-letter/number/whitespace code points in one pass
+  * (see [[TextExprs.punctCount]] for the bit-parity contract with the
+  * `length(regexp_replace(s, "[\\p{L}\\p{N}\\s]", ""))` composition it
+  * replaces). NULL in → NULL out, like the composition.
   */
-case class PunctCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
+case class PunctCount(child: Expression)
+  extends NativeKernel(TextExprs.getClass, "punctCount", StringType)
+  with UnaryLike[Expression] {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "punct_count"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextExprs.punctCount(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.punctCount($c)")
 
   override protected def withNewChildInternal(newChild: Expression): PunctCount =
     copy(child = newChild)
 }
 
 /** `set_hash_sum(arr, seed)` — order-independent set fingerprint as one
-  * codegen'd kernel call (see [[TextExprs.setHashSum]]).
+  * kernel call (see [[TextExprs.setHashSum]]); a NULL array sums to 0.
   */
 case class SetHashSum(child: Expression, seed: Long)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "setHashSum", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(seed)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "set_hash_sum"
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    TextExprs.setHashSum(v.asInstanceOf[ArrayData], seed)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("setHashSum")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        long $out = graft.plans.TextExprs.setHashSum(${c.isNull} ? null : ${c.value}, ${seed}L);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): SetHashSum =
     copy(child = newChild)
 }
 
-/** `char_ngrams(s, n)` — character n-grams of a string as one codegen'd
-  * kernel call (round 12), replacing the interpreted
+/** `char_ngrams(s, n)` — character n-grams of a string as one kernel call
+  * (round 12), replacing the interpreted
   * `transform(sequence(1, length-n+1), i -> substring(s, i, n))` cascade
   * whose per-position substring re-scan made it O(len²) per document AND
   * broke the surrounding whole-stage-codegen span (higher-order functions
@@ -1031,94 +854,37 @@ case class SetHashSum(child: Expression, seed: Long)
   * string yields an EMPTY array (the CASE guard's ELSE branch), so the
   * result is never SQL NULL. See [[TextExprs.charNgrams]].
   */
-case class CharNGrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNGrams(child: Expression, n: Int)
+  extends NativeKernel(TextExprs.getClass, "charNgrams", StringType)
+  with UnaryLike[Expression] {
 
   require(n >= 1, s"n-gram size must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(n)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_ngrams"
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    TextExprs.charNgrams(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("charNgrams")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData $out =
-          graft.plans.TextExprs.charNgrams(${c.isNull} ? null : ${c.value}, $n);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): CharNGrams =
     copy(child = newChild)
 }
 
 /** `count_in_set(arr, set)` — how many elements of an array<string> belong
-  * to a small LITERAL set, as one codegen'd kernel call (round 12): the twin
-  * of `size(filter(arr, x -> array_contains(set, x)))`, which runs as an
+  * to a small LITERAL set, as one kernel call (round 12): the twin of
+  * `size(filter(arr, x -> array_contains(set, x)))`, which runs as an
   * interpreted CodegenFallback lambda. Duplicates count each occurrence
   * (filter keeps them); null elements never match (`array_contains(set,
   * null)` is NULL → dropped by filter); a NULL input array yields SQL NULL
   * (`size(filter(NULL, …))` is NULL under ANSI) so argmax-over-nulls
   * behavior is unchanged for callers with nullable text.
   */
-case class CountInSet(child: Expression, set: Seq[String]) extends UnaryExpression {
+case class CountInSet(child: Expression, set: Seq[String])
+  extends NativeKernel(TextExprs.getClass, "countInSet", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  @transient private lazy val utf8Set: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
-    val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](set.size * 2)
-    set.foreach(x => s.add(org.apache.spark.unsafe.types.UTF8String.fromString(x)))
-    s
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(TextExprs.utf8Set(set))
   override def dataType: DataType = LongType
   override def prettyName: String = "count_in_set"
-  override def nullable: Boolean = child.nullable
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TextExprs.countInSet(v.asInstanceOf[ArrayData], utf8Set)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    // RAW HashSet type string (ADVICE r12): Janino's generics support is
-    // partial, and a cast it cannot compile makes Spark silently fall back
-    // to interpreted eval — defeating the kernel. Erasure means the raw
-    // cast is all the generated call needs; Round13Spec pins the codegen
-    // span like char_ngrams' test does.
-    val setRef = ctx.addReferenceObj("countInSetSet", utf8Set,
-      "java.util.HashSet")
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull};
-      long ${ev.value} = ${ev.isNull} ? 0L :
-        graft.plans.TextExprs.countInSet(${c.value}, $setRef);
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): CountInSet =
     copy(child = newChild)
@@ -1131,111 +897,55 @@ case class CountInSet(child: Expression, set: Seq[String]) extends UnaryExpressi
   * an absent/null token nulls the result, exactly like the fold.
   */
 case class SumMapVals(child: Expression, vocab: Seq[(String, Double)])
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "sumMapVals", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  @transient private lazy val map: java.util.HashMap[
-    org.apache.spark.unsafe.types.UTF8String, java.lang.Double] = {
+  override protected def constants: Seq[Any] = {
     val m = new java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, java.lang.Double](vocab.size * 2)
     vocab.foreach { case (k, v) =>
       m.put(org.apache.spark.unsafe.types.UTF8String.fromString(k),
         java.lang.Double.valueOf(v))
     }
-    m
+    Seq(m)
   }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override protected def nullResult: Boolean = true
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "sum_map_vals"
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TextExprs.sumMapVals(v.asInstanceOf[ArrayData], map)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    // RAW HashMap type string — the CountInSet Janino-generics discipline
-    val mapRef = ctx.addReferenceObj("sumMapValsMap", map, "java.util.HashMap")
-    val boxed = ctx.freshName("sumMapVals")
-    ev.copy(code = code"""
-      ${c.code}
-      Object $boxed = ${c.isNull} ? null :
-        graft.plans.TextExprs.sumMapVals(${c.value}, $mapRef);
-      boolean ${ev.isNull} = $boxed == null;
-      double ${ev.value} = ${ev.isNull} ? 0.0 : ((java.lang.Double) $boxed).doubleValue();
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): SumMapVals =
     copy(child = newChild)
 }
 
 /** `word_segments(w, n)` — non-overlapping space-joined n-word segments as
-  * one codegen'd kernel call (see [[TextExprs.wordSegments]] for the parity
-  * contract with the transform/slice/array_join composition it replaces).
-  * NULL in → NULL out, like the composition.
+  * one kernel call (see [[TextExprs.wordSegments]] for the parity contract
+  * with the transform/slice/array_join composition it replaces). NULL in →
+  * NULL out, like the composition.
   */
-case class WordSegments(child: Expression, n: Int) extends UnaryExpression {
+case class WordSegments(child: Expression, n: Int)
+  extends NativeKernel(TextExprs.getClass, "wordSegments", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(n)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_segments"
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(a: Any): Any =
-    TextExprs.wordSegments(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.wordSegments($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): WordSegments =
     copy(child = newChild)
 }
 
-/** `keep_in_set(arr)` — set-membership array filter as one codegen'd
-  * kernel call (see [[TextExprs.keepInSet]] for the parity contract with
-  * the `filter(arr, x -> x.isin(set))` lambda it replaces). NULL in →
-  * NULL out, like the lambda form.
+/** `keep_in_set(arr)` — set-membership array filter as one kernel call (see
+  * [[TextExprs.keepInSet]] for the parity contract with the
+  * `filter(arr, x -> x.isin(set))` lambda it replaces). NULL in → NULL out,
+  * like the lambda form.
   */
-case class KeepInSet(child: Expression, set: Seq[String]) extends UnaryExpression {
+case class KeepInSet(child: Expression, set: Seq[String])
+  extends NativeKernel(TextExprs.getClass, "keepInSet", ArrayType(StringType))
+  with UnaryLike[Expression] {
 
-  @transient private lazy val utf8Set: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
-    val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](set.size * 2)
-    set.foreach(x => s.add(org.apache.spark.unsafe.types.UTF8String.fromString(x)))
-    s
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(TextExprs.utf8Set(set))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "keep_in_set"
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(a: Any): Any =
-    TextExprs.keepInSet(a.asInstanceOf[ArrayData], utf8Set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("keepInSetSet", utf8Set, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.keepInSet($c, $setRef)")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): KeepInSet =
     copy(child = newChild)
@@ -1246,41 +956,15 @@ case class KeepInSet(child: Expression, set: Seq[String]) extends UnaryExpressio
   * Never NULL: a NULL input yields (0, 0) like `setHashSum(NULL)` per seed.
   */
 case class TokenHashSums(child: Expression, seed1: Long, seed2: Long)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "tokenHashSums", StringType)
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(seed1, seed2)
+  override protected def passNull: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("fp1", LongType, nullable = false),
     StructField("fp2", LongType, nullable = false)))
   override def prettyName: String = "token_hash_sums"
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    TextExprs.tokenHashSums(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], seed1, seed2)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("tokenHashSums")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.InternalRow $out =
-          graft.plans.TextExprs.tokenHashSums(
-            ${c.isNull} ? null : ${c.value}, ${seed1}L, ${seed2}L);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): TokenHashSums =
     copy(child = newChild)
@@ -1290,33 +974,15 @@ case class TokenHashSums(child: Expression, seed1: Long, seed2: Long)
   * [[TextExprs.matchTokens]]). NULL in → NULL out, like the composed
   * size(split)/keepInSet(split) pair it fuses.
   */
-case class MatchTokens(child: Expression, set: Seq[String]) extends UnaryExpression {
+case class MatchTokens(child: Expression, set: Seq[String])
+  extends NativeKernel(TextExprs.getClass, "matchTokens", StringType)
+  with UnaryLike[Expression] {
 
-  @transient private lazy val utf8Set: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
-    val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](set.size * 2)
-    set.foreach(x => s.add(org.apache.spark.unsafe.types.UTF8String.fromString(x)))
-    s
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq(TextExprs.utf8Set(set))
   override def dataType: DataType = StructType(Seq(
     StructField("dl", IntegerType, nullable = false),
     StructField("mtoks", ArrayType(StringType, containsNull = false), nullable = false)))
   override def prettyName: String = "match_tokens"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextExprs.matchTokens(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], utf8Set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("matchTokensSet", utf8Set, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextExprs.matchTokens($c, $setRef)")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): MatchTokens =
     copy(child = newChild)
@@ -1330,43 +996,17 @@ case class MatchTokens(child: Expression, set: Seq[String]) extends UnaryExpress
   * ("shingleless", always-kept) rows; else struct(fp1, fp2).
   */
 case class ShingleSetHash(child: Expression, n: Int, seed1: Long, seed2: Long)
-  extends UnaryExpression {
+  extends NativeKernel(TextExprs.getClass, "shingleSetHash", StringType)
+  with UnaryLike[Expression] {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
+  override protected def constants: Seq[Any] = Seq[Any](n, seed1, seed2) // no Int→Long widening
+  override protected def nullResult: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("fp1", LongType, nullable = false),
     StructField("fp2", LongType, nullable = false)))
   override def prettyName: String = "shingle_set_hash"
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TextExprs.shingleSetHash(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, seed1, seed2)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.JavaCode
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("shingleFp")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.InternalRow $out = ${c.isNull} ? null :
-          graft.plans.TextExprs.shingleSetHash(${c.value}, $n, ${seed1}L, ${seed2}L);
-        boolean ${ev.isNull} = ($out == null);
-      """,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleSetHash =
     copy(child = newChild)

@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Native vector-math expressions (SURVEY.md §4 tier (b): a custom Catalyst
-  * `Expression` with `doGenCode`, above UDFs in the preference order).
+  * expression over a static kernel method, a [[NativeKernel]], above UDFs
+  * in the preference order).
   *
   * Why a third implementation next to Vec.dot (higher-order lambdas,
   * interpreted closure per element) and Vec.dotUnrolled (64-term codegen'd
@@ -124,7 +124,8 @@ object VecExprs {
     * [[graft.plans.PqAssignEncode]] kernel body): flat when `subs` is
     * empty (list_id = c1), hierarchical otherwise (list_id = c1·k2 + s2).
     * Arithmetic is bit-identical to the closure-UDF composition it
-    * replaces — same normalize, same nearest-center loops, same encode.
+    * replaces — same normalize, same nearest-center loops, same encode. A
+    * NULL vector throws: the ANN input contract filters them upstream.
     */
   def assignEncode(
       v: ArrayData,
@@ -132,6 +133,9 @@ object VecExprs {
       subs: Array[Array[Array[Double]]],
       k2: Int,
       books: Array[Array[Array[Double]]]): org.apache.spark.sql.catalyst.InternalRow = {
+    if (v == null)
+      throw new IllegalArgumentException(
+        "pq_assign_encode: null vector (ANN input contract: filter null embeddings upstream)")
     val u = normalizeUnit(v.toDoubleArray)
     val c1 = nearestIdx(centers, u)
     val lid =
@@ -274,131 +278,76 @@ object VecExprs {
     }
     s
   }
-
-  private[plans] def checkDoubleArray(name: String, e: Expression): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name expects array<double>, got ${other.catalogString}")
-    }
 }
 
-/** `dot_product(a, b)` — Σ aᵢ·bᵢ as a single codegen'd kernel call. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = VecExprs.checkDoubleArray(prettyName, left)
-    if (l != TypeCheckResult.TypeCheckSuccess) l
-    else VecExprs.checkDoubleArray(prettyName, right)
-  }
+/** `dot_product(a, b)` — Σ aᵢ·bᵢ as a single kernel call. */
+case class DotProduct(left: Expression, right: Expression)
+  extends NativeKernel(VecExprs.getClass, "dot", ArrayType(DoubleType), ArrayType(DoubleType))
+  with BinaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecExprs.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VecExprs.dot($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 }
 
-/** `l2_norm(a)` — √(Σ aᵢ²) as a single codegen'd kernel call. */
-case class L2Norm(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecExprs.checkDoubleArray(prettyName, child)
+/** `l2_norm(a)` — √(Σ aᵢ²) as a single kernel call. */
+case class L2Norm(child: Expression)
+  extends NativeKernel(VecExprs.getClass, "l2", ArrayType(DoubleType))
+  with UnaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "l2_norm"
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecExprs.l2(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.VecExprs.l2($a)")
 
   override protected def withNewChildInternal(newChild: Expression): L2Norm =
     copy(child = newChild)
 }
 
 /** `lsh_buckets(vec)` — every LSH table's bucket id for a vector as one
-  * codegen'd kernel call returning array<long> (index = table). `planes`
-  * is Seq-typed for structural equality (plan canonicalization dedups
-  * identical scans); the kernel sees a converted primitive matrix via a
-  * per-query reference object.
+  * kernel call returning array<long> (index = table). `planes` is Seq-typed
+  * for structural equality (plan canonicalization dedups identical scans);
+  * the kernel sees a converted primitive matrix by reference.
   */
 case class LshBuckets(child: Expression, planes: Seq[Seq[Double]], nPlanes: Int)
-  extends UnaryExpression {
+  extends NativeKernel(VecExprs.getClass, "lshBuckets", ArrayType(DoubleType))
+  with UnaryLike[Expression] {
 
   require(planes.nonEmpty && planes.length % nPlanes == 0,
     "planes must hold nTables complete plane sets")
 
-  @transient private lazy val planesArr: Array[Array[Double]] =
-    planes.map(_.toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecExprs.checkDoubleArray(prettyName, child)
-
+  override protected def constants: Seq[Any] = Seq(planes.map(_.toArray).toArray, nPlanes)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_buckets"
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecExprs.lshBuckets(a.asInstanceOf[ArrayData], planesArr, nPlanes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planesArr, "double[][]")
-    defineCodeGen(ctx, ev, a => s"graft.plans.VecExprs.lshBuckets($a, $ref, $nPlanes)")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): LshBuckets =
     copy(child = newChild)
 }
 
-/** `adc_score(codes, qid)` — PQ asymmetric-distance score as one codegen'd
-  * kernel call (the [[LshBuckets]] pattern: per-query constant state rides
-  * a codegen reference object, not the expression tree, so janino never
-  * sees the q·m·kSub doubles). `luts` is Seq-typed for structural equality
-  * (plan canonicalization); the kernel sees a primitive java.util.HashMap
-  * built once per executor via the lazy val.
+/** `adc_score(codes, qid)` — PQ asymmetric-distance score as one kernel
+  * call (the [[LshBuckets]] pattern: per-query constant state is passed by
+  * reference, so Janino never sees the q·m·kSub doubles). `luts` is
+  * Seq-typed for structural equality (plan canonicalization); the kernel
+  * sees a java.util.HashMap built once per instance.
   */
 case class AdcScore(
     left: Expression, // codes: array<int>
     right: Expression, // qid: long
     luts: Seq[(Long, Seq[Double])],
     kSub: Int)
-  extends BinaryExpression {
+  extends NativeKernel(VecExprs.getClass, "adcScore", ArrayType(IntegerType), LongType)
+  with BinaryLike[Expression] {
 
   require(kSub > 0, "kSub must be positive")
 
-  @transient private lazy val lutMap: java.util.HashMap[java.lang.Long, Array[Double]] = {
+  override protected def constants: Seq[Any] = {
     val m = new java.util.HashMap[java.lang.Long, Array[Double]](luts.length * 2)
     luts.foreach { case (qid, flat) => m.put(qid, flat.toArray) }
-    m
+    Seq(m, kSub)
   }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.IntegerType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<int>, bigint), got (${l.catalogString}, ${r.catalogString})")
-    }
-
   override def dataType: DataType = DoubleType
   override def prettyName: String = "adc_score"
-
-  override protected def nullSafeEval(codes: Any, qid: Any): Any =
-    VecExprs.adcScore(codes.asInstanceOf[ArrayData], qid.asInstanceOf[Long], lutMap, kSub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("luts", lutMap, "java.util.HashMap")
-    defineCodeGen(ctx, ev, (codes, qid) =>
-      s"graft.plans.VecExprs.adcScore($codes, $qid, $ref, $kSub)")
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): AdcScore =
@@ -409,26 +358,14 @@ case class AdcScore(
   * lambda null semantics (ragged / null element → NULL, never an error) so
   * the optimizer rule is observationally transparent.
   */
-case class DotProductLenient(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProductLenient(left: Expression, right: Expression)
+  extends NativeKernel(
+    VecExprs.getClass, "dotLenient", ArrayType(DoubleType), ArrayType(DoubleType))
+  with BinaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = VecExprs.checkDoubleArray(prettyName, left)
-    if (l != TypeCheckResult.TypeCheckSuccess) l
-    else VecExprs.checkDoubleArray(prettyName, right)
-  }
-
+  override protected def nullResult: Boolean = true
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "dot_product_lenient"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecExprs.dotLenient(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Double ${ev.value}_r = graft.plans.VecExprs.dotLenient($a, $b);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductLenient =
@@ -436,37 +373,20 @@ case class DotProductLenient(left: Expression, right: Expression) extends Binary
 }
 
 /** `sq_dist_long(a, b)` — exact long squared distance between fixed-point
-  * vectors as one codegen'd kernel call, lambda null semantics (see
+  * vectors as one kernel call, lambda null semantics (see
   * [[VecExprs.sqDistLenient]]). The clustering family's inner loop
   * (embedding_kmeans / dedup_semantic / sample_diversity / sample_coreset)
   * evaluated the aggregate-zip_with fold INTERPRETED per (vector, centroid)
   * pair — ArrayAggregate is CodegenFallback — before round 18.
   */
-case class SqDistLong(left: Expression, right: Expression) extends BinaryExpression {
+case class SqDistLong(left: Expression, right: Expression)
+  extends NativeKernel(
+    VecExprs.getClass, "sqDistLenient", ArrayType(LongType), ArrayType(LongType))
+  with BinaryLike[Expression] {
 
-  private def checkLongArray(e: Expression): TypeCheckResult = e.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.catalogString}")
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = checkLongArray(left)
-    if (l != TypeCheckResult.TypeCheckSuccess) l else checkLongArray(right)
-  }
-
+  override protected def nullResult: Boolean = true
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "sq_dist_long"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecExprs.sqDistLenient(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Long ${ev.value}_r = graft.plans.VecExprs.sqDistLenient($a, $b);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.longValue(); }""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SqDistLong =
@@ -474,18 +394,19 @@ case class SqDistLong(left: Expression, right: Expression) extends BinaryExpress
 }
 
 /** `pq_assign_encode(vec)` — the ANN family's fused normalize →
-  * coarse-assign → PQ-encode map pass as ONE codegen'd kernel call
-  * (round 18). Replaces the struct-returning closure UDF whose
-  * `ae._1`/`ae._2` extraction Catalyst DUPLICATED: the join key's inferred
+  * coarse-assign → PQ-encode map pass as ONE kernel call (round 18).
+  * Replaces the struct-returning closure UDF whose `ae._1`/`ae._2`
+  * extraction Catalyst DUPLICATED: the join key's inferred
   * `isnotnull(UDF(vec)._1)` filter pushed the whole closure below the
   * exchange, so every corpus row paid normalize+assign+encode TWICE
   * (measured 2.3× on the declared sim_ann_ivfpq at sf10). The kernel
   * declares honest nullability — the requireVec contract upstream RAISES
-  * on a null vector, so the struct is never null and no isnotnull filter
-  * is inferred at all — and whole-stage codegen's subexpression
+  * on a null vector, and a NULL that gets here anyway throws in
+  * [[VecExprs.assignEncode]], so the struct is never null and no isnotnull
+  * filter is inferred at all — and whole-stage codegen's subexpression
   * elimination evaluates the one remaining occurrence once per row.
-  * Centers/subs/books travel as reference objects (the LshBuckets
-  * playbook), never as codegen literals.
+  * Centers/subs/books are passed by reference (the LshBuckets playbook),
+  * never as codegen literals.
   *
   * `subs` empty ⇒ flat coarse assignment (list_id = c1); otherwise
   * hierarchical (list_id = c1·k2 + s2). Scores bit-identical to the UDF
@@ -496,81 +417,33 @@ case class PqAssignEncode(
     centers: Seq[Seq[Double]],
     subs: Seq[Seq[Seq[Double]]],
     k2: Int,
-    books: Seq[Seq[Seq[Double]]]) extends UnaryExpression {
+    books: Seq[Seq[Seq[Double]]])
+  extends NativeKernel(VecExprs.getClass, "assignEncode", ArrayType(DoubleType))
+  with UnaryLike[Expression] {
 
-  @transient private lazy val centersA: Array[Array[Double]] =
-    centers.map(_.toArray).toArray
-  @transient private lazy val subsA: Array[Array[Array[Double]]] =
-    subs.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val booksA: Array[Array[Array[Double]]] =
-    books.map(_.map(_.toArray).toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecExprs.checkDoubleArray(prettyName, child)
-
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("list_id", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("codes",
-      ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false),
-      nullable = false)))
+  override protected def constants: Seq[Any] = Seq(
+    centers.map(_.toArray).toArray,
+    subs.map(_.map(_.toArray).toArray).toArray,
+    k2,
+    books.map(_.map(_.toArray).toArray).toArray)
+  override protected def passNull: Boolean = true
+  override def dataType: DataType = StructType(Seq(
+    StructField("list_id", LongType, nullable = false),
+    StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false)))
   override def prettyName: String = "pq_assign_encode"
-  // never null: the ANN input contract upstream (requireVec) raises on a
-  // null vector before this expression ever sees it — and declaring it
-  // lets the optimizer skip the isnotnull inference that caused the
-  // double evaluation
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    require(v != null,
-      "pq_assign_encode: null vector (ANN input contract: filter null embeddings upstream)")
-    VecExprs.assignEncode(v.asInstanceOf[ArrayData], centersA, subsA, k2, booksA)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{FalseLiteral, JavaCode}
-    val c = child.genCode(ctx)
-    val centersRef = ctx.addReferenceObj("paeCenters", centersA, "double[][]")
-    val subsRef = ctx.addReferenceObj("paeSubs", subsA, "double[][][]")
-    val booksRef = ctx.addReferenceObj("paeBooks", booksA, "double[][][]")
-    val out = ctx.freshName("assignEncode")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        if (${c.isNull}) {
-          throw new IllegalArgumentException(
-            "pq_assign_encode: null vector (ANN input contract: filter null embeddings upstream)");
-        }
-        InternalRow $out = graft.plans.VecExprs.assignEncode(
-          ${c.value}, $centersRef, $subsRef, $k2, $booksRef);
-      """,
-      isNull = FalseLiteral,
-      value = JavaCode.variable(out, dataType))
-  }
 
   override protected def withNewChildInternal(newChild: Expression): PqAssignEncode =
     copy(child = newChild)
 }
 
 /** Rewrite target of [[VecRewrite]] for L2 norms — lambda null semantics. */
-case class L2NormLenient(child: Expression) extends UnaryExpression {
+case class L2NormLenient(child: Expression)
+  extends NativeKernel(VecExprs.getClass, "l2Lenient", ArrayType(DoubleType))
+  with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecExprs.checkDoubleArray(prettyName, child)
-
+  override protected def nullResult: Boolean = true
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "l2_norm_lenient"
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecExprs.l2Lenient(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""java.lang.Double ${ev.value}_r = graft.plans.VecExprs.l2Lenient($a);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): L2NormLenient =
     copy(child = newChild)

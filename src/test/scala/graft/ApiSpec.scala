@@ -69,6 +69,15 @@ class ApiSpec extends SparkSpec {
     }
   }
 
+  test("no hand-written eval or codegen in main: every kernel runs through NativeKernel") {
+    // a native kernel declares its static call and NULL rule once and
+    // StaticInvoke runs it in both codegen modes; a second eval/doGenCode
+    // pair is where interpreted and compiled results drift apart
+    val sites = Seq("def eval(", "def nullSafeEval(", "def doGenCode(").flatMap(mainSitesOf)
+    assert(sites.nonEmpty && sites.forall(_.contains("/graft/plans/NativeKernel.scala:")),
+      sites.mkString("\n"))
+  }
+
   test("withFeatureColumns widens map keys into typed double columns") {
     val df = Ppdb.withFeatureColumns(Ppdb.parse(spark), Seq("PPDB2.0Score", "p(e|f)"))
     assert(df.columns.contains("PPDB2_0Score"))

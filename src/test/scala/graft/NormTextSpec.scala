@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 
-import graft.Tables.{normText, normTextBuiltin}
+import graft.ReferenceForms.normTextBuiltin
+import graft.Tables.normText
 
 /** Bit-parity gate for the round-13 [[graft.plans.NormText]] kernel against
   * the builtin composition `regexp_replace(trim(lower(s)), "\\s+", " ")` it

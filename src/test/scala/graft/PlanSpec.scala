@@ -206,7 +206,7 @@ class PlanSpec extends SparkSpec {
     // prints the builtin composition, so print-format drift can't turn
     // this lint into a vacuous pass
     val control = Tables.t(spark, d, "documents")
-      .select(Tables.normTextBuiltin(org.apache.spark.sql.functions.col("text")))
+      .select(ReferenceForms.normTextBuiltin(org.apache.spark.sql.functions.col("text")))
       .queryExecution.optimizedPlan.toString
     assert(control.contains(chain),
       s"positive control: builtin chain no longer prints as '$chain' — update the lint pattern")

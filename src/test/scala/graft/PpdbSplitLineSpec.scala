@@ -258,4 +258,13 @@ class PpdbSplitLineSpec extends SparkSpec {
     assert(!plan.contains("str_to_map") && !plan.contains(" split("),
       s"builtin split or str_to_map still planned:\n$plan")
   }
+
+  test("parse's generated stage splits each line once") {
+    // the six fields and the score token read one split array: subexpression
+    // elimination must share it, so the stage holds one split call
+    val source = org.apache.spark.sql.execution.debug.codegenString(
+      Ppdb.parse(spark).queryExecution.executedPlan)
+    val calls = "graft\\.plans\\.PpdbSplitLine\\.split\\(".r.findAllIn(source).size
+    assert(calls === 1, source)
+  }
 }

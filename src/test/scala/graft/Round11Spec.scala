@@ -28,7 +28,7 @@ class Round11Spec extends SparkSpec {
     val both = tokenFixture.select(
       col("id"),
       graft.operators.MinHashLsh.shingles(col("tk"), 3).as("native"),
-      graft.operators.MinHashLsh.shinglesExpr(col("tk"), 3).as("expr"))
+      ReferenceForms.minhashShinglesExpr(col("tk"), 3).as("expr"))
     val rows = both.collect()
     assert(rows.length === 300)
     rows.foreach { r =>

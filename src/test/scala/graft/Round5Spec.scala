@@ -46,7 +46,7 @@ class Round5Spec extends SparkSpec {
     val both = docs.select(
       col("id"),
       graft.operators.MinHashLsh.signature(col("sh"), 27).as("native"),
-      graft.operators.MinHashLsh.signatureExpr(col("sh"), 27).as("expr"))
+      ReferenceForms.minhashSignatureExpr(col("sh"), 27).as("expr"))
     val rows = both.collect()
     assert(rows.length === 200)
     rows.foreach { r =>

@@ -14,7 +14,7 @@ class Round6Spec extends SparkSpec {
     val both = docs.select(
       col("id"),
       graft.operators.MinHashLsh.signature(col("sh"), 9).as("native"),
-      graft.operators.MinHashLsh.signatureExpr(col("sh"), 9).as("expr"))
+      ReferenceForms.minhashSignatureExpr(col("sh"), 9).as("expr"))
     both.collect().foreach { r =>
       assert(!r.isNullAt(1), s"native sig must not be SQL NULL (id=${r.getLong(0)})")
       assert(r.getSeq[Any](1) === r.getSeq[Any](2), s"mismatch for id=${r.getLong(0)}")
