@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ANN index PERSISTENCE — build once, serve many (round 18, VERDICT r17
@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * parquet tables):
   *
   *   meta.parquet        1 row: (n, lists, l1, k2, m, k_sub, rerank,
-  *                       two_level) — the EXACT [[AnnIvfPq.paramsFor]]
-  *                       derivation, shared so build and fresh-fit can
-  *                       never diverge
+  *                       two_level, n_probe, sub_probe_frac) — the
+  *                       [[AnnIvfPq.paramsFor]] derivation plus the fitted
+  *                       model's probe widths
   *   centroids.parquet   (cell_id, center) — L1 coarse centers
   *   subcenters.parquet  (l1_id, sub_id, center) — two-level only
   *   codebooks.parquet   (m_idx, code, center) — PQ sub-quantizers
@@ -30,10 +30,15 @@ import org.apache.spark.sql.functions._
   * probed-fraction constant), and a Hive-partitioned coded table turns the
   * probe list into PARTITION PRUNING — unprobed cells are never READ, not
   * merely filtered, so serve-side IO tracks the probe fraction instead of
-  * the corpus size. The fits are deterministic (seeded, hash-ordered
-  * samples) and the serve path replays the same probe/ADC/re-rank tail
-  * with the LOADED artifacts, so a reloaded index answers bit-identically
-  * to a fresh fit (Round18Spec pins it at sf0.01 and the 4.2M rung).
+  * the corpus size.
+  *
+  * Build and serve share the index itself: [[buildAdaptive]] fits the
+  * [[AnnIvfPq.IvfPqModel]] exactly as [[AnnIvfPq.topKAdaptive]] does and
+  * writes its `encode`; [[serve]] reads the model back and runs its
+  * `search` — the same probe, ADC scan and re-ranks as the fresh query.
+  * Only the persistence and the partition prune live here, so a reloaded
+  * index answers bit-identically to a fresh fit by construction
+  * (Round18Spec checks it at sf0.01 and the 4.2M rung).
   *
   * The exact re-rank tail reads the ORIGINAL embeddings table by candidate
   * id (a pruned, pushdown-friendly point-read of ≤ rerank·q rows) — codes
@@ -42,102 +47,80 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  private def requireVecs(emb0: DataFrame): DataFrame =
-    emb0.withColumn("vec",
-      when(col("vec").isNotNull, col("vec")).otherwise(raise_error(lit(
-        "AnnIndex: null corpus vector (ANN input contract: filter null embeddings upstream)"))))
+  import AnnIvfPq.IvfPqModel
 
-  /** Fit + encode under the EXACT [[AnnIvfPq.paramsFor]] rules and persist
-    * the artifacts under `path`. One corpus pass for the encode (the fused
-    * assign+encode kernel), bounded executor-side fits, nothing but the
-    * ≤ lists centroids / m·kSub codebook rows ever collected.
+  /** Fit + encode under the [[AnnIvfPq.paramsFor]] rules and persist the
+    * model and the coded corpus under `path`. One corpus pass for the
+    * encode (the fused assign+encode kernel), bounded executor-side fits,
+    * nothing but the ≤ lists centroids / m·kSub codebook rows ever
+    * collected.
     */
   def buildAdaptive(emb0: DataFrame, path: String,
       maxLists: Int = AnnIvf.MaxLists): Unit = {
-    val emb = requireVecs(emb0)
+    val emb = AnnIvf.requireVec(emb0, "vec", "corpus", "AnnIndex")
     val spark = emb.sparkSession
     import spark.implicits._
     val n = emb.count()
     val p = AnnIvfPq.paramsFor(n, maxLists)
+    val model = IvfPqModel.fit(emb, p)
 
-    val fitWidth = if (p.twoLevel) p.l1 else p.lists
-    val capC = AnnIvf.sampleCapFor(fitWidth)
-    val capB = math.max(4096, 16 * p.kSub)
-    val cap2 = if (p.twoLevel) 16 * p.l1 * p.k2 else 0
-    val unitSample = AnnIvfPq.unitSampleOf(emb, math.max(math.max(capC, capB), cap2))
-
-    val centers = AnnIvf.fitCentroids(unitSample, fitWidth, iters = 5, sampleCap = capC)
-    val books = AnnPq.fitCodebooks(unitSample, p.m, p.kSub, iters = 5, sampleCap = capB)
-    val subs: Array[Array[Array[Double]]] =
-      if (p.twoLevel && centers.nonEmpty && books.nonEmpty)
-        AnnIvf.fitSubCenters(unitSample, centers, p.k2, iters = 5, cap2 = cap2)
-      else Array.empty
-
-    // sub_probe_frac rides in meta so an index built under one probing rule
-    // can never be served under another (the round-18 subwide shipping)
-    val subFrac = if (p.twoLevel) AnnIvfPq.SubProbeFrac2L else 0.0
-    Seq((n, p.lists, p.l1, p.k2, p.m, p.kSub, p.rerank, p.twoLevel, subFrac))
-      .toDF("n", "lists", "l1", "k2", "m", "k_sub", "rerank", "two_level", "sub_probe_frac")
+    // the probe widths ride in meta so an index built under one probing
+    // rule can never be served under another (the round-18 subwide shipping)
+    Seq((n, p.lists, p.l1, model.k2, p.m, p.kSub, model.rerank, p.twoLevel,
+        model.nProbe, model.subProbeFrac))
+      .toDF("n", "lists", "l1", "k2", "m", "k_sub", "rerank", "two_level",
+        "n_probe", "sub_probe_frac")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.parquet")
-    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+    model.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell_id", "center")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids.parquet")
-    (for ((cell, c1) <- subs.zipWithIndex.toSeq; (sc, s2) <- cell.zipWithIndex)
+    (for ((cell, c1) <- model.subs.zipWithIndex.toSeq; (sc, s2) <- cell.zipWithIndex)
       yield (c1, s2, sc.toSeq))
       .toDF("l1_id", "sub_id", "center")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/subcenters.parquet")
-    (for ((book, mi) <- books.zipWithIndex.toSeq; (c, code) <- book.zipWithIndex)
+    (for ((book, mi) <- model.books.zipWithIndex.toSeq; (c, code) <- book.zipWithIndex)
       yield (mi, code, c.toSeq))
       .toDF("m_idx", "code", "center")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks.parquet")
 
-    val sc0 = spark.sparkContext
-    val coded =
-      if (centers.isEmpty || books.isEmpty)
-        emb.select(col("vec_id"), lit(0L).as("list_id"),
-          array().cast("array<int>").as("codes")).limit(0)
-      else {
-        // native fused assign+encode kernel (round 18, the AnnIvfPq.topK
-        // rationale): the closure-UDF form was re-evaluated inside the
-        // inferred isnotnull filter; the non-nullable kernel runs once
-        val subsSeq: Seq[Seq[Seq[Double]]] =
-          if (!p.twoLevel) Nil else subs.map(_.map(_.toSeq).toSeq).toSeq
-        emb
-          .repartition(sc0.defaultParallelism, col("vec_id"))
-          .select(col("vec_id"),
-            org.apache.spark.sql.GraftSqlShim.column(graft.plans.PqAssignEncode(
-              org.apache.spark.sql.GraftSqlShim.expression(col("vec")),
-              centers.map(_.toSeq).toSeq, subsSeq, p.k2,
-              books.map(_.map(_.toSeq).toSeq).toSeq))
-              .as("ae"))
-          .select(col("vec_id"), col("ae.list_id").as("list_id"), col("ae.codes").as("codes"))
-      }
     // one file per cell (the BucketedJoin one-file-per-bucket discipline):
     // repartition ON the partition column so each task holds whole cells
-    coded
+    model.encode(emb)
       .repartition(col("list_id"))
       .write.partitionBy("list_id").mode("overwrite")
       .parquet(s"$path/coded.parquet")
   }
 
   /** Serve a top-k query batch off the persisted index: reload the bounded
-    * artifacts, probe, prune (partition-level), ADC-scan only the probed
-    * cells' codes, exact-re-rank against the source embeddings. No fit, no
-    * encode — the amortized path.
+    * model, prune the coded table to the probed cells (partition-level),
+    * and run the model's search — ADC over the probed cells' codes, exact
+    * re-rank against the source embeddings. No fit, no encode — the
+    * amortized path.
     */
   def serve(spark: SparkSession, path: String, emb0: DataFrame,
       queries0: DataFrame, k: Int = 5): DataFrame = {
-    val emb = requireVecs(emb0)
-    val queries = queries0.withColumn("qvec",
-      when(col("qvec").isNotNull, col("qvec")).otherwise(raise_error(lit(
-        "AnnIndex: null query vector (ANN input contract: filter null embeddings upstream)"))))
+    val (emb, queries) = AnnIvf.requireVecs(emb0, queries0, "AnnIndex")
+    read(spark, path).search(emb, queries, k) { probed =>
+      // partition-level prune: the probe list is small (≤ q · lists/2), so
+      // an explicit IN filter on the PARTITION column skips unprobed cells
+      // at the file-listing level — serve IO tracks the probed fraction
+      val probedCells = probed.select(col("probe")).distinct()
+        .collect().map(_.getLong(0))
+      val codedAll = spark.read.parquet(s"$path/coded.parquet")
+        .withColumn("list_id", col("list_id").cast("long"))
+      // a huge query batch could probe more cells than an IN literal should
+      // carry — past the bound the equi-join alone filters (pruning lost,
+      // correctness unchanged)
+      if (probedCells.length <= 100000)
+        codedAll.filter(col("list_id").isInCollection(probedCells))
+      else codedAll
+    }
+  }
 
+  /** The model [[buildAdaptive]] wrote under `path`. */
+  private def read(spark: SparkSession, path: String): IvfPqModel = {
     val meta = spark.read.parquet(s"$path/meta.parquet").collect()(0)
-    val lists = meta.getAs[Int]("lists")
     val k2 = meta.getAs[Int]("k2")
-    val rerank = meta.getAs[Int]("rerank")
-    val twoLevel = meta.getAs[Boolean]("two_level")
-
     val centers: Array[Array[Double]] =
       spark.read.parquet(s"$path/centroids.parquet").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -147,13 +130,8 @@ object AnnIndex {
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
         .groupBy(_._1._1).toArray.sortBy(_._1)
         .map(_._2.sortBy(_._1._2).map(_._2))
-    if (centers.isEmpty || books.isEmpty) {
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
     val subs: Array[Array[Array[Double]]] =
-      if (!twoLevel) Array.empty
+      if (k2 == 0) Array.empty
       else {
         val bySub = spark.read.parquet(s"$path/subcenters.parquet").collect()
           .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
@@ -163,58 +141,8 @@ object AnnIndex {
         centers.indices.toArray.map(c1 =>
           bySub(c1).sortBy(_._1._2).map(_._2))
       }
-
-    val sc0 = spark.sparkContext
-    val centersB = sc0.broadcast(centers)
-    val probeUdf =
-      if (!twoLevel) {
-        // replay the DECLARED probe width from meta, not the fitted center
-        // count: on a tiny corpus the fit can return fewer centers than
-        // requested and min(nProbe, centers) then probes ALL of them,
-        // exactly as the fresh topK does
-        val nProbe = math.min(math.max(1, lists / 2), centers.length)
-        udf((qv: Seq[Double]) =>
-          AnnIvf.rankedIdx(centersB.value, AnnPq.normalize(qv.toArray))
-            .take(nProbe).map(_.toLong))
-      } else {
-        val subsB = sc0.broadcast(subs)
-        val subFrac = meta.getAs[Double]("sub_probe_frac")
-        val l1Probe = math.max(1, math.ceil(centers.length * math.sqrt(0.5)).toInt)
-        udf((qv: Seq[Double]) => {
-          val u = AnnPq.normalize(qv.toArray)
-          AnnIvf.rankedIdx(centersB.value, u).take(l1Probe).flatMap { c1 =>
-            val cell = subsB.value(c1)
-            val subProbe = math.max(1, math.ceil(cell.length * subFrac).toInt)
-            AnnIvf.rankedIdx(cell, u).take(subProbe).map(s2 => c1.toLong * k2 + s2)
-          }
-        })
-      }
-    val probed = queries.withColumn("probe", explode(probeUdf(col("qvec"))))
-      .select(col("qid"), col("probe"))
-      .localCheckpoint() // tiny; reused by the prune filter below
-
-    // partition-level prune: the probe list is small (≤ q · lists/2), so an
-    // explicit IN filter on the PARTITION column skips unprobed cells at
-    // the file-listing level — serve IO tracks the probed fraction
-    val probedCells = probed.select(col("probe")).distinct()
-      .collect().map(_.getLong(0))
-    val codedAll = spark.read.parquet(s"$path/coded.parquet")
-      .withColumn("list_id", col("list_id").cast("long"))
-    // a huge query batch could probe more cells than an IN literal should
-    // carry — past the bound the equi-join alone filters (pruning lost,
-    // correctness unchanged)
-    val coded =
-      if (probedCells.length <= 100000)
-        codedAll.filter(col("list_id").isInCollection(probedCells))
-      else codedAll
-
-    val scored = coded
-      .join(broadcast(probed),
-        col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        AnnPq.adcScorer(queries, books)(col("codes"), col("qid")).as("score"))
-    val cands = AnnPq.topRerank(scored, rerank)
-    AnnPq.exactRerank(cands, emb, queries, k)
+    IvfPqModel(centers, subs, k2, books, meta.getAs[Int]("n_probe"),
+      meta.getAs[Double]("sub_probe_frac"), meta.getAs[Int]("rerank"))
   }
 
   // ---- session-scoped build cache (the BucketedJoin discipline) ----

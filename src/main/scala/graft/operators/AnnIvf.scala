@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.VecExprs
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the second
   * scale path next to [[AnnLsh]]: a k-means coarse quantizer partitions the
@@ -82,18 +84,15 @@ object AnnIvf {
     * rounds ≤ 12; above it the two-level quantizer takes over.
     */
   def topKAdaptive(emb: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val n = emb.count()
-    val lists = listsFor(n)
-    if (lists <= MaxLists)
-      topK(emb, queries, k, nLists = lists, nProbe = math.max(1, lists / 2),
-        sampleCap = sampleCapFor(lists))
-    else {
-      // balanced power-of-two split: l1 = 2^⌈log2 √L⌉, k2 = L / l1 — both
-      // ≤ MaxLists for every L ≤ MaxHierLists, so each per-cell fit stays
-      // inside the bound the one-task fit was clamped for
-      val l1 = 1 << math.ceil(math.log(math.sqrt(lists.toDouble)) / math.log(2.0)).toInt
-      topK2Level(emb, queries, k, l1 = l1, k2 = lists / l1)
-    }
+    // the family's split (AnnIvfPq.paramsFor): a balanced power-of-two
+    // l1 = 2^⌈log2 √L⌉, k2 = L / l1 — both ≤ MaxLists for every
+    // L ≤ MaxHierLists, so each per-cell fit stays inside the bound the
+    // one-task fit was clamped for
+    val p = AnnIvfPq.paramsFor(emb.count())
+    if (!p.twoLevel)
+      topK(emb, queries, k, nLists = p.lists, nProbe = math.max(1, p.lists / 2),
+        sampleCap = sampleCapFor(p.lists))
+    else topK2Level(emb, queries, k, l1 = p.l1, k2 = p.k2)
   }
 
   /** Seeded-shuffle init + Lloyd, run INSIDE one executor task over the
@@ -112,11 +111,6 @@ object AnnIvf {
     val n = points.length
     val dim = points(0).length
     val k0 = math.min(k, n).max(1)
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val dx = a(i) - b(i); s += dx * dx; i += 1 }
-      s
-    }
     val rnd = new scala.util.Random(seed)
     val centers = rnd.shuffle((0 until n).toVector).take(k0)
       .map(points(_).clone).toArray
@@ -127,13 +121,7 @@ object AnnIvf {
       var p = 0
       while (p < n) {
         val v = points(p)
-        var bc = 0; var bd = Double.MaxValue
-        var ci = 0
-        while (ci < k0) {
-          val d = d2(v, centers(ci))
-          if (d < bd) { bd = d; bc = ci }
-          ci += 1
-        }
+        val bc = VecExprs.nearestIdx(centers, v)
         val sv = sums(bc)
         var i = 0
         while (i < dim) { sv(i) += v(i); i += 1 }
@@ -170,11 +158,7 @@ object AnnIvf {
     // `java -cp` launch — a library must not depend on launcher JVM flags.
     implicit val enc: Encoder[Seq[Seq[Double]]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Seq[Double]]]()
-    emb
-      .select(col("vec_id"), col("vec"),
-        pmod(xxhash64(col("vec_id")), lit(1000000007L)).as("hk"))
-      .orderBy(col("hk"), col("vec_id"))
-      .limit(sampleCap)
+    hashSample(emb, sampleCap)
       .coalesce(1)
       .mapPartitions { (it: Iterator[Row]) =>
         // re-sort inside the task: the single post-limit partition does not
@@ -190,6 +174,16 @@ object AnnIvf {
       .getOrElse(Array.empty[Array[Double]])
   }
 
+  /** The fit sample of every quantizer in the family: the `cap` smallest
+    * rows by (hk = xxhash64(vec_id) mod p, vec_id), as (vec_id, vec, hk).
+    */
+  private[operators] def hashSample(emb: DataFrame, cap: Int): DataFrame =
+    emb
+      .select(col("vec_id"), col("vec"),
+        pmod(xxhash64(col("vec_id")), lit(1000000007L)).as("hk"))
+      .orderBy(col("hk"), col("vec_id"))
+      .limit(cap)
+
   /** Top-k approximate neighbors. emb: (vec_id, vec array<double>);
     * queries: (qid, qvec array<double>).
     */
@@ -200,76 +194,47 @@ object AnnIvf {
       nLists: Int = 16,
       nProbe: Int = 4,
       sampleCap: Int = 4096): DataFrame = {
-
-    // ANN family input contract (same as AnnLsh.tableBuckets): vectors are
-    // non-null — a null cannot be quantized, and silently dropping it from
-    // the index or probe set is invisible recall loss at scale. Fail with a
-    // CLEAR per-row error instead of the bare executor NPE the fit's
-    // getSeq(...).toArray would otherwise throw (NullCorpusSpec pins the
-    // message).
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnIvf: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
-
+    val (emb, queries) = requireVecs(emb0, queries0, "AnnIvf")
     val centers = fitCentroids(emb, nLists, iters = 5, sampleCap = sampleCap)
-    if (centers.isEmpty) {
-      // empty corpus → empty result with the contract schema, like every
-      // other operator (not a driver-side crash in the fit)
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
+    search(emb, queries, k, centers, Array.empty, 0, nProbe, 0.0)
+  }
 
-    // corpus-side assignment: one broadcast-centroid pass. A closure UDF on
-    // purpose — the expression alternative inlines the k×dim centroid
-    // matrix as a ~1000-literal codegen tree that janino takes seconds to
-    // compile (and MLlib's transform is itself a closure under the hood).
-    val nearestUdf = udf((v: Seq[Double]) => {
-      val q = v.toArray
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < centers.length) {
-        val cv = centers(c)
-        var s = 0.0; var i = 0
-        while (i < q.length) { val dx = q(i) - cv(i); s += dx * dx; i += 1 }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      best
-    })
+  /** The search both quantizer paths share once the centers are fit:
+    * assign every corpus vector to its cell, equi-join the corpus to the
+    * broadcast probe list ([[probeCells]]) on list_id, exact cosine over
+    * the candidates (native codegen'd kernels — graft.plans.VecExprs,
+    * bit-identical to the lambda fold), per-query top-k. Centers and subs
+    * are broadcast, not closure-captured: the two-level codebook is
+    * l1·k2·dim doubles (~33 MB at the 65536-list ceiling) — a closure
+    * reserializes it per task; a broadcast ships it once per executor. The
+    * assignment is a closure UDF on purpose — the expression alternative
+    * inlines the k×dim centroid matrix as a ~1000-literal codegen tree that
+    * janino takes seconds to compile (and MLlib's transform is itself a
+    * closure under the hood).
+    */
+  private def search(
+      emb: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      centers: Array[Array[Double]],
+      subs: Array[Array[Array[Double]]],
+      k2: Int,
+      nProbe: Int,
+      subFrac: Double): DataFrame = {
+    if (centers.isEmpty) return emptyResult(queries)
+    val sc = emb.sparkSession.sparkContext
+    val centersB = sc.broadcast(centers)
+    val subsB = sc.broadcast(subs)
+    val assignUdf = udf((v: Seq[Double]) =>
+      VecExprs.assignCell(centersB.value, subsB.value, k2, v.toArray))
     // fan out: assignment + the candidate cosine kernel are CPU bound and a
     // one-file scan arrives as a single partition
     val assigned = emb
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("vec"), nearestUdf(col("vec")).as("list_id"))
-
-    // nProbe nearest cells per (tiny) query side
-    val nProbe0 = math.min(nProbe, centers.length)
-    val probeUdf = udf((qv: Seq[Double]) => {
-      val q = qv.toArray
-      centers.indices
-        .map { c =>
-          val cv = centers(c)
-          var s = 0.0; var i = 0
-          while (i < q.length) { val dx = q(i) - cv(i); s += dx * dx; i += 1 }
-          (s, c)
-        }
-        .sortBy(identity)
-        .take(nProbe0)
-        .map(_._2)
-    })
+      .repartition(sc.defaultParallelism, col("vec_id"))
+      .select(col("vec_id"), col("vec"), assignUdf(col("vec")).as("list_id"))
+    val probeUdf = udf((qv: Seq[Double]) =>
+      probeCells(centersB.value, subsB.value, k2, nProbe, subFrac, qv.toArray))
     val probed = queries.withColumn("probe", explode(probeUdf(col("qvec"))))
-    candidateTopK(assigned, probed, k)
-  }
-
-  /** Shared tail of both quantizer paths: equi-join the assigned corpus to
-    * the broadcast probe list on list_id, exact cosine over the candidates
-    * (native codegen'd kernels — graft.plans.VecExprs, bit-identical to the
-    * lambda fold), per-query top-k.
-    */
-  private def candidateTopK(assigned: DataFrame, probed: DataFrame, k: Int): DataFrame = {
     val dot = graft.functions.Vec.dotNative("vec", "qvec")
     val nv = graft.functions.Vec.l2Native("vec")
     val nq = graft.functions.Vec.l2Native("qvec")
@@ -284,22 +249,61 @@ object AnnIvf {
       .select(col("qid"), col("rnk"), col("vec_id").as("nid"), col("cos"))
   }
 
-  /** Index of the nearest center by squared L2 — the one inner loop every
-    * closure here shares (and [[AnnIvfPq.topK2Level]]'s assignment reuses).
+  /** ANN family input contract (AnnLsh.tableBuckets states the same):
+    * vectors are non-null — a null cannot be quantized, and silently
+    * dropping it from the index or probe set is invisible recall loss at
+    * scale. Each row fails with a CLEAR error naming `operator` and the side
+    * instead of the bare executor NPE a fit's getSeq(...).toArray would
+    * throw (NullCorpusSpec pins the message of every entry point).
     */
-  private[operators] def nearestIdx(centers: Array[Array[Double]], q: Array[Double]): Int =
-    graft.plans.VecExprs.nearestIdx(centers, q) // canonical copy (round 18)
+  private[operators] def requireVecs(
+      emb: DataFrame, queries: DataFrame, operator: String): (DataFrame, DataFrame) =
+    (requireVec(emb, "vec", "corpus", operator), requireVec(queries, "qvec", "query", operator))
+
+  /** [[requireVecs]] for one side: `column` of `df` non-null or the row raises. */
+  private[operators] def requireVec(
+      df: DataFrame, column: String, side: String, operator: String): DataFrame =
+    df.withColumn(column, when(col(column).isNotNull, col(column)).otherwise(raise_error(lit(
+      s"$operator: null $side vector (ANN input contract: filter null embeddings upstream)"))))
+
+  /** Empty corpus → empty result with the (qid, rnk, nid, cos) contract
+    * schema, like every other operator (not a driver-side crash in a fit).
+    */
+  private[operators] def emptyResult(queries: DataFrame): DataFrame =
+    queries
+      .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
+      .limit(0)
 
   /** Ranked center indices by squared L2, nearest first (probe side only —
     * queries are tiny).
     */
   private[operators] def rankedIdx(centers: Array[Array[Double]], q: Array[Double]): Seq[Int] =
-    centers.indices.map { c =>
-      val cv = centers(c)
-      var s = 0.0; var i = 0
-      while (i < q.length) { val dx = q(i) - cv(i); s += dx * dx; i += 1 }
-      (s, c)
-    }.sortBy(identity).map(_._2)
+    centers.indices.map(c => (VecExprs.sqDist(q, centers(c)), c))
+      .sortBy(identity).map(_._2)
+
+  /** Cells probed at one level: `frac` of `width`, at least one. */
+  private[operators] def levelProbe(width: Int, frac: Double): Int =
+    math.max(1, math.ceil(width * frac).toInt)
+
+  /** The one IVF probe rule, flat and two-level, of every IVF-family search
+    * (AnnIvf, AnnIvfPq and the persisted index): the `nProbe` nearest
+    * centers of `q`; with sub-centers, inside each of those cells the
+    * [[levelProbe]] `subFrac` nearest subs, as global list ids c1·k2 + s2.
+    */
+  private[operators] def probeCells(
+      centers: Array[Array[Double]],
+      subs: Array[Array[Array[Double]]],
+      k2: Int,
+      nProbe: Int,
+      subFrac: Double,
+      q: Array[Double]): Seq[Long] = {
+    val cells = rankedIdx(centers, q).take(nProbe)
+    if (subs.isEmpty) cells.map(_.toLong)
+    else cells.flatMap { c1 =>
+      val cell = subs(c1)
+      rankedIdx(cell, q).take(levelProbe(cell.length, subFrac)).map(s2 => c1.toLong * k2 + s2)
+    }
+  }
 
   /** Distributed per-cell sub-quantizer fit (level 2 of [[topK2Level]]):
     * a hash-ordered deterministic sample of `cap2` rows is assigned to its
@@ -320,17 +324,13 @@ object AnnIvf {
     val sess = emb.sparkSession
     import sess.implicits._
     val l1B = sess.sparkContext.broadcast(l1Centers)
-    val fitted = emb
-      .select(col("vec_id"), col("vec"),
-        pmod(xxhash64(col("vec_id")), lit(1000000007L)).as("hk"))
-      .orderBy(col("hk"), col("vec_id"))
-      .limit(cap2)
+    val fitted = hashSample(emb, cap2)
       // TakeOrdered lands the sample on one partition; fan the (CPU-bound)
       // nearest-cell assignment back out before the per-cell shuffle
       .repartition(sess.sparkContext.defaultParallelism)
       .map { r =>
         val v = r.getSeq[Double](1)
-        (nearestIdx(l1B.value, v.toArray), r.getLong(2), r.getLong(0), v)
+        (VecExprs.nearestIdx(l1B.value, v.toArray), r.getLong(2), r.getLong(0), v)
       }
       .groupByKey(_._1)
       .mapGroups { (cell, it) =>
@@ -353,8 +353,8 @@ object AnnIvf {
     * each), so the PROBED FRACTION of the corpus stays the same ≈ ½ the
     * flat ladder pins — finer cells at the same candidate budget, the same
     * recall argument as round 12's √n sizing. list_id = l1·k2 + sub is
-    * globally unique, and the candidate join/top-k tail is byte-shared with
-    * the flat path ([[candidateTopK]]).
+    * globally unique, and assignment, probe and the candidate join/top-k
+    * tail are shared with the flat path ([[search]]).
     */
   def topK2Level(
       emb0: DataFrame,
@@ -362,46 +362,12 @@ object AnnIvf {
       k: Int = 5,
       l1: Int = 64,
       k2: Int = 32): DataFrame = {
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnIvf: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
-
+    val (emb, queries) = requireVecs(emb0, queries0, "AnnIvf")
     val centers = fitCentroids(emb, l1, iters = 5, sampleCap = sampleCapFor(l1))
-    if (centers.isEmpty)
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    val subs = fitSubCenters(emb, centers, k2, iters = 5,
-      cap2 = 16 * centers.length * k2)
-
-    // broadcast, not closure-capture: the two-level codebook is l1·k2·dim
-    // doubles (~33 MB at the 65536-list ceiling) — a closure reserializes
-    // it per task; a broadcast ships it once per executor
-    val sc = emb.sparkSession.sparkContext
-    val centersB = sc.broadcast(centers)
-    val subsB = sc.broadcast(subs)
-
-    val assignUdf = udf((v: Seq[Double]) => {
-      val q = v.toArray
-      val c1 = nearestIdx(centersB.value, q)
-      c1.toLong * k2 + nearestIdx(subsB.value(c1), q)
-    })
-    val assigned = emb
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("vec"), assignUdf(col("vec")).as("list_id"))
-
-    val l1Probe = math.max(1, math.ceil(centers.length * math.sqrt(0.5)).toInt)
-    val probeUdf = udf((qv: Seq[Double]) => {
-      val q = qv.toArray
-      rankedIdx(centersB.value, q).take(l1Probe).flatMap { c1 =>
-        val cell = subsB.value(c1)
-        val subProbe = math.max(1, math.ceil(cell.length * math.sqrt(0.5)).toInt)
-        rankedIdx(cell, q).take(subProbe).map(s2 => c1.toLong * k2 + s2)
-      }
-    })
-    val probed = queries.withColumn("probe", explode(probeUdf(col("qvec"))))
-    candidateTopK(assigned, probed, k)
+    val subs =
+      if (centers.isEmpty) Array.empty[Array[Array[Double]]]
+      else fitSubCenters(emb, centers, k2, iters = 5, cap2 = 16 * centers.length * k2)
+    search(emb, queries, k, centers, subs, k2,
+      levelProbe(centers.length, math.sqrt(0.5)), math.sqrt(0.5))
   }
 }

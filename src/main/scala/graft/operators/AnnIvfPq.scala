@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ approximate nearest-neighbor search — the composition the two
@@ -31,6 +31,11 @@ import org.apache.spark.sql.functions._
   * broadcast probe list on list_id (equi-join, no cross product against
   * the corpus); top-`rerank` is the two-phase heap pattern; the exact
   * re-rank join touches ≤ rerank·q ids.
+  *
+  * One index, two lifetimes: [[IvfPqModel]] holds the fitted index and is
+  * the only copy of its fit, encode, probe and search. The entry points
+  * here fit it and search it in one query; [[AnnIndex]] fits it once,
+  * persists it, and serves later queries through the same `search`.
   */
 object AnnIvfPq {
 
@@ -96,12 +101,7 @@ object AnnIvfPq {
   private[graft] def topKAdaptive(
       emb: DataFrame, queries: DataFrame, k: Int, maxLists: Int): DataFrame = {
     val p = paramsFor(emb.count(), maxLists)
-    if (!p.twoLevel)
-      topK(emb, queries, k, nLists = p.lists, nProbe = math.max(1, p.lists / 2),
-        m = p.m, kSub = p.kSub, rerank = p.rerank)
-    else
-      topK2Level(emb, queries, k, l1 = p.l1, k2 = p.k2,
-        m = p.m, kSub = p.kSub, rerank = p.rerank)
+    fitAndSearch(emb, queries, k)(IvfPqModel.fit(_, p))
   }
 
   /** Top-k approximate neighbors through the pruned compressed scan.
@@ -115,66 +115,9 @@ object AnnIvfPq {
       nProbe: Int = 8,
       m: Int = 8,
       kSub: Int = 32,
-      rerank: Int = 128): DataFrame = {
-
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnIvfPq: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
-    val spark = emb.sparkSession
-
-    val capC = AnnIvf.sampleCapFor(nLists)
-    val capB = math.max(4096, 16 * kSub)
-    val unitSample = unitSampleOf(emb, math.max(capC, capB))
-
-    val centers = AnnIvf.fitCentroids(unitSample, nLists, iters = 5,
-      sampleCap = capC)
-    val books = AnnPq.fitCodebooks(unitSample, m, kSub, iters = 5,
-      sampleCap = capB)
-    if (centers.isEmpty || books.isEmpty) {
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
-    val centersB = spark.sparkContext.broadcast(centers)
-
-    // ONE fused map pass: cell assignment + PQ encode off a single
-    // normalize, as the NATIVE plans.PqAssignEncode kernel (round 18). The
-    // round-17 closure-UDF form regressed the declared key 2.3× at sf10:
-    // the join key's inferred isnotnull(UDF(vec)._1) filter pushed the
-    // whole closure below the exchange, so every corpus row paid
-    // normalize+assign+encode TWICE (plans/r18/sim_ann_ivfpq_before.txt
-    // line 66 shows the duplicated filter). The kernel declares
-    // non-nullable output (requireVec raises upstream), so no isnotnull is
-    // inferred, and codegen subexpression elimination runs it once.
-    val coded = emb
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"),
-        org.apache.spark.sql.GraftSqlShim.column(graft.plans.PqAssignEncode(
-          org.apache.spark.sql.GraftSqlShim.expression(col("vec")),
-          centers.map(_.toSeq).toSeq, Nil, 0, books.map(_.map(_.toSeq).toSeq).toSeq))
-          .as("ae"))
-      .select(col("vec_id"), col("ae.list_id").as("list_id"), col("ae.codes").as("codes"))
-
-    // probe: nProbe nearest cells per (tiny) query, on the unit query
-    val nProbe0 = math.min(nProbe, centers.length)
-    val probeUdf = udf((qv: Seq[Double]) =>
-      AnnIvf.rankedIdx(centersB.value, AnnPq.normalize(qv.toArray)).take(nProbe0))
-    val probed = queries.withColumn("probe", explode(probeUdf(col("qvec"))))
-
-    // pruned ADC scan: equi-join coded rows to the broadcast probe list —
-    // only probed cells' codes are ever scored
-    val scored = coded
-      .join(broadcast(probed.select(col("qid"), col("probe"))),
-        col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        AnnPq.adcScorer(queries, books)(col("codes"), col("qid")).as("score"))
-    // no dedup needed: each vec_id lives in exactly ONE cell and the probe
-    // list is distinct cells per query, so (qid, vec_id) pairs are unique
-    val cands = AnnPq.topRerank(scored, rerank)
-    AnnPq.exactRerank(cands, emb, queries, k)
-  }
+      rerank: Int = 128): DataFrame =
+    fitAndSearch(emb0, queries0, k)(
+      IvfPqModel.fit(_, nLists, k2 = 0, nProbe, m, kSub, rerank))
 
   /** IVF-PQ with the TWO-LEVEL coarse quantizer (the [[AnnIvf.topK2Level]]
     * hierarchy composed with the PQ compressed-domain scan): an l1-cell
@@ -199,91 +142,148 @@ object AnnIvfPq {
       m: Int = 8,
       kSub: Int = 32,
       rerank: Int = 128): DataFrame = {
-
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnIvfPq: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
-    val spark = emb.sparkSession
-
-    // one unit-normalized hash-prefix sample feeds all THREE fits (l1
-    // centers, per-cell subs, PQ codebooks) — the topK sampling argument:
-    // each fit re-samples its own cap as a prefix of the same hash order
-    val capC = AnnIvf.sampleCapFor(l1)
-    val capB = math.max(4096, 16 * kSub)
-    val cap2 = 16 * l1 * k2
-    val unitSample = unitSampleOf(emb, math.max(math.max(capC, capB), cap2))
-
-    val centers = AnnIvf.fitCentroids(unitSample, l1, iters = 5, sampleCap = capC)
-    val books = AnnPq.fitCodebooks(unitSample, m, kSub, iters = 5, sampleCap = capB)
-    if (centers.isEmpty || books.isEmpty) {
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
-    val subs = AnnIvf.fitSubCenters(unitSample, centers, k2, iters = 5, cap2 = cap2)
-
-    // broadcast (the topK2Level rationale): the two-level codebook is
-    // l1·k2·dim doubles — a closure reserializes it per task
-    val sc = spark.sparkContext
-    val centersB = sc.broadcast(centers)
-    val subsB = sc.broadcast(subs)
-
-    // ONE fused map pass (the topK rationale): hierarchical cell assignment
-    // + PQ encode off a single normalize; list_id = c1·k2 + sub is
-    // globally unique
-    // native fused assign+encode kernel (round 18) — the topK rationale:
-    // the closure-UDF form was duplicated into the join key's inferred
-    // isnotnull filter; the non-nullable kernel can't be
-    val coded = emb
-      .repartition(sc.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"),
-        org.apache.spark.sql.GraftSqlShim.column(graft.plans.PqAssignEncode(
-          org.apache.spark.sql.GraftSqlShim.expression(col("vec")),
-          centers.map(_.toSeq).toSeq,
-          subs.map(_.map(_.toSeq).toSeq).toSeq, k2,
-          books.map(_.map(_.toSeq).toSeq).toSeq))
-          .as("ae"))
-      .select(col("vec_id"), col("ae.list_id").as("list_id"), col("ae.codes").as("codes"))
-
-    // hierarchical probe, on the unit query: √½ of the l1 cells, then
-    // SubProbeFrac2L of each probed cell's sub-cells
-    val l1Probe = math.max(1, math.ceil(centers.length * math.sqrt(0.5)).toInt)
-    val probeUdf = udf((qv: Seq[Double]) => {
-      val u = AnnPq.normalize(qv.toArray)
-      AnnIvf.rankedIdx(centersB.value, u).take(l1Probe).flatMap { c1 =>
-        val cell = subsB.value(c1)
-        val subProbe = math.max(1, math.ceil(cell.length * SubProbeFrac2L).toInt)
-        AnnIvf.rankedIdx(cell, u).take(subProbe).map(s2 => c1.toLong * k2 + s2)
-      }
-    })
-    val probed = queries.withColumn("probe", explode(probeUdf(col("qvec"))))
-
-    val scored = coded
-      .join(broadcast(probed.select(col("qid"), col("probe"))),
-        col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        AnnPq.adcScorer(queries, books)(col("codes"), col("qid")).as("score"))
-    val cands = AnnPq.topRerank(scored, rerank)
-    AnnPq.exactRerank(cands, emb, queries, k)
+    require(k2 > 0, s"AnnIvfPq: two-level k2 must be positive, got $k2")
+    fitAndSearch(emb0, queries0, k)(IvfPqModel.fit(_, l1, k2, nProbe = 0, m, kSub, rerank))
   }
 
-  /** Unit-normalized hash-prefix sample shared by every fit in this file:
+  /** The in-memory form: fit the index on the guarded corpus, encode it and
+    * search it in one query — the same [[IvfPqModel]] steps
+    * [[AnnIndex.buildAdaptive]] persists and [[AnnIndex.serve]] replays.
+    */
+  private def fitAndSearch(emb0: DataFrame, queries0: DataFrame, k: Int)(
+      fit: DataFrame => IvfPqModel): DataFrame = {
+    val (emb, queries) = AnnIvf.requireVecs(emb0, queries0, "AnnIvfPq")
+    val model = fit(emb)
+    model.search(emb, queries, k)(_ => model.encode(emb))
+  }
+
+  /** Unit-normalized hash-prefix sample shared by every fit of the model:
     * the top-`cap` rows by (xxhash64(vec_id), vec_id), normalized ONCE and
     * localCheckpointed — each downstream fit re-samples its own smaller cap
     * as a PREFIX of the same order, so all fits see exactly the rows they
     * would have sampled from the raw corpus while the per-row normalize
     * runs O(cap) times instead of O(n) per fit (review finding, round 16b).
     */
-  private[operators] def unitSampleOf(emb: DataFrame, cap: Int): DataFrame = {
+  private def unitSampleOf(emb: DataFrame, cap: Int): DataFrame = {
     val normalizeUdf = udf((v: Seq[Double]) => AnnPq.normalize(v.toArray).toSeq)
-    emb
-      .select(col("vec_id"), col("vec"),
-        pmod(xxhash64(col("vec_id")), lit(1000000007L)).as("hk"))
-      .orderBy(col("hk"), col("vec_id"))
-      .limit(cap)
+    AnnIvf.hashSample(emb, cap)
       .select(col("vec_id"), normalizeUdf(col("vec")).as("vec"))
       .localCheckpoint()
+  }
+
+  /** One IVF-PQ index (IVFADC): the coarse quantizer's `centers`, the
+    * per-cell `subs` (empty: flat; list_id = c1·k2 + s2 otherwise), the PQ
+    * `books`, and the search knobs — the level-1 probe width `nProbe`, the
+    * sub-level probe fraction and the exact re-rank list. The fresh
+    * in-memory search ([[topK]], [[topK2Level]], [[topKAdaptive]]) and the
+    * persisted index ([[AnnIndex]]) are the same object: [[IvfPqModel.fit]],
+    * [[encode]], [[probe]] and [[search]] are the only copies of their step,
+    * so build and serve probe and rank alike because they run the same
+    * code. Only persistence and the partition prune belong to [[AnnIndex]].
+    */
+  private[graft] final case class IvfPqModel(
+      centers: Array[Array[Double]],
+      subs: Array[Array[Array[Double]]],
+      k2: Int,
+      books: Array[Array[Array[Double]]],
+      nProbe: Int,
+      subProbeFrac: Double,
+      rerank: Int) {
+
+    /** An empty corpus fits nothing: [[search]] answers with the contract
+      * frame and [[encode]] with an empty coded table. */
+    def isEmpty: Boolean = centers.isEmpty || books.isEmpty
+
+    /** (vec_id, list_id, codes): cell assignment + PQ encode in ONE map pass
+      * off a single normalize, as the NATIVE plans.PqAssignEncode kernel
+      * (round 18). The round-17 closure-UDF form regressed the declared key
+      * 2.3× at sf10: the join key's inferred isnotnull(UDF(vec)._1) filter
+      * pushed the whole closure below the exchange, so every corpus row paid
+      * normalize+assign+encode TWICE (plans/r18/sim_ann_ivfpq_before.txt
+      * line 66 shows the duplicated filter). The kernel declares
+      * non-nullable output (requireVecs raises upstream), so no isnotnull is
+      * inferred, and codegen subexpression elimination runs it once.
+      */
+    def encode(emb: DataFrame): DataFrame =
+      if (isEmpty)
+        emb.select(col("vec_id"), lit(0L).as("list_id"),
+          array().cast("array<int>").as("codes")).limit(0)
+      else
+        emb
+          // fan out: a one-file scan arrives as one partition; encode + ADC
+          // are CPU bound
+          .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
+          .select(col("vec_id"),
+            org.apache.spark.sql.GraftSqlShim.column(graft.plans.PqAssignEncode(
+              org.apache.spark.sql.GraftSqlShim.expression(col("vec")),
+              centers.map(_.toSeq).toSeq, subs.map(_.map(_.toSeq).toSeq).toSeq, k2,
+              books.map(_.map(_.toSeq).toSeq).toSeq))
+              .as("ae"))
+          .select(col("vec_id"), col("ae.list_id").as("list_id"), col("ae.codes").as("codes"))
+
+    /** (qid, probe): the [[AnnIvf.probeCells]] rule on the unit query — the
+      * `nProbe` nearest cells, and [[subProbeFrac]] of each probed cell's
+      * sub-cells when two-level. Centers and subs are broadcast (the
+      * [[AnnIvf.topK2Level]] rationale: a closure reserializes them per task).
+      */
+    def probe(queries: DataFrame): DataFrame = {
+      val sc = queries.sparkSession.sparkContext
+      val centersB = sc.broadcast(centers)
+      val subsB = sc.broadcast(subs)
+      val (k2, nProbe, subFrac) = (this.k2, this.nProbe, subProbeFrac)
+      val probeUdf = udf((qv: Seq[Double]) => AnnIvf.probeCells(
+        centersB.value, subsB.value, k2, nProbe, subFrac, AnnPq.normalize(qv.toArray)))
+      queries.withColumn("probe", explode(probeUdf(col("qvec")))).select(col("qid"), col("probe"))
+    }
+
+    /** Top-k through the pruned ADC scan: `coded` maps the probe list to the
+      * coded rows to scan (the fresh [[encode]], or a persisted table pruned
+      * to the probed cells), which equi-join the broadcast probe list — only
+      * probed cells' codes are ever scored; then the two-phase
+      * top-`rerank` and the exact cosine re-rank against `emb`. No dedup is
+      * needed: each vec_id lives in exactly ONE cell and the probe list is
+      * distinct cells per query, so (qid, vec_id) pairs are unique.
+      */
+    def search(emb: DataFrame, queries: DataFrame, k: Int)(
+        coded: DataFrame => DataFrame): DataFrame = {
+      if (isEmpty) return AnnIvf.emptyResult(queries)
+      val probed = probe(queries)
+      val scored = coded(probed)
+        .join(broadcast(probed), col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
+        .select(col("qid"), col("vec_id"),
+          AnnPq.adcScorer(queries, books)(col("codes"), col("qid")).as("score"))
+      AnnPq.exactRerank(AnnPq.topRerank(scored, rerank), emb, queries, k)
+    }
+  }
+
+  private[graft] object IvfPqModel {
+
+    /** Fit the index: ONE unit-normalized hash-prefix sample feeds every fit
+      * (the `width` coarse centers, the PQ codebooks and, when `k2` > 0, the
+      * k2 sub-centers of each cell), each re-sampling its own cap as a prefix
+      * of the same hash order. Flat probes the declared `nProbe` cells;
+      * two-level probes √½ of the fitted l1 cells and [[SubProbeFrac2L]] of
+      * each probed cell's subs (`nProbe` is not read).
+      */
+    def fit(emb: DataFrame, width: Int, k2: Int, nProbe: Int,
+        m: Int, kSub: Int, rerank: Int): IvfPqModel = {
+      val capC = AnnIvf.sampleCapFor(width)
+      val capB = AnnPq.codebookCapFor(kSub)
+      val cap2 = 16 * width * k2
+      val unitSample = unitSampleOf(emb, math.max(math.max(capC, capB), cap2))
+      val centers = AnnIvf.fitCentroids(unitSample, width, iters = 5, sampleCap = capC)
+      val books = AnnPq.fitCodebooks(unitSample, m, kSub, iters = 5, sampleCap = capB)
+      if (k2 == 0 || centers.isEmpty || books.isEmpty)
+        IvfPqModel(centers, Array.empty, 0, books, nProbe, 0.0, rerank)
+      else
+        IvfPqModel(centers, AnnIvf.fitSubCenters(unitSample, centers, k2, iters = 5, cap2 = cap2),
+          k2, books, AnnIvf.levelProbe(centers.length, math.sqrt(0.5)), SubProbeFrac2L, rerank)
+    }
+
+    /** Fit under the adaptive rules of [[paramsFor]]: flat probes half the
+      * cells, the family's scale-constant probed fraction. */
+    def fit(emb: DataFrame, p: IvfPqParams): IvfPqModel =
+      if (p.twoLevel) fit(emb, p.l1, p.k2, nProbe = 0, p.m, p.kSub, p.rerank)
+      else fit(emb, p.lists, k2 = 0, math.max(1, p.lists / 2), p.m, p.kSub, p.rerank)
   }
 }

@@ -56,26 +56,6 @@ object AnnLsh {
     transform(guarded, (b, t) => b + (t.cast("long") * lit(1L << nPlanes)))
   }
 
-  /** Bucket id column for an array<double> vector column. Fails fast on a
-    * dim mismatch: zip_with null-pads silently, which would null the dot
-    * products and collapse every vector into bucket 0 (a silent brute-force
-    * scan instead of an error).
-    */
-  def bucket(vec: Column, nPlanes: Int, dim: Int, table: Int = 0): Column = {
-    val ps = planes(nPlanes, dim, table)
-    val bits = ps.zipWithIndex.map { case (p, k) =>
-      val dot = aggregate(
-        zip_with(vec, typedLit(p), (x, y) => x * y),
-        lit(0.0),
-        (acc, v) => acc + v)
-      when(dot > 0, lit(1L << k)).otherwise(lit(0L))
-    }
-    when(size(vec) === dim, bits.reduce(_ + _))
-      .otherwise(raise_error(concat(
-        lit(s"AnnLsh: expected $dim-dim vector, got "),
-        coalesce(size(vec).cast("string"), lit("null"))))) // null vec → clear message, not raise_error(NULL)
-  }
-
   /** Top-k approximate neighbors for each query vector (`nTables`
     * OR-amplified tables, multi-probe at Hamming distance ≤ 1 in each).
     * Output: (qid, rnk, nid, cos) — same shape as the brute-force baseline

@@ -73,13 +73,15 @@ object AnnPq {
   val BigCorpus = 1000000L
 
   def topKAdaptive(emb: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val n = emb.count()
-    val (m, kSub) = if (n < BigCorpus) (8, 32) else (16, 256)
-    val rerank = math.max(128L, math.ceil(math.sqrt(n.toDouble)).toLong)
-      .min(Int.MaxValue.toLong).toInt
-    topK(emb, queries, k, m = m, kSub = kSub, rerank = rerank,
-      sampleCap = math.max(4096, 16 * kSub))
+    // the ladder is written once, in AnnIvfPq.paramsFor (which IVF-PQ and
+    // the persisted index read too); its coarse widths are not used here
+    val p = AnnIvfPq.paramsFor(emb.count())
+    topK(emb, queries, k, m = p.m, kSub = p.kSub, rerank = p.rerank,
+      sampleCap = codebookCapFor(p.kSub))
   }
+
+  /** Codebook fit sample: ≥16 points per sub-centroid, floor 4096. */
+  private[operators] def codebookCapFor(kSub: Int): Int = math.max(4096, 16 * kSub)
 
   /** Top-k approximate neighbors, exact-rescored. emb: (vec_id,
     * vec array<double>); queries: (qid, qvec array<double>).
@@ -92,23 +94,11 @@ object AnnPq {
       kSub: Int = 16,
       rerank: Int = 64,
       sampleCap: Int = 4096): DataFrame = {
-
-    // ANN family input contract (AnnIvf/AnnLsh): null vectors fail loudly —
-    // silently dropping them from the coded index is invisible recall loss.
-    def requireVec(vec: Column, side: String): Column =
-      when(vec.isNotNull, vec).otherwise(raise_error(lit(
-        s"AnnPq: null $side vector (ANN input contract: filter null embeddings upstream)")))
-    val emb = emb0.withColumn("vec", requireVec(col("vec"), "corpus"))
-    val queries = queries0.withColumn("qvec", requireVec(col("qvec"), "query"))
+    val (emb, queries) = AnnIvf.requireVecs(emb0, queries0, "AnnPq")
     val spark = emb.sparkSession
 
     val books = fitCodebooks(emb, m, kSub, iters = 5, sampleCap = sampleCap)
-    if (books.isEmpty) {
-      // empty corpus → empty result with the contract schema
-      return queries
-        .select(col("qid"), lit(0L).as("rnk"), col("qid").as("nid"), lit(0.0).as("cos"))
-        .limit(0)
-    }
+    if (books.isEmpty) return AnnIvf.emptyResult(queries)
 
     // ── encode: one map pass, vector → m code bytes ────────────────────
     // fan out: a one-file scan arrives as one partition; encode + ADC are
@@ -129,7 +119,7 @@ object AnnPq {
   }
 
   /** Encode closure UDF: vector → m nearest-subspace-centroid codes on the
-    * unit-normalized vector. A closure UDF on purpose (AnnIvf.nearestUdf
+    * unit-normalized vector. A closure UDF on purpose (AnnIvf's assignment
     * rationale): the expression form would inline m·kSub·subDim centroid
     * literals into one codegen tree that janino chokes on.
     */
@@ -243,11 +233,7 @@ object AnnPq {
     import org.apache.spark.sql.{Encoder, Row}
     implicit val enc: Encoder[Seq[Seq[Seq[Double]]]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Seq[Seq[Double]]]]()
-    emb
-      .select(col("vec_id"), col("vec"),
-        pmod(xxhash64(col("vec_id")), lit(1000000007L)).as("hk"))
-      .orderBy(col("hk"), col("vec_id"))
-      .limit(sampleCap)
+    AnnIvf.hashSample(emb, sampleCap)
       .coalesce(1)
       .mapPartitions { (it: Iterator[Row]) =>
         val rows = it.toArray.sortBy(r => (r.getLong(2), r.getLong(0)))

@@ -80,25 +80,47 @@ object VecExprs {
     out
   }
 
-  /** Index of the nearest center by squared L2 (canonical copy — AnnIvf
-    * delegates here, round 18). */
+  /** Squared L2 distance over `q`'s length: the one squared-distance loop
+    * of the ANN family (coarse assignment, probe ranking, the Lloyd fit). */
+  def sqDist(q: Array[Double], c: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < q.length) { val dx = q(i) - c(i); s += dx * dx; i += 1 }
+    s
+  }
+
+  /** Index of the nearest center by squared L2, first index on ties
+    * (canonical copy, round 18: the Lloyd fit, the IVF assignment and this
+    * kernel all call it). */
   def nearestIdx(centers: Array[Array[Double]], q: Array[Double]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < centers.length) {
-      val cv = centers(c)
-      var s = 0.0; var i = 0
-      while (i < q.length) { val dx = q(i) - cv(i); s += dx * dx; i += 1 }
+      val s = sqDist(q, centers(c))
       if (s < bestD) { bestD = s; best = c }
       c += 1
     }
     best
   }
 
+  /** Coarse cell of a point: its nearest center when `subs` is empty (flat),
+    * else c1·k2 + its nearest sub-center inside cell c1 (two-level). */
+  def assignCell(
+      centers: Array[Array[Double]], subs: Array[Array[Array[Double]]], k2: Int,
+      q: Array[Double]): Long = {
+    val c1 = nearestIdx(centers, q)
+    if (subs.length == 0) c1.toLong else c1.toLong * k2 + nearestIdx(subs(c1), q)
+  }
+
   /** Nearest-subspace-centroid PQ codes of an already-prepared point
-    * (canonical copy — AnnPq.encoder calls it, round 18). */
+    * (canonical copy — AnnPq.encoder calls it, round 18). A point whose
+    * length is not the codebooks' m·subDim throws: a short or empty vector
+    * would otherwise be encoded by its prefix. */
   def pqEncode(books: Array[Array[Array[Double]]], u: Array[Double]): Array[Int] = {
-    val subDim = u.length / books.length
+    val dim = books.length * books(0)(0).length
+    if (u.length != dim)
+      throw new IllegalArgumentException(
+        s"pq_assign_encode: expected $dim-dim vector, got ${u.length}")
+    val subDim = dim / books.length
     val codes = new Array[Int](books.length)
     var mi = 0
     while (mi < books.length) {
@@ -125,7 +147,9 @@ object VecExprs {
     * empty (list_id = c1), hierarchical otherwise (list_id = c1·k2 + s2).
     * Arithmetic is bit-identical to the closure-UDF composition it
     * replaces — same normalize, same nearest-center loops, same encode. A
-    * NULL vector throws: the ANN input contract filters them upstream.
+    * NULL vector throws (the ANN input contract filters them upstream), and
+    * so does one of the wrong dimension ([[pqEncode]] checks it before the
+    * coarse assignment reads a center).
     */
   def assignEncode(
       v: ArrayData,
@@ -137,13 +161,10 @@ object VecExprs {
       throw new IllegalArgumentException(
         "pq_assign_encode: null vector (ANN input contract: filter null embeddings upstream)")
     val u = normalizeUnit(v.toDoubleArray)
-    val c1 = nearestIdx(centers, u)
-    val lid =
-      if (subs.length == 0) c1.toLong
-      else c1.toLong * k2 + nearestIdx(subs(c1), u)
+    val codes = pqEncode(books, u)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](lid,
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(pqEncode(books, u))))
+      Array[Any](assignCell(centers, subs, k2, u),
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)))
   }
 
   /** Lenient kernels with EXACTLY the lambda-fold null semantics (used by
@@ -400,7 +421,7 @@ case class SqDistLong(left: Expression, right: Expression)
   * `isnotnull(UDF(vec)._1)` filter pushed the whole closure below the
   * exchange, so every corpus row paid normalize+assign+encode TWICE
   * (measured 2.3× on the declared sim_ann_ivfpq at sf10). The kernel
-  * declares honest nullability — the requireVec contract upstream RAISES
+  * declares honest nullability — the requireVecs contract upstream RAISES
   * on a null vector, and a NULL that gets here anyway throws in
   * [[VecExprs.assignEncode]], so the struct is never null and no isnotnull
   * filter is inferred at all — and whole-stage codegen's subexpression

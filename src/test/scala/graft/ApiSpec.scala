@@ -78,6 +78,20 @@ class ApiSpec extends SparkSpec {
       sites.mkString("\n"))
   }
 
+  test("the IVF-PQ encode and the ANN null-vector guard are each written once") {
+    // one PqAssignEncode projection (IvfPqModel.encode) serves the fresh
+    // IVF-PQ search and the persisted index alike
+    val encodes = mainSitesOf("PqAssignEncode(").filterNot(_.contains("/graft/plans/VecExprs.scala:"))
+    assert(encodes.size === 1 && encodes.head.contains("/graft/operators/AnnIvfPq.scala:"),
+      encodes.mkString("\n"))
+    // one operator-side guard (AnnIvf.requireVec); the pq_assign_encode
+    // kernel's own NULL message is its NULL rule (KernelNullSpec)
+    val guards = mainSitesOf("ANN input contract: filter null embeddings upstream")
+      .filter(_.contains("/graft/operators/"))
+    assert(guards.size === 1 && guards.head.contains("/graft/operators/AnnIvf.scala:"),
+      guards.mkString("\n"))
+  }
+
   test("withFeatureColumns widens map keys into typed double columns") {
     val df = Ppdb.withFeatureColumns(Ppdb.parse(spark), Seq("PPDB2.0Score", "p(e|f)"))
     assert(df.columns.contains("PPDB2_0Score"))

@@ -73,7 +73,8 @@ class KernelNullSpec extends SparkSpec {
     Case("sq_dist_long", "array<bigint>", e => SqDistLong(e, e), Value(null), Value(0L)),
     Case("pq_assign_encode", dbls,
       PqAssignEncode(_, Seq(Seq(1.0)), Seq(), 0, Seq(Seq(Seq(1.0)))),
-      Fails("pq_assign_encode: null vector"), Value(Row(0L, Seq(0)))),
+      Fails("pq_assign_encode: null vector"),
+      Fails("pq_assign_encode: expected 1-dim vector, got 0")),
     Case("l2_norm_lenient", dbls, L2NormLenient(_), Value(null), Value(0.0)),
     Case("ppdb_split", "string", PpdbSplitLine(_), Value(null), Value(Seq(""))),
     Case("ppdb_score_token", "string", PpdbScoreToken(_), Value(null), Value(null)))
@@ -118,6 +119,29 @@ class KernelNullSpec extends SparkSpec {
       forEachCodegenMode { mode =>
         val (got, nullable) = run(c, isNull)
         check(c, s"${if (isNull) "NULL" else "empty"}, $mode", expected, got, nullable)
+      }
+    }
+  }
+
+  test("pq_assign_encode and the PQ encoder refuse a short vector, both codegen modes") {
+    // 2 subspaces of 2 dims: a 4-d point; a 3-d one must not be encoded by
+    // its prefix
+    val centers = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0))
+    val books = Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    val short = expr("if(id = 0, array(1.0d, 2.0d, 3.0d), cast(null as array<double>))")
+    def failure(df: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    forEachCodegenMode { mode =>
+      val kernel = spark.range(1).select(GraftSqlShim.column(
+        PqAssignEncode(GraftSqlShim.expression(short), centers, Seq(), 0, books)))
+      val encoder = spark.range(1).select(graft.operators.AnnPq.encoder(
+        books.map(_.map(_.toArray).toArray).toArray)(short))
+      for ((what, df) <- Seq("kernel" -> kernel, "encoder" -> encoder)) {
+        val msg = failure(df)
+        assert(msg.contains("pq_assign_encode: expected 4-dim vector, got 3"), s"$what, $mode:\n$msg")
       }
     }
   }

@@ -37,6 +37,54 @@ class NullCorpusSpec extends SparkSpec {
     sb.toString
   }
 
+  test("every IVF/PQ entry point refuses a NULL corpus and a NULL query vector with its operator's message") {
+    import graft.operators.{AnnIndex, AnnIvf, AnnIvfPq, AnnPq}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // 64 deterministic 8-d vectors (dim divisible by every m below and by
+    // the adaptive index's m = 8)
+    val clean = spark.range(0, 64).selectExpr("id as vec_id",
+      "array(sin(id), cos(id), sin(2 * id), cos(2 * id), sin(3 * id), cos(3 * id)," +
+        " sin(5 * id), cos(5 * id)) as vec")
+    def withNull(df: DataFrame, c: String): DataFrame =
+      df.withColumn(c, when(col(df.columns.head) === 3L, lit(null)).otherwise(col(c)))
+    def queriesOf(emb: DataFrame): DataFrame =
+      emb.filter(col("vec_id") < 6).select(col("vec_id").as("qid"), col("vec").as("qvec"))
+    val built = java.nio.file.Files.createTempDirectory("graft-ann-null").toString
+    AnnIndex.buildAdaptive(clean, built)
+    // (operator in the message, entry point over (corpus, queries))
+    val entryPoints: Seq[(String, String, (DataFrame, DataFrame) => Unit)] = Seq(
+      ("AnnIvf.topK", "AnnIvf",
+        (e, q) => AnnIvf.topK(e, q, k = 2, nLists = 4, nProbe = 2).collect()),
+      ("AnnIvf.topK2Level", "AnnIvf",
+        (e, q) => AnnIvf.topK2Level(e, q, k = 2, l1 = 2, k2 = 2).collect()),
+      ("AnnPq.topK", "AnnPq",
+        (e, q) => AnnPq.topK(e, q, k = 2, m = 2, kSub = 4, rerank = 8).collect()),
+      ("AnnIvfPq.topK", "AnnIvfPq",
+        (e, q) => AnnIvfPq.topK(e, q, k = 2, nLists = 4, nProbe = 2, m = 2, kSub = 4,
+          rerank = 8).collect()),
+      ("AnnIvfPq.topK2Level", "AnnIvfPq",
+        (e, q) => AnnIvfPq.topK2Level(e, q, k = 2, l1 = 2, k2 = 2, m = 2, kSub = 4,
+          rerank = 8).collect()),
+      // the build reads no queries: the query side of the index is serve's
+      ("AnnIndex.buildAdaptive", "AnnIndex",
+        (e, _) => AnnIndex.buildAdaptive(e,
+          java.nio.file.Files.createTempDirectory("graft-ann-null").toString)),
+      ("AnnIndex.serve", "AnnIndex",
+        (e, q) => AnnIndex.serve(spark, built, e, q, 2).collect()))
+    for ((entry, op, run) <- entryPoints; side <- Seq("corpus", "query")
+         if !(entry == "AnnIndex.buildAdaptive" && side == "query")) {
+      val (e, q) =
+        if (side == "corpus") (withNull(clean, "vec"), queriesOf(clean))
+        else (clean, withNull(queriesOf(clean), "qvec"))
+      val msg = s"$op: null $side vector (ANN input contract: filter null embeddings upstream)"
+      val thrown = intercept[Throwable](run(e, q))
+      assert(causeChain(thrown).contains(msg), s"$entry, NULL $side vector:\n${causeChain(thrown).take(600)}")
+    }
+    // the same inputs without the NULL run through
+    entryPoints.foreach { case (_, _, run) => run(clean, queriesOf(clean)) }
+  }
+
   test("every declared query survives a null-riddled corpus (ANN keys refuse loudly)") {
     val d = TestTables.dirNulls(spark)
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
