@@ -128,7 +128,7 @@ object Bench {
             // record once and stop re-running it
             failed ::= name
             broken = true
-            System.err.println(s"[bench] $name FAILED: $e")
+            System.err.println(s"[bench] $name FAILED: ${Verify.describe(e)}")
           }
           r += 1
         }

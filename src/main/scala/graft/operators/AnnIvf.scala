@@ -185,7 +185,7 @@ object AnnIvf {
       .limit(cap)
 
   /** Top-k approximate neighbors. emb: (vec_id, vec array<double>);
-    * queries: (qid, qvec array<double>).
+    * queries: (qid, qvec array<double>), one row per qid.
     */
   def topK(
       emb0: DataFrame,
@@ -210,7 +210,10 @@ object AnnIvf {
     * assignment is a closure UDF on purpose — the expression alternative
     * inlines the k×dim centroid matrix as a ~1000-literal codegen tree that
     * janino takes seconds to compile (and MLlib's transform is itself a
-    * closure under the hood).
+    * closure under the hood). No dedup is needed: each vec_id lives in
+    * exactly ONE cell and the probe list is distinct cells per query, so
+    * (qid, vec_id) pairs are unique as long as each qid is (the query
+    * contract, as in [[AnnIvfPq]]).
     */
   private def search(
       emb: DataFrame,
@@ -243,7 +246,6 @@ object AnnIvf {
       .join(broadcast(probed), col("list_id") === col("probe") && col("vec_id") =!= col("qid"))
       .withColumn("cos", dot / (nv * nq))
       .select(col("qid"), col("vec_id"), col("cos"))
-      .dropDuplicates("qid", "vec_id")
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("qid"), col("rnk"), col("vec_id").as("nid"), col("cos"))

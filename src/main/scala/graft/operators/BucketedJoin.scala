@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.ScratchDirs
 
 /** Shuffle-free co-located join via bucketed tables — the WRITE-TIME answer
   * to the shuffle problem that `join_salted` (runtime skew-break) and
@@ -26,11 +26,11 @@ import org.apache.spark.sql.functions._
   *    same Murmur3 hash as the bucket spec, so every task holds exactly
   *    one bucket → one file per bucket, no small-file spray;
   *  - the tables live in a dedicated database with an explicit LOCATION
-  *    under java.io.tmpdir (bucket metadata needs the catalog — a plain
-  *    parquet path has nowhere to record the bucket spec);
-  *  - the build is session-scoped and keyed by (session, sfDir), the
-  *    graph-family cache pattern: the first caller pays the one-time
-  *    bucketed write, later callers (and bench reps) pay only the read.
+  *    under [[ScratchDirs.root]] (bucket metadata needs the catalog — a
+  *    plain parquet path has nowhere to record the bucket spec);
+  *  - the build is one [[ScratchDirs.perSession]] entry per (session,
+  *    sfDir): the first caller pays the one-time bucketed write, later
+  *    callers (and bench reps) pay only the read.
   *
   * The query result must be INDISTINGUISHABLE from the plain join — like
   * salting, bucketing is pure execution strategy — which is exactly what
@@ -44,46 +44,21 @@ object BucketedJoin {
     */
   val NBuckets = 8
 
-  private val cache =
-    new ConcurrentHashMap[(SparkSession, String), (String, String)]()
-
-  /** Per-JVM unique root for bucket-table locations. The catalog backing
-    * these managed tables is in-memory and dies with the JVM, but the
-    * DIRECTORIES survive — a location reused across processes makes
-    * saveAsTable fail with LOCATION_ALREADY_EXISTS on the next run (the
-    * table is "new" to the fresh catalog, yet its path isn't). A
-    * createTempDirectory root keeps every process's locations disjoint.
-    */
-  private lazy val procRoot =
-    java.nio.file.Files.createTempDirectory("graft_bkt").toString
-
-  private def dbFor(sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_bkt_$h"
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Bucketed (lineitem, orders) table names for `sfDir`, writing them on
     * first use. Only the join-relevant columns are bucketed — at scale the
     * bucketed copy is a curated join index, not a second full copy.
     */
-  def tables(s: SparkSession, d: String): (String, String) = {
-    cache.computeIfAbsent((s, d), _ => {
-      val db = dbFor(d)
-      val loc = new java.io.File(procRoot, db).getAbsolutePath
+  def tables(s: SparkSession, d: String): (String, String) =
+    ScratchDirs.perSession(s, "bucketed_tables", d) {
+      val db = s"graft_bkt_${ScratchDirs.tag(d)}"
+      val loc = new java.io.File(ScratchDirs.root, db).getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
       // defensive: two NON-shared sessions in one JVM have separate
-      // catalogs but share procRoot — drop any stale table AND its dir so
+      // catalogs but share the root — drop any stale table AND its dir so
       // the managed-table write never sees a pre-existing location
       for (tbl <- Seq("lineitem_b", "orders_b")) {
         s.sql(s"DROP TABLE IF EXISTS $db.$tbl")
-        deleteRecursively(new java.io.File(loc, tbl))
+        ScratchDirs.deleteRecursively(new java.io.File(loc, tbl))
       }
       val li = s.read.parquet(s"$d/lineitem.parquet")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
@@ -98,8 +73,7 @@ object BucketedJoin {
         .bucketBy(NBuckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(s"$db.orders_b")
       (s"$db.lineitem_b", s"$db.orders_b")
-    })
-  }
+    }
 
   /** The co-located join itself, pre-aggregation — exposed so the plan spec
     * can assert the absence of Exchange under the SortMergeJoin. The MERGE

@@ -15,25 +15,6 @@ object PpdbQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Scratch root for the release-conversion output (per-JVM temp dir +
-    * per-invocation counter, so concurrent constructions — parallel suites,
-    * overlapping bench reps — never race on the same directory the way the
-    * pre-round-12 compact_files scratch could).
-    */
-  private lazy val convertRoot = {
-    val r = java.nio.file.Files.createTempDirectory("graft_ppdb_convert").toString
-    graft.util.ScratchDirs.deleteRootOnExit(r)
-    r
-  }
-  private val convertSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def convertDir(): String = {
-    val d = new java.io.File(convertRoot, s"rel_${convertSeq.incrementAndGet()}")
-      .getAbsolutePath
-    // bounded accumulation (ADVICE r12): a REPS=N bench keeps ≤ 2 dirs
-    graft.util.ScratchDirs.register("ppdb_convert", d)
-    d
-  }
-
   // sfDir is ignored: the PPDB fixture lives at a stable absolute path so
   // both engines read the identical bytes (FIXTURES.md §2).
   val queries: Map[String, Q] = Map(
@@ -106,9 +87,9 @@ object PpdbQueries {
     // didn't throw. repartition(2) here is the fixture-scale stand-in for
     // repartition(input_bytes / 256 MB) at release scale; 2 targets stay
     // deterministic (round-robin over 4×3-row inputs fills both slots, one
-    // file each). Scratch dir is per-invocation unique (see convertDir).
+    // file each). Scratch dir is per-invocation unique (ScratchDirs.fresh).
     "ppdb_convert_release" -> ((s, _) => {
-      val out = convertDir()
+      val out = graft.util.ScratchDirs.fresh("ppdb_convert_release")
       Ppdb.parse(s, Ppdb.MultiFixtureDir + "/*.txt.gz")
         .repartition(2)
         .write.mode("overwrite").option("compression", "zstd").parquet(out)

@@ -205,21 +205,18 @@ object ScaleOps {
 
   private val norm = normTextSql("text")
 
-  private val bloomSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-
   /** `join_bloom_native`'s session, one per parent and reused: a new
     * session brings its own class loader, part of Spark's generated-code
     * cache key, so a session per call would compile its classes again.
     */
-  private def bloomSession(parent: SparkSession): SparkSession = bloomSessions.synchronized {
-    bloomSessions.computeIfAbsent(parent, p => {
-      val s = p.newSession()
+  private def bloomSession(parent: SparkSession): SparkSession =
+    graft.util.ScratchDirs.perSession(parent, "join_bloom_native", "") {
+      val s = parent.newSession()
       s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s
-    })
-  }
+    }
 
   /** Shared body of `dedup_components` and `dedup_cluster_rep`. */
   private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame = {

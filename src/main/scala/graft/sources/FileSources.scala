@@ -59,33 +59,12 @@ object FileSources {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-JVM unique root for sink outputs (same rationale as
-    * BucketedJoin.procRoot: directories outlive the JVM; a fresh process
-    * must never collide with a prior run's output).
+  /** `sink_partitioned`'s output directory for `sfDir`, under
+    * [[graft.util.ScratchDirs.root]].
     */
-  private lazy val sinkRoot = {
-    val r = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    graft.util.ScratchDirs.deleteRootOnExit(r)
-    r
-  }
-
-  private[graft] def sinkDirFor(sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    new java.io.File(sinkRoot, s"docs_by_lang_$h").getAbsolutePath
-  }
-
-  /** compact_files scratch dirs: per-invocation UNIQUE (round 12 — a
-    * monotone counter joins the (sfDir, stage) key), so two concurrent
-    * constructions for the same sfDir (parallel suites, overlapping bench
-    * reps) can never race one overwrite against the other's lazy read-back.
-    */
-  private val compactSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] def compactDirFor(sfDir: String, stage: String, seq: Long): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    new java.io.File(sinkRoot, s"compact_${stage}_${h}_$seq").getAbsolutePath
-  }
+  private[graft] def sinkDirFor(sfDir: String): String =
+    new java.io.File(graft.util.ScratchDirs.root,
+      s"docs_by_lang_${graft.util.ScratchDirs.tag(sfDir)}").getAbsolutePath
 
   /** Scratch dirs of the most recent compact_files construction — test-only
     * visibility (FormatSpec inspects the physical layout the write left).
@@ -177,13 +156,11 @@ object FileSources {
     // query pays to stage its own input; real deployments compact one
     // partition at a time, which is exactly a bounded slice.
     "compact_files" -> ((s, d) => {
-      val seq = compactSeq.incrementAndGet()
-      val frag = compactDirFor(d, "frag", seq)
-      val comp = compactDirFor(d, "comp", seq)
+      // per-invocation dirs, ≤ 2 kept per stage (ScratchDirs.fresh)
+      val tag = graft.util.ScratchDirs.tag(d)
+      val frag = graft.util.ScratchDirs.fresh(s"compact_frag_$tag")
+      val comp = graft.util.ScratchDirs.fresh(s"compact_comp_$tag")
       lastCompactDirs.set((frag, comp))
-      // bounded accumulation (ADVICE r12): REPS=N bench keeps ≤ 2 per stage
-      graft.util.ScratchDirs.register(s"compact_frag_$d", frag)
-      graft.util.ScratchDirs.register(s"compact_comp_$d", comp)
       val src = s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") < 2000)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -221,7 +198,7 @@ object FileSources {
     // read-back aggregate of the files just written, so the oracle (the
     // same aggregate computed from the SOURCE table) gates a full
     // write→read round trip, not just a write that didn't throw. Each call
-    // rewrites (mode overwrite, per-JVM tmp root) — the write is the
+    // rewrites (mode overwrite, under ScratchDirs.root) — the write is the
     // operator under test, so bench reps honestly pay it. At 100 TB:
     // partitionBy on a bounded-cardinality column (language), shuffled by
     // partition key first so each task writes one directory (one file per

@@ -41,7 +41,7 @@ object DumpPlans {
           nOk += 1
         } catch { case e: Throwable =>
           nErr += 1
-          System.err.println(s"[dump-plans] $name FAILED: $e")
+          System.err.println(s"[dump-plans] $name FAILED: ${graft.Verify.describe(e)}")
         }
       }
     println(s"[dump-plans] wrote $nOk plans to $outDir (suffix=$suffix, failed=$nErr)")

@@ -5,12 +5,17 @@ package graft.tools
   * tables and classifies each key PASS (row-identical to the DataFrame
   * form) / DIFF / ERROR(head of message), so widening the portable list
   * works from measurement. Not part of any gate.
+  *
+  *   SPARK_GRAFT_SF_DIR: the sf dir to read
+  *   SPARK_GRAFT_ONLY: optional comma-separated key subset
+  *   SPARK_GRAFT_CPUS: local cores (default: all available)
   */
 object ProbeSqlPortable {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val keys = graft.SparkEntry.selectKeys(sys.env.get("SPARK_GRAFT_ONLY"))
-    val spark = graft.GraftSession.local(8)
+    val spark = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(graft.GraftSession.local())(n => graft.GraftSession.local(n.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",
       "part", "documents", "embeddings", "events")

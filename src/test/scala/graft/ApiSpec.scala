@@ -92,6 +92,23 @@ class ApiSpec extends SparkSpec {
       guards.mkString("\n"))
   }
 
+  test("ScratchDirs is the one owner of scratch roots, the sfDir tag and per-session caches") {
+    val scratch = "/graft/util/ScratchDirs.scala:"
+    // scratch roots and session-keyed maps belong to util/ScratchDirs.scala
+    Seq("createTempDirectory(", "java.io.tmpdir", "ConcurrentHashMap[(SparkSession",
+        "WeakHashMap[SparkSession").foreach { needle =>
+      val sites = mainSitesOf(needle)
+      assert(sites.forall(_.contains(scratch)), s"$needle:\n${sites.mkString("\n")}")
+    }
+    // exactly one of each: the root, the session memo, the MD5 tag and the
+    // recursive delete
+    Seq("createTempDirectory(", "ConcurrentHashMap[(SparkSession",
+        "getInstance(\"MD5\")", "def deleteRecursively(").foreach { needle =>
+      val sites = mainSitesOf(needle)
+      assert(sites.size === 1 && sites.head.contains(scratch), s"$needle:\n${sites.mkString("\n")}")
+    }
+  }
+
   test("withFeatureColumns widens map keys into typed double columns") {
     val df = Ppdb.withFeatureColumns(Ppdb.parse(spark), Seq("PPDB2.0Score", "p(e|f)"))
     assert(df.columns.contains("PPDB2_0Score"))
