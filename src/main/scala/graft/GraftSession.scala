@@ -27,8 +27,8 @@ import org.apache.spark.sql.SparkSession
   *    and their `*(n)` ids are unchanged; only the generated class's name is.
   *  - the graft extension ([[graft.plans.GraftExtensions]]), the only way
   *    a session gets the SQL functions `ppdb_split`, `dot_product` and
-  *    `l2_norm`, the optimizer rule [[graft.plans.VecRewrite]] and the
-  *    planner strategy [[graft.plans.AsOfJoinStrategy]].
+  *    `l2_norm` and the planner strategy [[graft.plans.AsOfJoinStrategy]]
+  *    (the native as-of join); it injects no optimizer rule.
   */
 object GraftSession {
 

@@ -43,13 +43,13 @@ object SparkEntry {
   }
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted on purpose for the eleven
+    * the same parquet tables. Omitted on purpose for the twelve
     * approximate operators (`agg_approx_distinct`, `agg_approx_percentile`,
     * `agg_approx_topk`, `agg_hll_union`, `agg_kmv_distinct`,
     * `agg_weighted_median_approx`, `dedup_minhash`, `sim_ann_lsh`,
-    * `sim_ann_ivf`, `sim_ann_pq`, `sim_ann_ivfpq`) → driver records a
-    * weaker rows-only check; each has a hash-checked exact twin
-    * (SURVEY.md §2.4, §2.11, §2.12, §2.20).
+    * `sim_ann_ivf`, `sim_ann_pq`, `sim_ann_ivfpq`, `sim_ann_index_serve`)
+    * → driver records a weaker rows-only check; each has a hash-checked
+    * exact twin (SURVEY.md §2.4, §2.11, §2.12, §2.20).
     */
   def oracleSql: Map[String, String] =
     Relational.oracle ++ PpdbQueries.oracle ++ Windows.oracle ++

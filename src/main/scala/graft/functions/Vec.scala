@@ -5,36 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.{DotProduct, L2Norm}
 
-/** Vector math over array<double> columns, in three tiers that give
-  * bit-identical results (the same left-associated IEEE sum; the fold's
-  * `0.0 + x` seed is exact):
-  *  - `dot`/`l2`: higher-order `aggregate(zip_with(...))` — general, but
-  *    Spark evaluates lambda functions interpretively (one closure call per
-  *    element), which dominates all-pairs similarity joins. In a session
-  *    built by [[graft.GraftSession]], the [[graft.plans.VecRewrite]] rule
-  *    turns these folds into the lenient native kernels at optimization.
-  *  - `dotUnrolled(dim)`: a fixed `dim`-term codegen'd arithmetic expression
-  *    (`a[1]*b[1] + … + a[dim]*b[dim]`) — no lambdas, no intermediate
-  *    array, stays inside whole-stage codegen. Measured ~5× faster than the
-  *    lambda form on the 2M-pair embedding join. It requires vectors of
-  *    length ≥ `dim` (`element_at` throws under ANSI on out-of-bounds;
-  *    `try_element_at` was measured and rejected — its TryEval wrapper cost
-  *    more than the lambda it replaced).
-  *  - `dotNative`/`l2Native`: the native codegen'd kernels
-  *    ([[graft.plans.VecExprs]]), the preferred tier.
+/** Vector math over array<double> columns: the native kernels
+  * ([[graft.plans.VecExprs]]) as Columns. The kernels are the one shipped
+  * form; their sums are the same left-associated IEEE fold as a lambda
+  * `aggregate(zip_with(...))`, bit for bit, but run as one call inside
+  * whole-stage codegen instead of one closure call per element.
   */
 object Vec {
-
-  def dot(a: String, b: String): Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-
-  def l2(a: String): Column =
-    expr(s"sqrt(aggregate(transform($a, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-
-  def dotUnrolled(a: String, b: String, dim: Int): Column =
-    (1 to dim)
-      .map(i => expr(s"element_at($a, $i) * element_at($b, $i)"))
-      .reduce(_ + _)
 
   /** [[graft.plans.DotProduct]] as a Column: one call inside whole-stage
     * codegen, any dimension, no per-element closures, no intermediate

@@ -22,7 +22,7 @@ import graft.plans.AsOfJoinNative
   * (an earlier bucket's rows are all strictly earlier), so the union of the
   * two passes is row-identical to the unsalted join.
   *
-  * Semantics matched to AsOfJoinExec: backward inner, `strict` (<, not ≤),
+  * Semantics matched to AsOfJoinExec: backward inner, strict `<` (not ≤),
   * greatest `tiebreak` among equal timestamps. Times must be non-negative
   * integral (µs here) — `DIV` truncates toward zero.
   *
@@ -67,7 +67,7 @@ object AsOfSkew {
       lb, rb,
       keys = keys :+ ("__lb" -> "__rb"),
       leftTime = leftTime, rightTime = rightTime,
-      strict = true, tiebreak = Seq(tiebreak))
+      tiebreak = Seq(tiebreak))
 
     // pass-1 leftovers. Default: NULL-SAFE anti-join on ALL left columns —
     // no uniqueness assumption on any id column (identical duplicate left
@@ -113,7 +113,7 @@ object AsOfSkew {
       unmatched, cum,
       keys = keys,
       leftTime = "__lb", rightTime = "__rb",
-      strict = true, tiebreak = Nil)
+      tiebreak = Nil)
     val m2Unpacked = m2.select(
       (leftCols.map(col) ++
         Seq(col(s"__cum.$rightTime").as(rightTime), col(s"__cum.$tiebreak").as(tiebreak)) ++

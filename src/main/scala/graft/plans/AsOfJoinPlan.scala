@@ -10,28 +10,32 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native AS-OF join — SURVEY.md §4 custom-operator tier (c): a
   * `LogicalPlan` node, a planner `Strategy`, and a physical `SparkPlan`,
-  * registered through `SparkSessionExtensions` (GraftExtensions).
+  * registered through `SparkSessionExtensions` (GraftExtensions). It is the
+  * engine's one as-of operator; every as-of key enters through
+  * [[AsOfJoinNative.join]].
   *
-  * Spark has no as-of operator; the composed form
-  * (graft.operators.AsOfJoin) equi-joins on the key with the time bound as
-  * a residual and keeps rank 1 per left row — correct, but the join
-  * materializes EVERY earlier right row per left row before the window
-  * discards all but one (a left row with m earlier matches costs m
-  * intermediate rows; for a year of history per key that's the whole
-  * history per probe). This exec instead merges the two key-sorted,
-  * co-partitioned streams in one pass: each side shuffles ONCE on its key,
-  * each right row is read ONCE per partition, and no intermediate match
-  * set ever exists — the 100 TB-safe shape (same layout discipline as a
-  * sort-merge join). Skew caveat: AQE's OptimizeSkewedJoin matches only
-  * SortMergeJoin/ShuffledHashJoin nodes, so a hot key here needs the
-  * manual mitigation — time-bucket the key (key, ts-bucket) so each
-  * bucket pair merges independently; that salting composes on top of
-  * this operator unchanged.
+  * Spark has no as-of operator. The composed alternative equi-joins on the
+  * key with the time bound as a residual and keeps rank 1 per left row over
+  * a window — correct, but the join materializes EVERY earlier right row
+  * per left row before the window discards all but one (a left row with m
+  * earlier matches costs m intermediate rows; for a year of history per
+  * key that's the whole history per probe). This exec instead merges the
+  * two key-sorted, co-partitioned streams in one pass: each side shuffles
+  * ONCE on its key, each right row is read ONCE per partition, and no
+  * intermediate match set ever exists — the 100 TB-safe shape (same layout
+  * discipline as a sort-merge join). Skew caveat: AQE's OptimizeSkewedJoin
+  * matches only SortMergeJoin/ShuffledHashJoin nodes, so a hot key here
+  * needs the manual mitigation — time-bucket the key (key, ts-bucket) so
+  * each bucket pair merges independently (`operators.AsOfSkew`).
   *
   * Semantics (matched to DuckDB `ASOF JOIN … ON l.key = r.key AND l.ts >
-  * r.ts`, the reference for the declared query): backward-looking inner
-  * as-of; `strict` excludes equal timestamps; among equal candidate
-  * timestamps the greatest `tiebreak` wins; null keys never match.
+  * r.ts`, the reference for the declared queries): backward-looking inner
+  * as-of under the constant strict bound `rightTime < leftTime` (an equal
+  * timestamp never matches); among equal candidate timestamps the greatest
+  * `tiebreak` wins; null keys and null times never match. Other shapes
+  * compose on top: forward by negating both times, a non-strict bound by
+  * shifting the left time up one unit of an integral clock, a tolerance by
+  * a residual filter on the matched gap.
   *
   * EnsureRequirements supplies the exchanges and sorts from
   * `requiredChildDistribution` / `requiredChildOrdering` — the operator
@@ -43,7 +47,6 @@ case class AsOfJoinNode(
     leftTime: Expression,
     rightTime: Expression,
     rightTiebreak: Seq[Expression],
-    strict: Boolean,
     left: LogicalPlan,
     right: LogicalPlan)
   extends BinaryNode {
@@ -58,8 +61,8 @@ case class AsOfJoinNode(
 /** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(lk, rk, lt, rt, tb, strict, l, r) =>
-      AsOfJoinExec(lk, rk, lt, rt, tb, strict, planLater(l), planLater(r)) :: Nil
+    case AsOfJoinNode(lk, rk, lt, rt, tb, l, r) =>
+      AsOfJoinExec(lk, rk, lt, rt, tb, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -70,7 +73,6 @@ case class AsOfJoinExec(
     leftTime: Expression,
     rightTime: Expression,
     rightTiebreak: Seq[Expression],
-    strict: Boolean,
     left: SparkPlan,
     right: SparkPlan)
   extends BinaryExecNode {
@@ -98,7 +100,6 @@ case class AsOfJoinExec(
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
-    val isStrict = strict
     val lKeyExprs = leftKeys
     val rKeyExprs = rightKeys
     val lTimeExpr = leftTime
@@ -129,20 +130,18 @@ case class AsOfJoinExec(
             val lkey = lKeyProj(lrow)
             if (!lkey.anyNull && !lTsProj(lrow).anyNull) {
               val lts = lTsProj(lrow)
-              // advance the right cursor past everything at-or-before this
-              // left position; remember the last key-matching row passed
+              // advance the right cursor past everything strictly before
+              // this left position; remember the last key-matching row passed
               var scanning = rHead != null
               while (scanning) {
                 val rkey = rKeyProj(rHead)
                 val kc = keyOrd.compare(rkey, lkey)
-                val before = kc < 0 || (kc == 0 && {
-                  val tc = tsOrd.compare(rTsProj(rHead), lts)
-                  if (isStrict) tc < 0 else tc <= 0
-                })
+                val before =
+                  kc < 0 || (kc == 0 && tsOrd.compare(rTsProj(rHead), lts) < 0)
                 if (before) {
                   // null keys and null timestamps never match (a NULL ts
                   // sorts first and would otherwise pose as -infinity, which
-                  // both DuckDB ASOF and the composed form reject)
+                  // DuckDB ASOF and an equi-join's range residual reject)
                   if (kc == 0 && !rkey.anyNull && !rTsProj(rHead).anyNull) {
                     candidate = rHead.copy()
                     candidateKey = rkey.copy()
@@ -180,7 +179,8 @@ case class AsOfJoinExec(
 object AsOfJoinNative {
 
   /** Backward inner as-of: for each left row, the right row with the
-    * greatest `rightTime` (strictly) before `leftTime` on the same keys.
+    * greatest `rightTime` strictly before `leftTime` (`<`, never `<=`) on
+    * the same keys; the greatest `tiebreak` wins among equal right times.
     * Column names across the two sides must be disjoint. The session must
     * carry the graft extension ([[graft.GraftSession.configure]]), whose
     * [[AsOfJoinStrategy]] plans the node; without it this throws at once.
@@ -191,7 +191,6 @@ object AsOfJoinNative {
       keys: Seq[(String, String)],
       leftTime: String,
       rightTime: String,
-      strict: Boolean = true,
       tiebreak: Seq[String] = Nil): DataFrame = {
     val spark: SparkSession = left.sparkSession
     if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
@@ -213,7 +212,6 @@ object AsOfJoinNative {
       leftTime = attr(lPlan, leftTime),
       rightTime = attr(rPlan, rightTime),
       rightTiebreak = tiebreak.map(attr(rPlan, _)),
-      strict = strict,
       left = lPlan,
       right = rPlan)
     GraftSqlShim.ofRows(spark, node)

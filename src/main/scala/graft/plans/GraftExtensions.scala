@@ -7,16 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Engine extension wiring (SURVEY.md §3.2 / §4). Its one entry point is
   * `spark.sql.extensions=graft.plans.GraftExtensions`, which
   * [[graft.GraftSession.configure]] sets; a session built that way gets the
-  * SQL functions `ppdb_split`, `dot_product` and `l2_norm`, the optimizer
-  * rule [[VecRewrite]] and the planner strategy [[AsOfJoinStrategy]]. There
-  * is no imperative registration: a session built otherwise has none.
+  * SQL functions `ppdb_split`, `dot_product` and `l2_norm` and the planner
+  * strategy [[AsOfJoinStrategy]]. It adds no optimizer rule: queries run
+  * the kernels they call, and a lambda fold stays a lambda fold. There is
+  * no imperative registration: a session built otherwise has none.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
       ext.injectFunction((ident, info, builder))
     }
-    ext.injectOptimizerRule(_ => VecRewrite)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

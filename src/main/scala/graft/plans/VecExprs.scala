@@ -7,30 +7,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
 
 /** Native vector-math expressions (SURVEY.md §4 tier (b): a custom Catalyst
   * expression over a static kernel method, a [[NativeKernel]], above UDFs
-  * in the preference order).
+  * in the preference order). They are the one shipped form of the
+  * engine's vector math.
   *
-  * Why a third implementation next to Vec.dot (higher-order lambdas,
-  * interpreted closure per element) and Vec.dotUnrolled (64-term codegen'd
-  * arithmetic tree): the native kernel is a tight JVM loop over the packed
-  * `ArrayData`, stays inside whole-stage codegen as ONE call, works for any
-  * dimension (unrolled hardcodes it), and allocates nothing (zip_with
-  * materializes an intermediate array per row).
+  * Why a kernel and not a lambda fold (`aggregate(zip_with(...))`) or an
+  * unrolled `element_at` sum: the kernel is a tight JVM loop over the
+  * packed `ArrayData`, stays inside whole-stage codegen as ONE call, works
+  * for any dimension, and allocates nothing (zip_with materializes an
+  * intermediate array per row and evaluates one closure call per element).
+  * The fold and unrolled forms live on in the test tree
+  * (`ReferenceForms`) as parity references.
   * DataFrame code builds the kernels directly (`Vec.dotNative`/`l2Native`);
-  * SQL calls `dot_product`/`l2_norm`, and [[VecRewrite]] rewrites lambda
-  * folds — those two come with the graft extension (`GraftSession`).
+  * SQL calls `dot_product`/`l2_norm`, which come with the graft extension
+  * (`GraftSession`).
   *
-  * Parity contract: the sums are the same left-associated IEEE fold as both
-  * the lambda (`aggregate(..., (acc, v) -> acc + v)`) and the unrolled tree
-  * (left-assoc `+`), so all three tiers — and DuckDB's sequential
-  * `list_inner_product` — produce bit-identical doubles on identical input.
+  * Parity contract: the sums are the same left-associated IEEE fold as the
+  * lambda (`aggregate(..., (acc, v) -> acc + v)`), the unrolled tree
+  * (left-assoc `+`) and DuckDB's sequential `list_inner_product`, so all of
+  * them produce bit-identical doubles on identical input.
   *
   * Contract (fail-fast, intentionally STRICTER than the lambda forms):
   * vectors are dense, equal-dimension, non-null-element arrays. A ragged
   * pair or a null element THROWS — the zip_with alternative silently
   * null-pads / null-poisons to a NULL score, which hides data corruption
-  * in a similarity pipeline instead of surfacing it (AnlLsh's scaladoc
-  * documents the same hazard). [[VecRewrite]] carries this contract to
-  * lambda-written queries it rewrites.
+  * in a similarity pipeline instead of surfacing it (AnnLsh's scaladoc
+  * documents the same hazard).
   */
 object VecExprs {
 
@@ -167,25 +168,6 @@ object VecExprs {
         new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)))
   }
 
-  /** Lenient kernels with EXACTLY the lambda-fold null semantics (used by
-    * [[VecRewrite]], which must not change what a query returns): a ragged
-    * pair or a null element yields SQL NULL — `zip_with` null-pads the
-    * shorter side and a null product/square null-poisons the fold. Same
-    * left-to-right IEEE accumulation otherwise.
-    */
-  def dotLenient(a: ArrayData, b: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    if (b.numElements() != n) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += a.getDouble(i) * b.getDouble(i)
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
-
   /** Exact long squared distance with the lambda-fold's lenient null
     * semantics (round 18) — the native twin of the clustering family's
     * `aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0L,
@@ -208,19 +190,6 @@ object VecExprs {
       i += 1
     }
     java.lang.Long.valueOf(s)
-  }
-
-  def l2Lenient(a: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return null
-      val x = a.getDouble(i)
-      s += x * x
-      i += 1
-    }
-    java.lang.Double.valueOf(math.sqrt(s))
   }
 
   /** All LSH table buckets of one vector in ONE pass: planes is the
@@ -375,24 +344,6 @@ case class AdcScore(
     copy(left = newLeft, right = newRight)
 }
 
-/** Rewrite target of [[VecRewrite]]: the fast kernel with the ORIGINAL
-  * lambda null semantics (ragged / null element → NULL, never an error) so
-  * the optimizer rule is observationally transparent.
-  */
-case class DotProductLenient(left: Expression, right: Expression)
-  extends NativeKernel(
-    VecExprs.getClass, "dotLenient", ArrayType(DoubleType), ArrayType(DoubleType))
-  with BinaryLike[Expression] {
-
-  override protected def nullResult: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product_lenient"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductLenient =
-    copy(left = newLeft, right = newRight)
-}
-
 /** `sq_dist_long(a, b)` — exact long squared distance between fixed-point
   * vectors as one kernel call, lambda null semantics (see
   * [[VecExprs.sqDistLenient]]). The clustering family's inner loop
@@ -454,18 +405,5 @@ case class PqAssignEncode(
   override def prettyName: String = "pq_assign_encode"
 
   override protected def withNewChildInternal(newChild: Expression): PqAssignEncode =
-    copy(child = newChild)
-}
-
-/** Rewrite target of [[VecRewrite]] for L2 norms — lambda null semantics. */
-case class L2NormLenient(child: Expression)
-  extends NativeKernel(VecExprs.getClass, "l2Lenient", ArrayType(DoubleType))
-  with UnaryLike[Expression] {
-
-  override protected def nullResult: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "l2_norm_lenient"
-
-  override protected def withNewChildInternal(newChild: Expression): L2NormLenient =
     copy(child = newChild)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSess
 import org.apache.spark.sql.functions._
 
 import graft.plans.{PpdbScoreToken, PpdbSplitLine}
+import graft.sources.ppdb.PpdbDataSource
 
 /** Spark-native parser for the public PPDB release format — the reference's
   * (mauryquijada/ppdb-parser) core capability, re-expressed as a declarative
@@ -54,9 +55,22 @@ object Ppdb {
     * token; `format("ppdb")` reads with the same two kernels. [[rules]]
     * and [[withFeatureColumns]] build the full map and fail with
     * `DUPLICATED_MAP_KEY` on a repeated key.
+    *
+    * `path` is a file, a directory or a glob, listed by the same rule as
+    * `format("ppdb")` ([[lines]]).
     */
   def parse(spark: SparkSession, path: String = FixturePath): DataFrame =
-    spark.read.text(path).select(ruleColumns(Fields: _*): _*)
+    lines(spark, path).select(ruleColumns(Fields: _*): _*)
+
+  /** The text lines of every file `path` names, listed by the `ppdb`
+    * source's rule (`PpdbDataSource.listFiles`: Hadoop glob, a directory's
+    * visible files, the path in the message when nothing matches). The
+    * text reader gets the file list, not the glob, so it never looks for a
+    * streaming sink's `_spark_metadata` under a literal glob (a logged
+    * warning and stack trace per call).
+    */
+  private def lines(spark: SparkSession, path: String): DataFrame =
+    spark.read.text(PpdbDataSource.listFiles(path, spark.sessionState.newHadoopConf()): _*)
 
   /** The six ` ||| `-delimited fields of a PPDB rule, in line order. */
   private val Fields =
@@ -152,8 +166,7 @@ object Ppdb {
     * One glob scan; every pack parses in the same job, one task per .gz.
     */
   def parseWithPack(spark: SparkSession, dir: String = ReleaseDir): DataFrame =
-    spark.read
-      .text(s"$dir/*.txt.gz")
+    lines(spark, s"$dir/*.txt.gz")
       .select(
         regexp_extract(col("_metadata.file_name"), "ppdb-2\\.0-([a-z]+)\\.txt\\.gz", 1)
           .as("pack") +:

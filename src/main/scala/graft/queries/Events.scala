@@ -55,6 +55,33 @@ object Events {
       |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
       |      FROM f)""".stripMargin
 
+  /** The two sides of the purchase → view as-of keys: purchases
+    * (p_id, user_id, p_ts) and views (v_id, v_user, v_ts), times in µs.
+    */
+  private def purchasesViews(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = events(s, d)
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
+    val v = ev.filter(col("event_type") === "view")
+      .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
+    (p, v)
+  }
+
+  /** The backward as-of body of `join_asof` and `join_asof_exec`: each
+    * purchase with the latest strictly-earlier view by the same user, the
+    * greatest `v_id` among views at that instant.
+    */
+  private def prevView(s: SparkSession, d: String): DataFrame = {
+    val (p, v) = purchasesViews(s, d)
+    graft.plans.AsOfJoinNative
+      .join(p, v,
+        keys = Seq("user_id" -> "v_user"),
+        leftTime = "p_ts", rightTime = "v_ts",
+        tiebreak = Seq("v_id"))
+      .select(col("p_id").as("event_id"), col("v_id").as("prev_view"))
+      .orderBy("event_id")
+  }
+
   val queries: Map[String, Q] = Map(
     "func_json" -> ((s, d) => {
       events(s, d)
@@ -66,44 +93,12 @@ object Events {
     }),
 
     // As-of join: for each purchase, the most recent strictly-earlier view by
-    // the same user — the reusable graft.operators.AsOfJoin operator
-    // (backward, strict, deterministic v_id tiebreak; scale notes in its
-    // scaladoc).
-    "join_asof" -> ((s, d) => {
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
-      graft.operators.AsOfJoin
-        .join(p, v,
-          keys = Seq("user_id" -> "v_user"),
-          leftTime = "p_ts", rightTime = "v_ts",
-          direction = graft.operators.AsOfJoin.Backward, strict = true,
-          tiebreak = Seq(col("v_id").desc))
-        .select(col("p_id").as("event_id"), col("v_id").as("prev_view"))
-        .orderBy("event_id")
-    }),
-
-    // The same as-of semantics through the NATIVE operator
-    // (graft.plans.AsOfJoinExec — custom LogicalPlan + Strategy + SparkPlan
-    // via SparkSessionExtensions): one-pass merge of the key-sorted
-    // co-partitioned sides, no per-probe match set. Oracle identical to
-    // join_asof: the physical strategy must not change a row.
-    "join_asof_exec" -> ((s, d) => {
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
-      graft.plans.AsOfJoinNative
-        .join(p, v,
-          keys = Seq("user_id" -> "v_user"),
-          leftTime = "p_ts", rightTime = "v_ts",
-          strict = true, tiebreak = Seq("v_id"))
-        .select(col("p_id").as("event_id"), col("v_id").as("prev_view"))
-        .orderBy("event_id")
-    }),
+    // the same user, through the native merge exec (graft.plans.AsOfJoinExec
+    // — custom LogicalPlan + Strategy + SparkPlan via SparkSessionExtensions;
+    // scale notes in its scaladoc). join_asof_exec declares the same body
+    // under its own key; both share one oracle.
+    "join_asof" -> prevView,
+    "join_asof_exec" -> prevView,
 
     // FORWARD as-of — each purchase matched to the EARLIEST view strictly
     // after it — through the SAME native backward exec, by negating both
@@ -126,7 +121,7 @@ object Events {
         .join(p, v,
           keys = Seq("user_id" -> "v_user"),
           leftTime = "p_neg", rightTime = "v_neg",
-          strict = true, tiebreak = Seq("v_id"))
+          tiebreak = Seq("v_id"))
         .select(col("p_id").as("event_id"), col("v_id").as("next_view"))
         .orderBy("event_id")
     }),
@@ -156,7 +151,7 @@ object Events {
         .join(probes, states,
           keys = Seq("user_id" -> "s_user"),
           leftTime = "lag_ts", rightTime = "s_from",
-          strict = true, tiebreak = Seq("s_eid"))
+          tiebreak = Seq("s_eid"))
         .select(col("event_id"), col("user_id"),
           col("s_type").as("state_1h_ago"), col("s_from").as("state_from"))
         .orderBy("event_id")
@@ -169,11 +164,7 @@ object Events {
     // bucket-cardinality aggregate. Oracle identical to join_asof: salting
     // must not change a row.
     "join_asof_skew" -> ((s, d) => {
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
+      val (p, v) = purchasesViews(s, d)
       graft.operators.AsOfSkew
         .join(p, v,
           keys = Seq("user_id" -> "v_user"),
@@ -194,20 +185,16 @@ object Events {
     // per probe, so the union is ≤ 2 rows per purchase and the final pick
     // is a tiny per-probe window, not a re-sort of the corpus.
     "join_asof_nearest" -> ((s, d) => {
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
+      val (p, v) = purchasesViews(s, d)
       val bwd = graft.plans.AsOfJoinNative
         .join(p, v, keys = Seq("user_id" -> "v_user"),
-          leftTime = "p_ts", rightTime = "v_ts", strict = true, tiebreak = Seq("v_id"))
+          leftTime = "p_ts", rightTime = "v_ts", tiebreak = Seq("v_id"))
         .select(col("p_id"), col("v_id"), (col("v_ts") - col("p_ts")).as("dt"))
       val pn = p.select(col("p_id"), col("user_id"), (-col("p_ts")).as("p_neg"))
       val vn = v.select(col("v_id"), col("v_user"), (-col("v_ts")).as("v_neg"))
       val fwd = graft.plans.AsOfJoinNative
         .join(pn, vn, keys = Seq("user_id" -> "v_user"),
-          leftTime = "p_neg", rightTime = "v_neg", strict = true, tiebreak = Seq("v_id"))
+          leftTime = "p_neg", rightTime = "v_neg", tiebreak = Seq("v_id"))
         .select(col("p_id"), col("v_id"), (col("p_neg") - col("v_neg")).as("dt"))
       // ≤ 2 candidates per purchase; abs-then-signed order prefers the past
       // on an exact |Δt| tie, mirroring the oracle's QUALIFY
@@ -226,14 +213,10 @@ object Events {
     // dropped row). The as-of already returns the CLOSEST earlier view, so
     // one residual filter after the exec is the exact semantics.
     "join_asof_tolerance" -> ((s, d) => {
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("v_id"), col("user_id").as("v_user"), col("ts_us").as("v_ts"))
+      val (p, v) = purchasesViews(s, d)
       graft.plans.AsOfJoinNative
         .join(p, v, keys = Seq("user_id" -> "v_user"),
-          leftTime = "p_ts", rightTime = "v_ts", strict = true, tiebreak = Seq("v_id"))
+          leftTime = "p_ts", rightTime = "v_ts", tiebreak = Seq("v_id"))
         .withColumn("staleness_us", col("p_ts") - col("v_ts"))
         .filter(col("staleness_us") <= 3600L * 1000000L)
         .select(col("p_id").as("event_id"), col("v_id").as("prev_view"),
@@ -378,8 +361,9 @@ object Events {
     })
   )
 
-  /** Backward as-of oracle shared by the three physical variants (operator /
-    * native exec / salted). Matching runs on µs — the engine's time domain —
+  /** Backward as-of oracle shared by the three backward keys (join_asof and
+    * join_asof_exec, one body over the native exec, and the salted
+    * join_asof_skew). Matching runs on µs — the engine's time domain —
     * and tied view timestamps collapse to the max-event_id row, which is the
     * engine's declared tiebreak, so DuckDB's arbitrary-among-equal-timestamps
     * ASOF choice can never flake the compare (two same-µs views of one user

@@ -2,8 +2,6 @@ package graft.sources.ppdb
 
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
@@ -11,7 +9,7 @@ import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapBuilder, ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -86,9 +84,11 @@ object PpdbDataSource {
     * names (file:, hdfs:, s3a:, …), a directory expands to its visible
     * files, and a path that exists nowhere fails HERE — at planning time,
     * with the path in the message — rather than as an executor-side
-    * FileNotFoundException three stages later.
+    * FileNotFoundException three stages later. `Ppdb.parse` and
+    * `parseWithPack` list their input with it too, so both parsers read the
+    * same files for a path.
     */
-  private[ppdb] def listFiles(path: String, conf: Configuration): Seq[String] = {
+  private[graft] def listFiles(path: String, conf: Configuration): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
@@ -429,21 +429,23 @@ class PpdbPartitionReader(
     false
   }
 
-  /** The features map's keys and values: `k=v` tokens split on single
-    * spaces, a token without a key skipped, a value that does not parse
-    * null.
+  // one builder per reader: build() hands back the map and resets it
+  private val features = new ArrayBasedMapBuilder(StringType, DoubleType)
+
+  /** The features map: `k=v` tokens split on single spaces, a token without
+    * a key skipped, a value that does not parse null. A repeated key
+    * follows `spark.sql.mapKeyDedupPolicy`, as `str_to_map` in the
+    * projection parser does: the default fails with `DUPLICATED_MAP_KEY`,
+    * `LAST_WIN` keeps the last value (the one `ppdb2score` holds).
     */
   private def featureMap(feat: String): ArrayBasedMapData = {
-    val ks = new ArrayBuffer[Any]
-    val vs = new ArrayBuffer[Any]
     feat.split(' ').foreach { t =>
       val eq = t.indexOf('=')
-      if (eq > 0) {
-        ks += UTF8String.fromString(t.substring(0, eq))
-        vs += PpdbDataSource.parseDouble(t.substring(eq + 1))
-      }
+      if (eq > 0)
+        features.put(
+          UTF8String.fromString(t.substring(0, eq)), PpdbDataSource.parseDouble(t.substring(eq + 1)))
     }
-    new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
+    features.build()
   }
 
   override def get(): InternalRow = {

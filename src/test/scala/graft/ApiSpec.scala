@@ -92,6 +92,20 @@ class ApiSpec extends SparkSpec {
       guards.mkString("\n"))
   }
 
+  test("vector math and as-of joins ship one form: no optimizer rule, one as-of entry point") {
+    // queries call the vector kernels themselves; no rule rewrites a plan
+    // into them
+    Seq("injectOptimizerRule", "Rule[LogicalPlan]").foreach { needle =>
+      val sites = mainSitesOf(needle)
+      assert(sites.isEmpty, s"$needle:\n${sites.mkString("\n")}")
+    }
+    // every as-of key enters through AsOfJoinNative.join, the merge exec
+    Seq("AsOfJoin.join", "operators.AsOfJoin").foreach { needle =>
+      val sites = mainSitesOf(needle)
+      assert(sites.isEmpty, s"$needle:\n${sites.mkString("\n")}")
+    }
+  }
+
   test("ScratchDirs is the one owner of scratch roots, the sfDir tag and per-session caches") {
     val scratch = "/graft/util/ScratchDirs.scala:"
     // scratch roots and session-keyed maps belong to util/ScratchDirs.scala

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.AsOfJoin
+import graft.plans.AsOfJoinNative
 
-/** AsOfJoin operator semantics: direction, strictness, tolerance, left join. */
+/** As-of semantics through the one as-of entry point, AsOfJoinNative:
+  * the strict backward match, and forward and tolerance composed on top of
+  * it the way the declared keys compose them.
+  */
 class AsOfJoinSpec extends SparkSpec {
-
-  import AsOfJoin.{Backward, Forward}
 
   private def frames() = {
     import spark.implicits._
@@ -18,36 +19,32 @@ class AsOfJoinSpec extends SparkSpec {
     (trades, quotes)
   }
 
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("trade_id", "quote_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("backward strict picks the latest strictly-earlier row per key") {
     val (trades, quotes) = frames()
-    val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-      Backward, strict = true)
-      .select("trade_id", "quote_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out = pairs(AsOfJoinNative.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t"))
     // trade1@100: quotes 90 (100 excluded by strict); trade2@200: quote 180; trade3: acct 8 has none
     assert(out === Set((1L, 10L), (2L, 12L)))
   }
 
-  test("backward inclusive admits equal timestamps") {
-    val (trades, quotes) = frames()
-    val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-      Backward, strict = false)
-      .select("trade_id", "quote_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out === Set((1L, 11L), (2L, 12L))) // trade1 now matches quote@100
-  }
-
   test("forward picks the earliest later row") {
+    // backward-strict on the negated times is forward-strict on the times
+    // (join_asof_forward's composition)
     val (trades, quotes) = frames()
-    val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-      Forward, strict = true)
-      .select("trade_id", "quote_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out = pairs(AsOfJoinNative.join(
+      trades.withColumn("t_neg", -col("t")), quotes.withColumn("q_neg", -col("q_t")),
+      Seq("acct" -> "q_acct"), "t_neg", "q_neg"))
     assert(out === Set((1L, 12L))) // only trade1@100 has a later quote (180)
   }
 
   test("tolerance bounds the time gap") {
+    // the closest earlier row, dropped when older than the tolerance
+    // (join_asof_tolerance's residual filter)
     val (trades, quotes) = frames()
-    val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-      Backward, strict = true, tolerance = Some(lit(15L)))
-      .select("trade_id", "quote_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out = pairs(AsOfJoinNative.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t")
+      .filter(col("t") - col("q_t") <= 15L))
     assert(out === Set((1L, 10L))) // trade2@200 vs quote@180 gap 20 > 15 → dropped
   }
 
@@ -59,30 +56,27 @@ class AsOfJoinSpec extends SparkSpec {
         .toDF("trade_id", "acct", "t")
       val quotes = (1 to 80).map(i => (1000L + i, rnd.nextInt(5).toLong, rnd.nextInt(1000).toLong))
         .toDF("quote_id", "q_acct", "q_t")
-      val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-        Backward, strict = true, tiebreak = Seq(col("quote_id").desc))
+      val out = AsOfJoinNative.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
+        tiebreak = Seq("quote_id"))
         .select("trade_id", "quote_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-      // naive per-trade scan
-      val ts = trades.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val qs = quotes.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val expected = ts.flatMap { case (tid, acct, t) =>
-        val cands = qs.filter(q => q._2 == acct && q._3 < t)
-        if (cands.isEmpty) None
-        else Some(tid -> cands.maxBy(q => (q._3, q._1))._1)
-      }.toMap
-      assert(out === expected)
+      assert(out === AsOfJoinSpec.naiveBackward(
+        trades.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+        quotes.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))))
     }
   }
+}
 
-  test("left join keeps unmatched rows with null right columns") {
-    val (trades, quotes) = frames()
-    val out = AsOfJoin.join(trades, quotes, Seq("acct" -> "q_acct"), "t", "q_t",
-      Backward, strict = true, joinType = "left")
-      .orderBy("trade_id").collect()
-    assert(out.length === 3)
-    val t3 = out.find(_.getLong(0) == 3L).get
-    assert(t3.isNullAt(t3.fieldIndex("quote_id")))
-  }
+object AsOfJoinSpec {
+
+  /** The naive per-probe scan: for each `(id, key, t)` probe, the id of the
+    * `(id, key, t)` candidate with the same key, the greatest time strictly
+    * before `t`, and the greatest id among those; probes without one drop.
+    */
+  def naiveBackward(
+      probes: Seq[(Long, Long, Long)], cands: Seq[(Long, Long, Long)]): Map[Long, Long] =
+    probes.flatMap { case (pid, key, t) =>
+      val cs = cands.filter(c => c._2 == key && c._3 < t)
+      if (cs.isEmpty) None else Some(pid -> cs.maxBy(c => (c._3, c._1))._1)
+    }.toMap
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Format surface beyond parquet (SURVEY.md §2.1): ORC source/sink
@@ -14,7 +12,7 @@ class FormatSpec extends SparkSpec {
   private lazy val d = TestTables.dir(spark)
 
   test("ORC roundtrip preserves rows and pushes filters at the scan") {
-    val out = Files.createTempDirectory("orc").toString
+    val out = SparkSpec.tempDir("orc")
     val src = spark.read.parquet(s"$d/orders.parquet")
     src.write.orc(s"$out/orders_orc")
     val back = spark.read.orc(s"$out/orders_orc")
@@ -68,7 +66,7 @@ class FormatSpec extends SparkSpec {
     // synthetic 2000-doc corpus so the bucket-by-512 layout actually fans
     // out (TestTables' corpus is smaller than one bucket)
     import spark.implicits._
-    val big = Files.createTempDirectory("compact-big").toString
+    val big = SparkSpec.tempDir("compact-big")
     (0L until 2000L).map(i => (i, if (i % 2 == 0) "en" else "de", 10L + i % 7))
       .toDF("doc_id", "lang", "n_chars")
       .write.parquet(s"$big/documents.parquet")
@@ -116,7 +114,7 @@ class FormatSpec extends SparkSpec {
   }
 
   test("CSV writer roundtrips through the engine's CSV reader including nulls") {
-    val out = Files.createTempDirectory("csvw").toString
+    val out = SparkSpec.tempDir("csvw")
     val src = graft.sources.FileSources.readCsv(spark)
     src.write.option("header", "true").option("escape", "\"").csv(s"$out/w")
     val back = spark.read
@@ -127,7 +125,7 @@ class FormatSpec extends SparkSpec {
   }
 
   test("JSON writer roundtrips nested structs and null fields") {
-    val out = Files.createTempDirectory("jsonw").toString
+    val out = SparkSpec.tempDir("jsonw")
     val src = graft.sources.FileSources.readJsonl(spark)
     src.write.json(s"$out/w")
     val back = spark.read.schema(graft.sources.FileSources.jsonlSchema).json(s"$out/w")

@@ -69,18 +69,16 @@ class KernelNullSpec extends SparkSpec {
       Value(null), Fails("lsh_buckets: expected 2-dim vector, got 0")),
     Case("adc_score", "array<int>", AdcScore(_, Literal(7L), Seq(7L -> Seq(1.0, 2.0)), 2),
       Value(null), Fails("adc_score: 0 codes vs 1-subspace LUT")),
-    Case("dot_product_lenient", dbls, e => DotProductLenient(e, e), Value(null), Value(0.0)),
     Case("sq_dist_long", "array<bigint>", e => SqDistLong(e, e), Value(null), Value(0L)),
     Case("pq_assign_encode", dbls,
       PqAssignEncode(_, Seq(Seq(1.0)), Seq(), 0, Seq(Seq(Seq(1.0)))),
       Fails("pq_assign_encode: null vector"),
       Fails("pq_assign_encode: expected 1-dim vector, got 0")),
-    Case("l2_norm_lenient", dbls, L2NormLenient(_), Value(null), Value(0.0)),
     Case("ppdb_split", "string", PpdbSplitLine(_), Value(null), Value(Seq(""))),
     Case("ppdb_score_token", "string", PpdbScoreToken(_), Value(null), Value(null)))
 
   test("the table covers every native kernel") {
-    assert(cases.map(_.name.takeWhile(_ != ' ')).distinct.size === 27)
+    assert(cases.map(_.name.takeWhile(_ != ' ')).distinct.size === 25)
   }
 
   /** The kernel over a one-row range whose input column is NULL or empty:

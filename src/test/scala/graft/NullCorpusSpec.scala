@@ -50,7 +50,7 @@ class NullCorpusSpec extends SparkSpec {
       df.withColumn(c, when(col(df.columns.head) === 3L, lit(null)).otherwise(col(c)))
     def queriesOf(emb: DataFrame): DataFrame =
       emb.filter(col("vec_id") < 6).select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val built = java.nio.file.Files.createTempDirectory("graft-ann-null").toString
+    val built = SparkSpec.tempDir("graft-ann-null")
     AnnIndex.buildAdaptive(clean, built)
     // (operator in the message, entry point over (corpus, queries))
     val entryPoints: Seq[(String, String, (DataFrame, DataFrame) => Unit)] = Seq(
@@ -69,7 +69,7 @@ class NullCorpusSpec extends SparkSpec {
       // the build reads no queries: the query side of the index is serve's
       ("AnnIndex.buildAdaptive", "AnnIndex",
         (e, _) => AnnIndex.buildAdaptive(e,
-          java.nio.file.Files.createTempDirectory("graft-ann-null").toString)),
+          SparkSpec.tempDir("graft-ann-null"))),
       ("AnnIndex.serve", "AnnIndex",
         (e, q) => AnnIndex.serve(spark, built, e, q, 2).collect()))
     for ((entry, op, run) <- entryPoints; side <- Seq("corpus", "query")

@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.PpdbRelease
 
 /** Ingestion path: gzip release → partitioned zstd parquet → pruned lookup. */
 class PpdbReleaseSpec extends SparkSpec {
 
   test("ingest round-trips the release and lookup ranks correctly") {
-    val out = Files.createTempDirectory("ppdb-ingest").toString + "/release"
+    val out = SparkSpec.tempDir("ppdb-ingest") + "/release"
     PpdbRelease.ingest(spark, graft.ppdb.Ppdb.FixturePath, out, numPartitions = 2)
 
     val ingested = PpdbRelease.readIngested(spark, out)

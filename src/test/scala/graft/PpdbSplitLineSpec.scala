@@ -9,6 +9,7 @@ import org.scalacheck.rng.Seed
 
 import graft.plans.{PpdbScoreToken, PpdbSplitLine}
 import graft.ppdb.Ppdb
+import graft.sources.ppdb.PpdbDataSource
 
 /** The PPDB parsers' two byte-level kernels against the builtin
   * expressions they replace, under both `CODEGEN_ONLY` and `NO_CODEGEN`:
@@ -96,7 +97,7 @@ class PpdbSplitLineSpec extends SparkSpec {
       "[B] ||| 2 ||| p2 ||| b=2 PPDB2.0Score=-3.5 ||| 1-1 ||| OtherRelated",
       "[CCCCCCCC] ||| a much longer third phrase ||| p3 ||| PPDB2.0Score=9e-1 ||| 0-0 2-2 ||| Independent",
       "short ||| line ||| x ||| a=1")
-    val dir = java.nio.file.Files.createTempDirectory("ppdbsplit").toString
+    val dir = SparkSpec.tempDir("ppdbsplit")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/lines.txt"),
       ls.mkString("", "\n", "\n").getBytes("UTF-8"))
     forEachCodegenMode { mode =>
@@ -131,7 +132,8 @@ class PpdbSplitLineSpec extends SparkSpec {
       s"${Ppdb.ReleaseDir}/*.txt.gz")
     forEachCodegenMode { mode =>
       files.foreach { p =>
-        val df = spark.read.text(p).select(split(col("value"), Regex).getItem(3).as("f"))
+        val df = spark.read.text(PpdbDataSource.listFiles(p, spark.sessionState.newHadoopConf()): _*)
+          .select(split(col("value"), Regex).getItem(3).as("f"))
         assert(df.filter(Ppdb.scoreToken(col("f")).isNotNull).count() > 0, s"$mode: $p")
         assertScoreParity(df, s"$mode $p", cast = true)
       }
@@ -182,7 +184,7 @@ class PpdbSplitLineSpec extends SparkSpec {
       "xPPDB2.0Score=7.0 PPDB2.0Score=2.0 a=PPDB2.0Score=8.0",
       "PPDB2.0Score=1.0 PPDB2.0Score=abc")
     val feats = numericFeatures ++ textOnlyFeatures ++ repeated
-    val dir = java.nio.file.Files.createTempDirectory("ppdbscore").toString
+    val dir = SparkSpec.tempDir("ppdbscore")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/f.txt"),
       feats.zipWithIndex.map { case (f, i) => s"[X] ||| p$i ||| q ||| $f ||| 0-0 ||| Equivalence" }
         .mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -201,7 +203,7 @@ class PpdbSplitLineSpec extends SparkSpec {
   }
 
   test("a repeated score key: parse and format(\"ppdb\") agree, the map still fails") {
-    val dir = java.nio.file.Files.createTempDirectory("ppdbdup").toString
+    val dir = SparkSpec.tempDir("ppdbdup")
     val file = s"$dir/dup.txt"
     java.nio.file.Files.write(java.nio.file.Paths.get(file),
       ("[X] ||| a ||| b ||| PPDB2.0Score=9.0 p=1 PPDB2.0Score=1.5 ||| 0-0 ||| Equivalence\n" +
@@ -217,9 +219,25 @@ class PpdbSplitLineSpec extends SparkSpec {
       val e = intercept[Exception] {
         Ppdb.withFeatureColumns(Ppdb.parse(spark, file), Seq("PPDB2.0Score")).collect()
       }
-      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      assert(chain.exists(t => String.valueOf(t.getMessage).contains("DUPLICATED_MAP_KEY")),
-        s"$mode: expected DUPLICATED_MAP_KEY, got $e")
+      def duplicateKey(e: Throwable): Boolean =
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("DUPLICATED_MAP_KEY"))
+      assert(duplicateKey(e), s"$mode: expected DUPLICATED_MAP_KEY, got $e")
+      // format("ppdb")'s features map follows the same map-key rule
+      val v2 = intercept[Exception] {
+        spark.read.format("ppdb").load(file).select("features").collect()
+      }
+      assert(duplicateKey(v2), s"$mode: format(\"ppdb\") features: expected DUPLICATED_MAP_KEY, got $v2")
+      // under LAST_WIN both parsers keep the last value, the one ppdb2score holds
+      withConf("spark.sql.mapKeyDedupPolicy" -> "LAST_WIN") {
+        val feats = spark.read.format("ppdb").load(file).filter(col("phrase") === "a")
+          .select(map_keys(col("features")), col("features")("PPDB2.0Score")).head()
+        assert(feats.getSeq[String](0) === Seq("PPDB2.0Score", "p"), mode)
+        assert(feats.getDouble(1) === 1.5, mode)
+        val widened = Ppdb.withFeatureColumns(Ppdb.parse(spark, file), Seq("PPDB2.0Score"))
+          .select("phrase", "PPDB2_0Score").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        assert(widened === expected, mode)
+      }
     }
   }
 

@@ -101,7 +101,7 @@ class PpdbV2Spec extends SparkSpec {
   }
 
   test("a line with no PPDB2.0Score token fails a pushed threshold (SQL null semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2ns").toString
+    val dir = SparkSpec.tempDir("ppdbv2ns")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/x.txt"),
       ("[X] ||| a ||| b ||| p(e|f)=1.0 ||| 0-0 ||| Equivalence\n" +
         "[X] ||| c ||| d ||| PPDB2.0Score=4.5 p(e|f)=1.0 ||| 0-0 ||| Equivalence\n")
@@ -131,6 +131,19 @@ class PpdbV2Spec extends SparkSpec {
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(err).exists(_.contains("/no/such/ppdb/dir")),
       s"expected the offending path in the error; got: ${messages(err).mkString(" | ")}")
+  }
+
+  test("a glob matching nothing fails in both parsers with the reader's message") {
+    val glob = s"${SparkSpec.tempDir("ppdbnomatch")}/*.txt.gz"
+    val expected = s"ppdb source: path does not exist or matches no files: $glob"
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    Seq[(String, () => Any)](
+      "format(\"ppdb\")" -> (() => spark.read.format("ppdb").load(glob).collect()),
+      "Ppdb.parse" -> (() => Ppdb.parse(spark, glob).collect())).foreach { case (what, read) =>
+      val err = intercept[Exception](read())
+      assert(messages(err).contains(expected), s"$what: ${messages(err).mkString(" | ")}")
+    }
   }
 
   private def batchScans(df: org.apache.spark.sql.DataFrame)
@@ -198,7 +211,7 @@ class PpdbV2Spec extends SparkSpec {
     // last-wins, so a pushed threshold passing on the FIRST value would
     // surface rows violating the user's WHERE — the fixed scanScore must
     // agree with the full tokenizer on both filter and aggregate paths
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2dup").toString
+    val dir = SparkSpec.tempDir("ppdbv2dup")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/dup.txt"),
       ("[X] ||| a ||| b ||| PPDB2.0Score=9.0 p=1 PPDB2.0Score=1.5 ||| 0-0 ||| Equivalence\n" +
         "[X] ||| c ||| d ||| PPDB2.0Score=5.0 ||| 0-0 ||| Equivalence\n" +
@@ -222,7 +235,7 @@ class PpdbV2Spec extends SparkSpec {
     // Spark orders NaN above every double and counts it as a value, so the
     // pushed filter and the pushed count/min/max must give what the same
     // queries give over the unpushed parse
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2nan").toString
+    val dir = SparkSpec.tempDir("ppdbv2nan")
     val path = s"$dir/nan.txt"
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       ("[X] ||| a ||| b ||| PPDB2.0Score=NaN ||| 0-0 ||| Equivalence\n" +
@@ -251,7 +264,7 @@ class PpdbV2Spec extends SparkSpec {
     // the score comes from the single token scan whether or not `features`
     // is read; it must parse as the map's tokenizer does: last token wins,
     // a literal NaN stays NaN, an unparseable value is null
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2score").toString
+    val dir = SparkSpec.tempDir("ppdbv2score")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/score.txt"),
       ("[X] ||| a ||| b ||| PPDB2.0Score=9.0 p=1 PPDB2.0Score=1.5 ||| 0-0 ||| Equivalence\n" +
         "[X] ||| c ||| d ||| PPDB2.0Score=NaN ||| 0-0 ||| Equivalence\n" +
@@ -264,7 +277,11 @@ class PpdbV2Spec extends SparkSpec {
         .map(r => r.getString(0) -> Option(r.get(cols.length - 1)).map(_.asInstanceOf[Double]))
         .toMap
     val pruned = scores("phrase", "ppdb2score")
-    val full = scores("phrase", "features", "ppdb2score")
+    // line a repeats the score key: the map keeps its last value under
+    // LAST_WIN (the default map-key policy fails on it, as str_to_map does)
+    val full = withConf("spark.sql.mapKeyDedupPolicy" -> "LAST_WIN") {
+      scores("phrase", "features", "ppdb2score")
+    }
     assert(pruned("a") === Some(1.5) && pruned("e").isEmpty && pruned("g").isEmpty)
     assert(pruned("c").exists(_.isNaN) && full("c").exists(_.isNaN))
     assert(pruned.removed("c") === full.removed("c"))
@@ -284,7 +301,7 @@ class PpdbV2Spec extends SparkSpec {
     // hex() of a string column is its UTF-8 bytes: an invalid byte must
     // pass through both parsers as-is, and both must end lines at LF, CR
     // and CRLF alike
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2bytes").toString
+    val dir = SparkSpec.tempDir("ppdbv2bytes")
     val invalid = s"$dir/invalid.txt"
     java.nio.file.Files.write(java.nio.file.Paths.get(invalid),
       "[X] ||| a".getBytes("UTF-8") ++ Array(0xff.toByte) ++
@@ -340,7 +357,7 @@ class PpdbV2Spec extends SparkSpec {
   }
 
   test("malformed lines null-fill missing fields instead of erroring") {
-    val dir = java.nio.file.Files.createTempDirectory("ppdbv2").toString
+    val dir = SparkSpec.tempDir("ppdbv2")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.txt"),
       "[X] ||| lonely ||| alone\n".getBytes("UTF-8"))
     val r = spark.read.format("ppdb").load(s"$dir/bad.txt").collect().head

@@ -112,7 +112,7 @@ class PropertySpec extends SparkSpec {
     var id = 0L
     forAllN(Gen.listOfN(40, evGen), 3) { evs =>
       if (evs.nonEmpty) {
-        val d = Files.createTempDirectory("iv-prop").toString
+        val d = SparkSpec.tempDir("iv-prop")
         val base = 1704067200L * 1000000000L
         val rows = evs.map { case (u, m) =>
           id += 1
@@ -148,7 +148,7 @@ class PropertySpec extends SparkSpec {
     var key = 0L
     forAllN(Gen.listOfN(30, pGen), 3) { ps =>
       if (ps.nonEmpty) {
-        val d = Files.createTempDirectory("sk-prop").toString
+        val d = SparkSpec.tempDir("sk-prop")
         val rows = ps.map { case (pr, sz) => key += 1; (key, pr, sz) }
         rows.toDF("p_partkey", "p_retailprice", "p_size")
           .write.parquet(s"$d/part.parquet")

@@ -22,7 +22,7 @@ class QualitySpec extends SparkSpec {
   test("text_repetition: all-identical trigrams score 1 - 1/n3") {
     import spark.implicits._
     val df = Seq((1L, "a a a a a"), (2L, "b c d e f"), (3L, "x y")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("rep").toString
+    val tmp = SparkSpec.tempDir("rep")
     df.write.parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("text_repetition")(spark, tmp).collect()
     // doc 3 (2 tokens) dropped; doc 1: 3 identical trigrams -> 1 - 1/3
@@ -34,7 +34,7 @@ class QualitySpec extends SparkSpec {
   test("text_entropy: uniform tokens have ln(n) entropy, constant docs 0") {
     import spark.implicits._
     val df = Seq((1L, "a b c d"), (2L, "z z z z")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("ent").toString
+    val tmp = SparkSpec.tempDir("ent")
     df.write.parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("text_entropy")(spark, tmp).collect()
     assert(math.abs(out(0).getDouble(2) - math.log(4)) < 1e-3)
@@ -45,7 +45,7 @@ class QualitySpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, "common rare1"), (2L, "common x"), (3L, "common y"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("tfidf").toString
+    val tmp = SparkSpec.tempDir("tfidf")
     df.write.parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("text_tfidf")(spark, tmp).collect()
     val byToken = out.map(r => r.getString(1) -> r.getDouble(2)).toMap
@@ -63,7 +63,7 @@ class QualitySpec extends SparkSpec {
   test("func_higher_order computes fold/filter/exists consistently") {
     import spark.implicits._
     val df = Seq((1L, "data point alpha"), (2L, "tiny ab")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("hof").toString
+    val tmp = SparkSpec.tempDir("hof")
     df.write.parquet(s"$tmp/documents.parquet")
     val out = SparkEntry.queries("func_higher_order")(spark, tmp).collect()
     assert(out(0).getLong(1) === 2L) // "point", "alpha"

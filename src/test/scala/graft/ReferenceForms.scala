@@ -276,6 +276,27 @@ object ReferenceForms {
       j => xxhash64(concat_ws(",",
         transform(slice(sig, j * r + lit(1), lit(r)), x => x.cast("string")))))
 
+  /** The lambda-fold dot product the native plans.DotProduct kernel
+    * (`Vec.dotNative`, SQL `dot_product`) replaced: the same left-associated
+    * IEEE sum, one interpreted closure call per element. A ragged pair or a
+    * null element gives NULL where the kernel throws.
+    */
+  def vecDotLambda(a: String, b: String): Column =
+    expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+
+  /** The lambda-fold L2 norm the native plans.L2Norm kernel replaced. */
+  def vecL2Lambda(a: String): Column =
+    expr(s"sqrt(aggregate(transform($a, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
+
+  /** The unrolled dot product: a fixed `dim`-term codegen'd sum
+    * (`a[1]*b[1] + … + a[dim]*b[dim]`, left-associated). It needs vectors
+    * of length ≥ `dim` (`element_at` throws under ANSI out of bounds).
+    */
+  def vecDotUnrolled(a: String, b: String, dim: Int): Column =
+    (1 to dim)
+      .map(i => expr(s"element_at($a, $i) * element_at($b, $i)"))
+      .reduce(_ + _)
+
   /** Co-purchase edges that fan out the FULL basket first and only then keep
     * pairs inside the MaxBasket smallest part keys (pks is sorted and a < b,
     * so that is b ≤ pks[MaxBasket]).

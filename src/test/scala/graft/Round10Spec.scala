@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Round-10 items: the copurchase basket cap (VERDICT r9 item 5). */
@@ -13,7 +11,7 @@ class Round10Spec extends SparkSpec {
     */
   private lazy val megaBasketDir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("r10-megabasket").toString
+    val d = SparkSpec.tempDir("r10-megabasket")
     (for (ok <- 1L to 2L; pk <- 1L to 500L) yield (ok, pk))
       .toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$d/lineitem.parquet")

@@ -42,7 +42,7 @@ class Round11bSpec extends SparkSpec {
     // the shared fixture's values may be too uniform to cross 3.5, so the
     // flag path gets its own dir: 60 events tightly clustered at ~100.00
     // plus one wild spike per type
-    val dd = java.nio.file.Files.createTempDirectory("graft-mad").toString
+    val dd = SparkSpec.tempDir("graft-mad")
     import spark.implicits._
     val rows = (0 until 60).map { i =>
       (i.toLong, java.sql.Timestamp.valueOf(s"2026-01-01 00:00:${i % 60}"),

@@ -75,7 +75,7 @@ class Round13Spec extends SparkSpec {
 
   // ---- bounded scratch accumulation (ADVICE r12) ----
   test("write-path scratch dirs are bounded: generation N-2 is deleted") {
-    val root = java.nio.file.Files.createTempDirectory("scratchspec").toString
+    val root = SparkSpec.tempDir("scratchspec")
     val dirs = (1 to 4).map { i =>
       val d = new java.io.File(root, s"gen_$i")
       d.mkdirs()

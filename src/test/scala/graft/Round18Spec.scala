@@ -24,7 +24,7 @@ class Round18Spec extends SparkSpec {
 
   test("sample_importance keeps EVERY doc with n_tok >= 100, at w = 1.0 (the 14-hex-digit coin)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-imp").toString
+    val d = SparkSpec.tempDir("graft-imp")
     // 64 substantial docs (n_tok 100..163 — all at the w=1.0 ramp top) with
     // varied doc_ids so the md5 coins spread over [0, 16^13); plus short
     // docs that must get the fractional ramp, not certainty
@@ -108,7 +108,7 @@ class Round18Spec extends SparkSpec {
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory)
     val sf = "/root/testdata/sf0.01"
     val (emb, q) = embQ(sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-idx").toString
+    val dir = SparkSpec.tempDir("graft-ann-idx")
     operators.AnnIndex.buildAdaptive(emb, dir)
     val served = rowsOf(operators.AnnIndex.serve(spark, dir, emb, q, 5))
     val fresh = rowsOf(operators.AnnIvfPq.topKAdaptive(emb, q, 5))
@@ -123,7 +123,7 @@ class Round18Spec extends SparkSpec {
     val (emb, q) = embQ(sf)
     val lists = operators.AnnIvf.listsFor(emb.count())
     val clamp = math.max(1, lists / 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-idx2l").toString
+    val dir = SparkSpec.tempDir("graft-ann-idx2l")
     operators.AnnIndex.buildAdaptive(emb, dir, maxLists = clamp)
     val served = rowsOf(operators.AnnIndex.serve(spark, dir, emb, q, 5))
     val fresh = rowsOf(operators.AnnIvfPq.topKAdaptive(emb, q, 5, clamp))
@@ -155,7 +155,7 @@ class Round18Spec extends SparkSpec {
     val emb = Tables.t(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
     val q = emb.select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-idx-empty").toString
+    val dir = SparkSpec.tempDir("graft-ann-idx-empty")
     operators.AnnIndex.buildAdaptive(emb, dir)
     assert(operators.AnnIndex.serve(spark, dir, emb, q, 5).count() === 0L)
   }

@@ -70,7 +70,7 @@ class Round5Spec extends SparkSpec {
   test("incremental streaming run over sf0.01 events equals the batch twins") {
     assume(new java.io.File("/root/testdata/sf0.01/events.parquet").exists)
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("r5_stream_events")
+    val dir = SparkSpec.tempDir("r5_stream_events")
     // Tables.events adapts to either on-disk ts schema (ns BIGINT or µs
     // timestamp) and always exposes BIGINT ts_us — quantile/filter on that
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
@@ -79,17 +79,17 @@ class Round5Spec extends SparkSpec {
     val cuts = ev.stat.approxQuantile("ts_us", Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
     val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
     for (i <- 0 until 4) {
-      val scratch = java.nio.file.Files.createTempDirectory(s"r5_quart_$i")
+      val scratch = SparkSpec.tempDir(s"r5_quart_$i")
       ev.filter(col("ts_us") >= bounds(i) && col("ts_us") < bounds(i + 1)).drop("ts_us")
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = new java.io.File(scratch.toString).listFiles()
+        .coalesce(1).write.mode("overwrite").parquet(scratch)
+      val part = new java.io.File(scratch).listFiles()
         .find(f => f.getName.endsWith(".parquet")).get
-      val landed = new java.io.File(dir.toFile, f"batch-$i%02d.parquet")
+      val landed = new java.io.File(dir, f"batch-$i%02d.parquet")
       java.nio.file.Files.move(part.toPath, landed.toPath)
       landed.setLastModified(1000000L + i * 60000L) // strictly increasing mtimes
     }
     val stream = graft.streaming.StreamingJobs
-      .eventsFileStream(spark, dir.toString, maxFilesPerTrigger = 1)
+      .eventsFileStream(spark, dir, maxFilesPerTrigger = 1)
 
     // tumbling 1h windows — complete mode so the final table is the fixpoint
     val q1 = graft.streaming.StreamingJobs.tumbling(stream)
@@ -117,7 +117,7 @@ class Round5Spec extends SparkSpec {
 
     // session windows — same gate for the merging-window aggregation
     val q2 = graft.streaming.StreamingJobs.sessions(
-      graft.streaming.StreamingJobs.eventsFileStream(spark, dir.toString, maxFilesPerTrigger = 1))
+      graft.streaming.StreamingJobs.eventsFileStream(spark, dir, maxFilesPerTrigger = 1))
       .writeStream.format("memory").queryName("r5_stream_sessions")
       .outputMode("complete").start()
     q2.processAllAvailable(); q2.stop()
@@ -209,7 +209,7 @@ class Round5Spec extends SparkSpec {
       tiebreak = "v_id", bucketWidth = 3600L * 1000000L)
     val plain = graft.plans.AsOfJoinNative.join(
       probes, quotes, keys = Seq("user_id" -> "v_user"),
-      leftTime = "p_ts", rightTime = "v_ts", strict = true, tiebreak = Seq("v_id"))
+      leftTime = "p_ts", rightTime = "v_ts", tiebreak = Seq("v_id"))
     val s1 = salted.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val s2 = plain.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(s1.nonEmpty && s1.toSeq === s2.toSeq)

@@ -59,7 +59,7 @@ class Round6Spec extends SparkSpec {
       tiebreak = "v_id", bucketWidth = 3600L * 1000000L)
     val plain = graft.plans.AsOfJoinNative.join(
       probes, quotes, keys = Seq("user_id" -> "v_user"),
-      leftTime = "p_ts", rightTime = "v_ts", strict = true, tiebreak = Seq("v_id"))
+      leftTime = "p_ts", rightTime = "v_ts", tiebreak = Seq("v_id"))
     val s1 = salted.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val s2 = plain.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(s1.nonEmpty && s1.toSeq === s2.toSeq)

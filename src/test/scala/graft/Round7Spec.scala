@@ -50,7 +50,7 @@ class Round7Spec extends SparkSpec {
       tiebreak = "v_id", bucketWidth = 3600L * 1000000L, leftIdCol = Some("p_id"))
     val plain = graft.plans.AsOfJoinNative.join(
       probes.drop("props"), quotes, keys = Seq("user_id" -> "v_user"),
-      leftTime = "p_ts", rightTime = "v_ts", strict = true, tiebreak = Seq("v_id"))
+      leftTime = "p_ts", rightTime = "v_ts", tiebreak = Seq("v_id"))
     val s1 = salted.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val s2 = plain.select("p_id", "v_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(s1.nonEmpty && s1.toSeq === s2.toSeq)
@@ -103,7 +103,7 @@ class Round7Spec extends SparkSpec {
       (1L, 10.0, 5), (2L, 10.0, 5), (3L, 10.0, 7), (4L, 9.0, 5),
       (5L, 12.0, 9), (6L, 12.0, 8), (7L, 8.0, 2), (8L, 15.0, 9)))
       .toDF("p_partkey", "p_retailprice", "p_size")
-    val tmp = java.nio.file.Files.createTempDirectory("skyline").toString
+    val tmp = SparkSpec.tempDir("skyline")
     parts.write.mode("overwrite").parquet(s"$tmp/part.parquet")
     val got = SparkEntry.queries("skyline_pareto")(spark, tmp)
       .collect().map(_.getLong(0)).toSeq
@@ -139,7 +139,7 @@ class Round7Spec extends SparkSpec {
       rep <- 0 to 1
       pk <- Seq(a, b)
     } yield (o + rep, pk)
-    val d = java.nio.file.Files.createTempDirectory("graph7").toString
+    val d = SparkSpec.tempDir("graph7")
     rows.toDF("l_orderkey", "l_partkey").write.parquet(s"$d/lineitem.parquet")
     val tri = SparkEntry.queries("graph_triangles")(spark, d).collect().head
     assert((tri.getLong(0), tri.getLong(1), tri.getLong(2), tri.getLong(3)) ===
@@ -163,7 +163,7 @@ class Round7Spec extends SparkSpec {
       rep <- 0 to 1
       pk <- Seq(a, b)
     } yield (o + rep, pk)
-    val d = java.nio.file.Files.createTempDirectory("graph7b").toString
+    val d = SparkSpec.tempDir("graph7b")
     rows.toDF("l_orderkey", "l_partkey").write.parquet(s"$d/lineitem.parquet")
     val declared = SparkEntry.queries("graph_triangles")(spark, d)
       .collect().head.getLong(3)
@@ -199,7 +199,7 @@ class Round7Spec extends SparkSpec {
     // user 1: signup@0 → view@30 → purchase@100 (1h before = minute 40 →
     // state 'view' from minute 30) → purchase@65 (minute 5 → 'signup')
     // user 2: only a purchase@10 — no state an hour back → dropped
-    val d = java.nio.file.Files.createTempDirectory("pit7").toString
+    val d = SparkSpec.tempDir("pit7")
     Seq(
       (1L, ns(0), 1L, "signup", 1.0, "{}"),
       (2L, ns(30), 1L, "view", 1.0, "{}"),

@@ -66,7 +66,7 @@ class Round8Spec extends SparkSpec {
       val lang = if (i % 3 == 0) null else "en"
       (i.toLong, lang, "w1 w2 w3 w4", 11L)
     }
-    val d = java.nio.file.Files.createTempDirectory("packnull8").toString
+    val d = SparkSpec.tempDir("packnull8")
     docs.toDF("doc_id", "lang", "text", "n_chars")
       .write.parquet(s"$d/documents.parquet")
     // force the two-pass branch — the null-safe offset join is what's under
@@ -99,7 +99,7 @@ class Round8Spec extends SparkSpec {
       val words = (0 until (i * 31 % 40) + 1).map(j => s"w$j").mkString(" ")
       (i.toLong, if (i % 2 == 0) "en" else "de", words, words.length.toLong)
     }
-    val d = java.nio.file.Files.createTempDirectory("pack8").toString
+    val d = SparkSpec.tempDir("pack8")
     docs.toDF("doc_id", "lang", "text", "n_chars")
       .write.parquet(s"$d/documents.parquet")
     val got = rows(ReferenceForms.docPackSequences(spark, d, blocked = true))
@@ -115,7 +115,7 @@ class Round8Spec extends SparkSpec {
     // value, so R's weight crosses half its total at 800 (3 + 8 ≥ 16/2); a
     // blocked form that files NaN's weight before the finite values would
     // cross at 200 instead
-    val d = java.nio.file.Files.createTempDirectory("wmednan8").toString
+    val d = SparkSpec.tempDir("wmednan8")
     Tables.t(spark, TestTables.dir(spark), "lineitem")
       .unionByName(Seq((13L, 1L, 1L, 1, 5.0, Double.NaN, 0.0, 0.0, "R", "O",
         java.sql.Timestamp.valueOf("1995-08-01 00:00:00")))
@@ -212,7 +212,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("join_asof_nearest picks min |dt| and prefers the past on exact ties") {
-    val d = java.nio.file.Files.createTempDirectory("near8").toString
+    val d = SparkSpec.tempDir("near8")
     writeEvents(d, Seq(
       // user 1: views at minutes 0 and 20, purchase at 8 → past view (dt −8)
       // beats future view (dt +12)
@@ -230,7 +230,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("window_pattern_match counts strictly-consecutive view,view,purchase runs") {
-    val d = java.nio.file.Files.createTempDirectory("pat8").toString
+    val d = SparkSpec.tempDir("pat8")
     writeEvents(d, Seq(
       // user 1: view,view,purchase → 1 match starting at minute 0
       (1L, 0L, 1L, "view"), (2L, 1L, 1L, "view"), (3L, 2L, 1L, "purchase"),
@@ -243,7 +243,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("join_snapshot_diff classifies added, removed and changed users") {
-    val d = java.nio.file.Files.createTempDirectory("diff8").toString
+    val d = SparkSpec.tempDir("diff8")
     writeEvents(d, Seq(
       // user 1: even event 2 (view) then odd id%3>0 event 7 (purchase) → changed
       (2L, 0L, 1L, "view"), (7L, 5L, 1L, "purchase"),
@@ -259,7 +259,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("join_asof_tolerance drops matches staler than one hour") {
-    val d = java.nio.file.Files.createTempDirectory("tol8").toString
+    val d = SparkSpec.tempDir("tol8")
     writeEvents(d, Seq(
       // user 1: view 30 min before the purchase → kept (staleness 30 min)
       (1L, 0L, 1L, "view"), (2L, 30L, 1L, "purchase"),
@@ -272,7 +272,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("window_streak finds the longest consecutive-type run with deterministic ties") {
-    val d = java.nio.file.Files.createTempDirectory("streak8").toString
+    val d = SparkSpec.tempDir("streak8")
     writeEvents(d, Seq(
       // user 1: view,view,view then purchase → longest run 3 (view)
       (1L, 0L, 1L, "view"), (2L, 1L, 1L, "view"), (3L, 2L, 1L, "view"),
@@ -289,7 +289,7 @@ class Round8Spec extends SparkSpec {
     import spark.implicits._
     // group A: values 1(w=1), 2(w=1), 3(w=10) → half of 12 is 6, crossed at
     // value 3 — the row median (2) would be wrong
-    val d = java.nio.file.Files.createTempDirectory("wmed8").toString
+    val d = SparkSpec.tempDir("wmed8")
     Seq(("A", 1.0, 1.0), ("A", 2.0, 1.0), ("A", 3.0, 10.0))
       .toDF("l_returnflag", "l_extendedprice", "l_quantity")
       .write.parquet(s"$d/lineitem.parquet")

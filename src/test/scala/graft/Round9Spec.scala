@@ -84,7 +84,7 @@ class Round9Spec extends SparkSpec {
     import spark.implicits._
     // the Round8Spec fixture: half of total weight 12 is crossed at value 3
     // — 3 rows < k, so finish() takes the exact weighted path
-    val d = java.nio.file.Files.createTempDirectory("wmed9").toString
+    val d = SparkSpec.tempDir("wmed9")
     Seq(("A", 1.0, 1.0, 10L, 1L), ("A", 2.0, 1.0, 11L, 1L), ("A", 3.0, 10.0, 12L, 1L))
       .toDF("l_returnflag", "l_extendedprice", "l_quantity", "l_orderkey", "l_linenumber")
       .write.parquet(s"$d/lineitem.parquet")

@@ -117,7 +117,7 @@ class ScaleOpsSpec extends SparkSpec {
       (5L, "an unrelated document with plenty of distinct tokens here"),
       (6L, "the quick brown fox jumps over the lazy dog extra")) // superset shingles → kept
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("clean").toString
+    val tmp = SparkSpec.tempDir("clean")
     docs.write.parquet(s"$tmp/documents.parquet")
     val kept = SparkEntry.queries("pipeline_corpus_clean")(spark, tmp)
       .collect().map(_.getLong(0)).toSeq

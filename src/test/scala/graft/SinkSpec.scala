@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Sink surface (SURVEY.md §2.1): partitioned parquet writes with partition
@@ -14,7 +12,7 @@ class SinkSpec extends SparkSpec {
   private lazy val d = TestTables.dir(spark)
 
   test("partitionBy write + read-back prunes partitions at the scan") {
-    val out = Files.createTempDirectory("psink").toString
+    val out = SparkSpec.tempDir("psink")
     spark.read.parquet(s"$d/documents.parquet")
       .write.partitionBy("lang").mode("overwrite").parquet(s"$out/docs")
 
@@ -48,7 +46,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("repartitionByRange write produces key-disjoint files (min/max skipping layout)") {
-    val out = Files.createTempDirectory("rsink").toString
+    val out = SparkSpec.tempDir("rsink")
     spark.read.parquet(s"$d/orders.parquet")
       .repartitionByRange(4, col("o_orderkey"))
       .write.parquet(s"$out/orders_ranged")

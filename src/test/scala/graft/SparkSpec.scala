@@ -28,7 +28,7 @@ trait SparkSpec extends AnyFunSuite {
       "spark.sql.optimizer.excludedRules" -> SparkSpec.ConvertToLocalRelation)(body)
 
   /** Runs `body` with the given session confs set, then restores them. */
-  def withConf(settings: (String, String)*)(body: => Unit): Unit = {
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
     val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -41,6 +41,14 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   val ConvertToLocalRelation = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+
+  /** A new directory `<prefix><n>` under [[graft.util.ScratchDirs.root]],
+    * removed with the root at JVM exit: every spec's temp directory comes
+    * from here, so a test run leaves nothing in `java.io.tmpdir`.
+    */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.util.ScratchDirs.root), prefix).toString
 
   lazy val session: SparkSession = {
     val s = GraftSession.local(2)

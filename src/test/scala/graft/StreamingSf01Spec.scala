@@ -28,7 +28,7 @@ class StreamingSf01Spec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.1"
 
   private lazy val landing: String = {
-    val land = java.nio.file.Files.createTempDirectory("land-sf01").toString
+    val land = SparkSpec.tempDir("land-sf01")
     val src = spark.read.parquet(s"$sfDir/events.parquet")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts", "event_id")
     val sliced = src.withColumn("slice", ntile(8).over(w)).localCheckpoint()
@@ -278,7 +278,7 @@ class StreamingSf01Spec extends SparkSpec {
     assume(new java.io.File(s"$sfDir/events.parquet").exists)
     // arrival-ordered landing: one file per modeled micro-batch b, written
     // in b order (the suite's landing layout discipline)
-    val land = java.nio.file.Files.createTempDirectory("land-arrival").toString
+    val land = SparkSpec.tempDir("land-arrival")
     val src = spark.read.parquet(s"$sfDir/events.parquet")
     val withB = src.withColumn("b",
       expr("(event_id + if(event_id % 100 = 7, 1500, 0)) div 1000")).localCheckpoint()

@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
   test("eventsFileStream on an empty landing directory falls back to the pinned schema") {
     // ADVICE r10: the batch footer peek throws on a not-yet-populated landing
     // zone; the fallback DDL must let the stream start (and produce nothing)
-    val dir = java.nio.file.Files.createTempDirectory("emptyland").toString
+    val dir = SparkSpec.tempDir("emptyland")
     val stream = StreamingJobs.eventsFileStream(spark, dir)
     assert(stream.isStreaming)
     assert(stream.schema("tsx").dataType === org.apache.spark.sql.types.TimestampType)
@@ -224,7 +224,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file sink + checkpoint is exactly-once across restarts") {
     val dir = TestTables.dir(spark)
-    val out = java.nio.file.Files.createTempDirectory("ssink").toString
+    val out = SparkSpec.tempDir("ssink")
     def runOnce(): Unit = {
       val q = StreamingJobs.eventsFileStream(spark, s"$dir/events.parquet")
         .writeStream.format("parquet")
@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch sink writes per-batch partitions and re-running a batch is idempotent") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("febsink").toString
+    val root = SparkSpec.tempDir("febsink")
     val out = s"$root/data" // checkpoint must live OUTSIDE the partitioned table root
     val in = MemoryStream[StreamEv]
     val q = StreamingJobs.foreachBatchParquet(in.toDF(), out)

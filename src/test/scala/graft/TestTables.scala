@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 
 /** Tiny literal tables written once to a temp dir shaped like a driver
@@ -24,7 +22,7 @@ object TestTables {
   /** Fixture with events.ts as `timestamp[us]` — the current driver schema. */
   def dir(spark: SparkSession): String = synchronized {
     cachedUs.getOrElse {
-      val d = Files.createTempDirectory("graft-test-sf").toString
+      val d = SparkSpec.tempDir("graft-test-sf")
       write(spark, d, eventsTsNs = false)
       cachedUs = Some(d)
       d
@@ -42,7 +40,7 @@ object TestTables {
     */
   def dirLegacyNs(spark: SparkSession): String = synchronized {
     cachedNs.getOrElse {
-      val d = Files.createTempDirectory("graft-test-sf-ns").toString
+      val d = SparkSpec.tempDir("graft-test-sf-ns")
       write(spark, d, eventsTsNs = true)
       cachedNs = Some(d)
       d
@@ -59,7 +57,7 @@ object TestTables {
   def dirEmpty(spark: SparkSession): String = synchronized {
     cachedEmpty.getOrElse {
       val full = dir(spark)
-      val d = Files.createTempDirectory("graft-test-sf-empty").toString
+      val d = SparkSpec.tempDir("graft-test-sf-empty")
       for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings")) {
         val df = spark.read.parquet(s"$full/$t.parquet")
@@ -85,7 +83,7 @@ object TestTables {
     cachedNulls.getOrElse {
       import org.apache.spark.sql.functions._
       val full = dir(spark)
-      val d = Files.createTempDirectory("graft-test-sf-nulls").toString
+      val d = SparkSpec.tempDir("graft-test-sf-nulls")
       val keep = Set("r_regionkey", "n_nationkey", "c_custkey", "s_suppkey",
         "p_partkey", "o_orderkey", "l_orderkey", "l_linenumber", "event_id",
         "doc_id", "vec_id", "ts")
